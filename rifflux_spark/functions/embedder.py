@@ -190,7 +190,7 @@ def embed_series(texts: pd.Series, dim: int = 384) -> pd.Series:
     the batch kernel only changes how token parameters are looked up.
     """
     mat = _embed_matrix(list(texts), dim)
-    return pd.Series([mat[i].tolist() for i in range(mat.shape[0])])
+    return pd.Series([mat[i].tolist() for i in range(mat.shape[0])], index=texts.index)
 
 
 def embed_series_packed(texts: pd.Series, dim: int = 384) -> pd.Series:
@@ -199,7 +199,7 @@ def embed_series_packed(texts: pd.Series, dim: int = 384) -> pd.Series:
     sqlite_store.py:81-94 ``np.ndarray.tobytes()`` BLOBs) and ~3× cheaper
     through Arrow/parquet than a ``list<float>`` of 384 Python floats."""
     mat = _embed_matrix(list(texts), dim)
-    return pd.Series([mat[i].tobytes() for i in range(mat.shape[0])])
+    return pd.Series([mat[i].tobytes() for i in range(mat.shape[0])], index=texts.index)
 
 
 def unpack_vectors(packed: pd.Series, dim: int | None = None) -> np.ndarray:

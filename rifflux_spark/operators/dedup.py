@@ -21,6 +21,7 @@ arrays) — no Python on the hot path.
 from __future__ import annotations
 
 import hashlib
+import math
 import re
 
 import numpy as np
@@ -597,20 +598,37 @@ def connected_components(
         v = pdf["v"].to_numpy(np.int64)
         nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
         ui, vi = inv[: len(u)], inv[len(u) :]
-        # Shiloach–Vishkin-style min-label propagation with pointer
-        # doubling: monotone decreasing, fixpoint = component minimum
-        # (nodes is sorted, so min index == min id), O(log n) rounds,
-        # every round fully vectorized.
+        # Root hooking with pointer jumping: every round each root hooks
+        # under the smallest root it shares an edge with, then labels
+        # jump to their roots until every tree is a star. Roots only
+        # hook to smaller ids, so the fixpoint root is the component
+        # minimum (nodes is sorted, so min index == min id). Hooking
+        # roots, not nodes, keeps rounds logarithmic on chains whose ids
+        # are shuffled along them (1e6 nodes: 14 rounds), where plain
+        # min-label propagation needs ~n/2. Bounded like the star
+        # rounds: not converged fails loud.
         lbl = np.arange(len(nodes), dtype=np.int64)
-        while True:
-            prev = lbl.copy()
-            em = np.minimum(lbl[ui], lbl[vi])
-            np.minimum.at(lbl, ui, em)
-            np.minimum.at(lbl, vi, em)
-            lbl = np.minimum(lbl, lbl[lbl])
-            lbl = np.minimum(lbl, lbl[lbl])
-            if np.array_equal(lbl, prev):
+        max_rounds = 2 * math.ceil(math.log2(max(len(nodes), 2))) + 4
+
+        def _to_stars(lbl: np.ndarray) -> np.ndarray:
+            for _ in range(max_rounds):
+                nxt = lbl[lbl]
+                if np.array_equal(nxt, lbl):
+                    return lbl
+                lbl = nxt
+            raise RuntimeError(f"label pointer jumping did not converge in {max_rounds} steps")
+
+        for _ in range(max_rounds):
+            ru, rv = lbl[ui], lbl[vi]
+            cross = ru != rv
+            if not cross.any():
                 break
+            np.minimum.at(lbl, np.maximum(ru[cross], rv[cross]), np.minimum(ru[cross], rv[cross]))
+            lbl = _to_stars(lbl)
+        else:
+            raise RuntimeError(
+                f"driver-side connected_components did not converge in {max_rounds} rounds"
+            )
         out = pd.DataFrame({"id": nodes, "component": nodes[lbl]})
         return pairs.sparkSession.createDataFrame(out, schema="id long, component long")
 

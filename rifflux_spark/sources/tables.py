@@ -45,12 +45,14 @@ from rifflux_spark.sources.manifest import Manifest
 POSTINGS_ROW_GROUP_BYTES = 8 << 20
 
 # The chunks table is rehydration-read by doc_ord (top-k join-back on the
-# coordinator path, get_chunk/get_file): with Spark's default 128 MB row
-# groups a single-row-group file makes fetching top_k ordinals read the
-# whole content column — CORPUS-proportional. Bounding row groups keeps a
-# top-k rehydrate at ≤ top_k × this many (uncompressed) bytes of the
-# pruned columns at any corpus size; the doc_ord-sorted layout keeps the
-# min/max stats tight so exactly those groups are read.
+# coordinator path, get_chunk/get_file). Warm coordinator rehydrates are
+# served from local_exec's decoded row-group cache and read no parquet;
+# this bound sizes only a COLD read: with Spark's default 128 MB row
+# groups, the first fetch of top_k ordinals would decode the whole content
+# column (CORPUS-proportional), while bounded groups keep it at ≤ top_k ×
+# this many (uncompressed) bytes (the bound also counts the `tokens`
+# column, which rehydration never reads). The doc_ord-sorted layout keeps
+# the min/max stats tight so exactly the covering groups are read.
 CHUNKS_ROW_GROUP_BYTES = 4 << 20
 
 # Generation dirs staged but not yet published, PROCESS-wide (absolute

@@ -93,6 +93,21 @@ def test_driver_and_star_paths_agree(spark) -> None:
         assert _labels(spark, edges) == _labels(spark, edges, driver_max_edges=0)
 
 
+def test_driver_path_closes_shuffled_chain_within_round_cap(spark) -> None:
+    """A long chain whose node ids are shuffled along it (dedup pairs carry
+    arbitrary doc ids) has diameter n: the driver closure must still
+    converge inside its 2*ceil(log2 n)+4 round cap instead of raising."""
+    import random
+
+    n = 20_000
+    ids = list(range(n))
+    random.Random(5).shuffle(ids)
+    edges = list(zip(ids[:-1], ids[1:]))
+    got = _labels(spark, edges)
+    assert len(got) == n
+    assert set(got.values()) == {0}
+
+
 def test_dedup_clusters_flags_one_canonical_per_cluster(spark) -> None:
     base = "the quick brown fox jumps over the lazy dog again and again " * 5
     rows = [

@@ -9,6 +9,7 @@ import numpy as np
 
 from rifflux_spark.functions.embedder import (
     embed_series,
+    embed_series_packed,
     hash_embed,
     normalize_dim,
     resolve_embedder,
@@ -77,3 +78,16 @@ def test_embed_series_matches_scalar() -> None:
     assert out[0] == hash_embed("alpha beta", 32).tolist()
     assert out[1] == [0.0] * 32
     assert out[2] == [0.0] * 32
+
+
+def test_embed_series_keeps_input_index() -> None:
+    """Direct callers align results back onto filtered frames by index."""
+    import pandas as pd
+
+    texts = pd.Series(["alpha beta", "gamma", "delta"], index=[7, 3, 42])
+    out = embed_series(texts, dim=16)
+    packed = embed_series_packed(texts, dim=16)
+    assert list(out.index) == [7, 3, 42]
+    assert list(packed.index) == [7, 3, 42]
+    assert out[3] == hash_embed("gamma", 16).tolist()
+    assert packed[42] == hash_embed("delta", 16).astype(np.float32).tobytes()
