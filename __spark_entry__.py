@@ -1170,7 +1170,8 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Phrase BM25 top-k (plans/adhoc.phrase_logical — the index-free
-    twin of operators/phrase.py, whose indexed path is verified
+    twin of the indexed phrase mode, a one-phrase MATCH through
+    operators/ftsquery.py, whose indexed path is verified
     rank-identical to SQLite FTS5 phrase MATCH in
     tests/test_phrase_rank_identity.py): the query is ONE phrase whose
     tokens must appear contiguously; tf counts overlapping starts; df

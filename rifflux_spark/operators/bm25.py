@@ -26,7 +26,6 @@ per term. Pruning on/off is correctness-invariant (tested).
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -39,6 +38,7 @@ from rifflux_spark.config import EngineConfig
 from rifflux_spark.functions.tokenizer import compile_query
 from rifflux_spark.operators import wand
 from rifflux_spark.operators.codec import bm25_wtf, decode_posting_arrow
+from rifflux_spark.operators.ftsquery import unit_idf
 from rifflux_spark.sources.tables import IndexStore
 
 _SCORE_ROW = T.StructType(
@@ -60,12 +60,7 @@ def idf_for_terms(store: IndexStore, terms: list[str], n_docs: int) -> dict[str,
         .select("term", "df_docs")
         .collect()
     )
-    out: dict[str, float] = {}
-    for row in stats:
-        df_t = int(row["df_docs"])
-        idf = math.log((n_docs - df_t + 0.5) / (df_t + 0.5))
-        out[row["term"]] = idf if idf > 0 else 1e-6
-    return out
+    return {row["term"]: unit_idf(n_docs, int(row["df_docs"])) for row in stats}
 
 
 def _score_blocks(
@@ -366,12 +361,3 @@ def _prune_blocks(
         ),
         None,
     )
-
-
-def rehydrate(topk: DataFrame, store: IndexStore) -> DataFrame:
-    """Join-back of the tiny top-k against chunks (SURVEY.md §2 Q4).
-
-    The doc_ord set is ≤ top_k, so Catalyst broadcast-joins it; the chunks
-    scan prunes row groups on the sorted doc_ord column.
-    """
-    return topk.join(store.chunks(), on="doc_ord", how="inner")

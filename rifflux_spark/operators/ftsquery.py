@@ -19,11 +19,30 @@ rank+score-identically in tests/test_fts_rank_identity.py):
   ``df`` its row count. Same ``k1/b/avgdl/dl``, ln-idf with the 1e-6
   clamp, negated score, rowid tie-break as the term path.
 
+Phrase units (and column-filtered or anchored ones, since postings
+carry combined-column tf) use candidate recheck: candidates are the
+docs holding ALL of the unit's full tokens (posting AND-intersection,
+bounded by the rarest token's df), and only those are rehydrated and
+counted per column with the byte-parity tokenizer — a phrase never
+matches across the column boundary, and overlapping instances each
+count. Phrase mode (``SearchService.phrase``, operators/phrase.py) is
+a one-phrase MATCH through this module.
+
+Why recheck instead of positional postings: positions would grow the
+posting payload ~4x for every query (the build's single exchange is
+bandwidth-bound, SURVEY §4) to speed up only the phrase minority, and
+the recheck stage is bounded by min-df. The documented degradation is
+stopword-only phrases, where candidates approach corpus size — the same
+regime where the term path already pays its stopword worst case.
+Positions stay opt-in (``EngineConfig.store_positions``,
+operators/positions.py) for indexes that want zero-rehydration phrases.
+
 Scale shape (distributed): each unit yields a df-bounded
 ``(doc_ord, unit_id, tf, dl)`` frame — term/prefix units straight from
 the pruned posting decode (prefix expansion is a vocabulary-sized
-driver read, never a corpus pass), phrase units through the
-candidate-recheck pipeline of operators/phrase.py. The union is ONE
+driver read, never a corpus pass), recheck units through a candidate
+intersection, a broadcast join of the candidates into the chunk scan
+and an Arrow-batched verify kernel. The union is ONE
 groupBy(doc_ord) exchange producing per-unit tf columns + presence
 flags; unit dfs ride in as a broadcast ≤n_units-row aggregate;
 membership is a codegen boolean over the flags; top-k is
@@ -66,60 +85,57 @@ from rifflux_spark.sources.tables import IndexStore
 # prefix indexes which this engine does not persist (documented seam)
 MAX_PREFIX_EXPANSION = 4096
 
+# candidate frames at or under this row bound get an explicit broadcast
+# hint into the chunk scan; above it the join is left to the planner
+# (AQE still broadcasts at runtime when the actual size allows) — a
+# forced broadcast of a stopword phrase's corpus-sized candidate set
+# would hit Spark's broadcast hard limit instead of degrading
+BROADCAST_CAND_MAX = 4_000_000
+
 
 def count_unit(tokens: list[str], unit: Unit) -> int:
     """Occurrences of ``unit`` in a token list (overlapping starts
     count; prefix applies to the unit's last token; an anchored unit
     only matches at token 0)."""
-    p = unit.tokens
-    n, m = len(tokens), len(p)
-    if m == 0 or n < m:
-        return 0
-    count = 0
-    last = m - 1
-    for i in ([0] if unit.anchored else range(n - m + 1)):
-        ok = True
-        for j in range(last):
-            if tokens[i + j] != p[j]:
-                ok = False
-                break
-        if ok:
-            tail = tokens[i + last]
-            if (tail.startswith(p[last]) if unit.prefix else tail == p[last]):
-                count += 1
-    return count
+    return len(unit_instances(tokens, unit))
 
 
-_COL_FIELDS = {"content": "content", "heading_path": "heading_path"}
-
-
-def count_unit_cols(col_tokens: dict[str, list[str]], unit: Unit) -> int:
-    """Unit occurrences summed over its allowed columns (FTS5 column
-    filters scope tf to the filtered columns — probed)."""
-    cols = unit.cols or COLUMNS
-    return sum(count_unit(col_tokens[c], unit) for c in cols)
+def count_unit_cols(texts: dict, unit: Unit) -> int:
+    """Unit occurrences summed over its allowed columns of a row's
+    column ``texts`` (FTS5 column filters scope tf to the filtered
+    columns — probed); only the allowed columns are tokenized."""
+    return sum(count_unit(tokenize(texts[c]), unit) for c in unit.cols or COLUMNS)
 
 
 def unit_instances(tokens: list[str], unit: Unit) -> list[tuple[int, int]]:
     """(start, end) token positions of every instance of ``unit`` in a
-    single column's token list (end inclusive; prefix on last token)."""
+    single column's token list (end inclusive; prefix on last token;
+    overlapping instances each count, as in FTS5's position scan)."""
     p = unit.tokens
     n, m = len(tokens), len(p)
-    out: list[tuple[int, int]] = []
     if m == 0 or n < m:
-        return out
+        return []
     last = m - 1
-    for i in ([0] if unit.anchored else range(n - m + 1)):
-        ok = True
-        for j in range(last):
-            if tokens[i + j] != p[j]:
-                ok = False
-                break
-        if ok:
-            tail = tokens[i + last]
-            if tail.startswith(p[last]) if unit.prefix else tail == p[last]:
-                out.append((i, i + last))
-    return out
+    stop = 1 if unit.anchored else n - last
+    if m == 1 and unit.prefix:
+        # the lone token is the prefix tail: every start is a candidate
+        return [(i, i) for i in range(stop) if tokens[i].startswith(p[0])]
+    # only starts holding the first token are tested (found by C-level
+    # list.index scans); the middle tokens compare as one slice
+    first, mid, tail = p[0], list(p[1:last]), p[last]
+    out: list[tuple[int, int]] = []
+    i = 0
+    while True:
+        try:
+            i = tokens.index(first, i, stop)
+        except ValueError:
+            return out
+        end = i + last
+        if tokens[i + 1 : end] == mid and (
+            tokens[end].startswith(tail) if unit.prefix else tokens[end] == tail
+        ):
+            out.append((i, end))
+        i += 1
 
 
 def near_participating(
@@ -173,6 +189,9 @@ def near_trim(
 
 
 def unit_idf(n_docs: int, df_u: int) -> float:
+    """FTS5 ln-idf of a unit (term, prefix or phrase) over its row
+    count, clamped to 1e-6 when not positive — the one idf formula of
+    every scoring path."""
     idf = math.log((n_docs - df_u + 0.5) / (df_u + 0.5))
     return idf if idf > 0 else 1e-6
 
@@ -307,23 +326,27 @@ class _PositionalCtx:
         return len(self._slots[i])
 
 
+_EMPTY = np.empty(0, dtype=np.int64)
+
+
 def _local_postings(store: IndexStore, terms: list[str]):
     """Decode every posting for ``terms`` coordinator-side →
-    (term→{doc: tf}, doc→dl)."""
+    (term → (docs, tfs), (docs, dls)): each term's sorted unique doc
+    ordinals with their tf, and the sorted doc ordinals of all postings
+    with their dl (looked up by ``searchsorted``)."""
     from rifflux_spark.functions.xxhash64 import term_bucket
     from rifflux_spark.operators.local_exec import _bucket_files, _read_filtered
 
-    tf_by_term: dict[str, dict[int, int]] = {t: {} for t in terms}
-    dl_map: dict[int, int] = {}
+    postings: dict[str, tuple[np.ndarray, np.ndarray]] = {}
     if not terms:
-        return tf_by_term, dl_map
+        return postings, (_EMPTY, _EMPTY)
     buckets = {term_bucket(t, store.n_term_buckets) for t in terms}
     files = _bucket_files(store, "postings", buckets)
     t = _read_filtered(
         files, ["term", "n_docs", "first_doc", "gaps", "tfs", "dls"], terms
     )
     if t is None:
-        return tf_by_term, dl_map
+        return postings, (_EMPTY, _EMPTY)
     docs, tfs, dls, ns = decode_posting_arrow(t)
     # vectorized per-term grouping (no per-posting Python loop): posting
     # rows for one term are contiguous runs in block order — group block
@@ -334,7 +357,6 @@ def _local_postings(store: IndexStore, terms: list[str]):
     by_term: dict[str, list[tuple[int, int]]] = {}
     for i, term in enumerate(block_terms):
         by_term.setdefault(term, []).append((int(starts[i]), int(starts[i + 1])))
-    dl_map.update(zip(docs.tolist(), dls.tolist()))
     for term, spans in by_term.items():
         if len(spans) == 1:
             s, e = spans[0]
@@ -342,13 +364,16 @@ def _local_postings(store: IndexStore, terms: list[str]):
         else:
             d_arr = np.concatenate([docs[s:e] for s, e in spans])
             t_arr = np.concatenate([tfs[s:e] for s, e in spans])
-        uniq, inv = np.unique(d_arr, return_inverse=True)
-        if uniq.size == d_arr.size:
-            tf_by_term[term] = dict(zip(d_arr.tolist(), t_arr.tolist()))
-        else:
-            sums = np.bincount(inv, weights=t_arr).astype(np.int64)
-            tf_by_term[term] = dict(zip(uniq.tolist(), sums.tolist()))
-    return tf_by_term, dl_map
+        postings[term] = _fold_tf(d_arr, t_arr)
+    dl_docs, first = np.unique(docs, return_index=True)
+    return postings, (dl_docs, dls[first])
+
+
+def _fold_tf(docs: np.ndarray, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Posting entries → sorted unique docs with their summed tf."""
+    uniq, inv = np.unique(docs, return_inverse=True)
+    sums = np.bincount(inv, weights=tfs, minlength=uniq.size).astype(np.int64)
+    return uniq, sums
 
 
 def fts_topk_local(
@@ -372,17 +397,21 @@ def fts_topk_local(
     n_docs, avgdl = int(cstats["n_docs"]), float(cstats["avgdl"])
 
     per_unit_terms, all_terms = _units_needing(units, store)
-    tf_by_term, dl_map = _local_postings(store, all_terms)
+    postings, (dl_docs, dl_vals) = _local_postings(store, all_terms)
     tombs = set(int(x) for x in local_tombstones(store))
     groups = leaf_groups(ast)
     posctx = _PositionalCtx(store, units, groups)
 
     rehydrated: dict[int, dict] = {}
 
-    def rehydrate(cand: set) -> None:
-        missing = sorted(cand - rehydrated.keys())
+    def rehydrate(cand) -> None:
+        missing = [d for d in cand if d not in rehydrated]
         if missing:
-            rehydrated.update(rehydrate_local(store, missing))
+            rehydrated.update(
+                rehydrate_local(
+                    store, missing, columns=["doc_ord", "content", "heading_path"]
+                )
+            )
 
     def col_tokens(c: dict) -> dict[str, list[str]]:
         return {
@@ -390,46 +419,43 @@ def fts_topk_local(
             "heading_path": tokenize(c["heading_path"]),
         }
 
+    def docs_of(term: str) -> np.ndarray:
+        return postings[term][0] if term in postings else _EMPTY
+
     def standalone_map(i: int, u: Unit, terms: list[str]) -> dict[int, int]:
+        from rifflux_spark.operators.prefix import tail_match_terms
+
         # postings carry COMBINED-column tf, so only unfiltered
         # single-token units score straight from them; anything with a
         # column filter, multiple tokens, or a prefix TAIL inside a
         # phrase goes through the candidate-recheck branch
-        if (
-            len(u.tokens) == 1
-            and not u.prefix
-            and u.cols is None
-            and not u.anchored
-        ):
-            return dict(tf_by_term.get(u.tokens[0], {}))
-        if (
-            len(u.tokens) == 1
-            and u.prefix
-            and u.cols is None
-            and not u.anchored
-        ):
-            from rifflux_spark.operators.prefix import tail_match_terms
-
-            agg: dict[int, int] = {}
-            for t in tail_match_terms(terms, u.tokens[0]):
-                for d, tf in tf_by_term.get(t, {}).items():
-                    agg[d] = agg.get(d, 0) + tf
-            return agg
+        if len(u.tokens) == 1 and u.cols is None and not u.anchored:
+            hit = [
+                postings[t]
+                for t in (tail_match_terms(terms, u.tokens[0]) if u.prefix else u.tokens)
+                if t in postings
+            ]
+            if not hit:
+                return {}
+            d, tf = hit[0] if len(hit) == 1 else _fold_tf(
+                np.concatenate([h[0] for h in hit]),
+                np.concatenate([h[1] for h in hit]),
+            )
+            return dict(zip(d.tolist(), tf.tolist()))
         # AND-intersect candidates from the combined postings (a
         # superset of any column-scoped match), then recheck on the
         # rehydrated per-column text
         full_tokens = u.tokens[:-1] if u.prefix else u.tokens
-        full = [set(tf_by_term.get(t, {})) for t in sorted(set(full_tokens))]
+        full = [docs_of(t) for t in sorted(set(full_tokens))]
         if u.prefix:
-            from rifflux_spark.operators.prefix import tail_match_terms
-
-            tail_docs = set()
-            for t in tail_match_terms(terms, u.tokens[-1]):
-                tail_docs.update(tf_by_term.get(t, {}))
-            full.append(tail_docs)
-        if not full or any(not s for s in full):
+            tail = [docs_of(t) for t in tail_match_terms(terms, u.tokens[-1])]
+            full.append(np.unique(np.concatenate(tail)) if tail else _EMPTY)
+        if any(a.size == 0 for a in full):
             return {}
-        cand = set.intersection(*full)
+        cand_arr = full[0]
+        for a in full[1:]:
+            cand_arr = np.intersect1d(cand_arr, a, assume_unique=True)
+        cand = cand_arr.tolist()
         counts: dict[int, int] = {}
         if posctx.usable(i):
             # positional recheck: instance starts from poslist
@@ -446,7 +472,7 @@ def fts_topk_local(
             c = rehydrated.get(d)
             if c is None:
                 continue
-            tf = count_unit_cols(col_tokens(c), u)
+            tf = count_unit_cols(c, u)
             if tf > 0:
                 counts[d] = tf
         return counts
@@ -495,7 +521,7 @@ def fts_topk_local(
                     for j, cnt in enumerate(counts):
                         trimmed[j][d] = cnt
         elif cand:
-            rehydrate(cand)
+            rehydrate(sorted(cand))
             allowed = members[0].cols or COLUMNS
             for d in cand:
                 c = rehydrated.get(d)
@@ -526,7 +552,8 @@ def fts_topk_local(
     idfs = [unit_idf(n_docs, len(m)) for m in standalone]
     k1, b = config.bm25_k1, config.bm25_b
     scores = np.zeros(len(docs), dtype=np.float64)
-    dls = np.array([dl_map[d] for d in docs], dtype=np.float64)
+    docs_arr = np.array(docs, dtype=np.int64)
+    dls = dl_vals[np.searchsorted(dl_docs, docs_arr)].astype(np.float64)
     for i, (idf, m) in enumerate(zip(idfs, unit_tf)):
         # FTS5 contribution rule: only where the unit's ancestor chain
         # matches (actives[i] ⊆ matched by construction)
@@ -538,7 +565,6 @@ def fts_topk_local(
             [m[docs[j]] for j in idxs], dtype=np.float64
         )
         scores[idxs] += idf * bm25_wtf(tf, dls[idxs], avgdl, k1, b)
-    docs_arr = np.array(docs, dtype=np.int64)
     order = np.lexsort((docs_arr, -scores))[:top_k]
     return [(int(docs_arr[i]), float(-scores[i])) for i in order]
 
@@ -575,6 +601,13 @@ class _DocSet:
 
 
 # ---------------------------------------------------------- distributed path
+
+
+def _cand_join(chunks, cand, bound: int | None):
+    if bound is not None and bound <= BROADCAST_CAND_MAX:
+        cand = F.broadcast(cand)
+    return chunks.join(cand, on="doc_ord", how="inner")
+
 
 _UNIT_ROW = T.StructType(
     [
@@ -710,7 +743,6 @@ def _near_group_frame(
         .filter(F.col("n_grps") == n_groups)
         .select("doc_ord", "dl")
     )
-    from rifflux_spark.operators.phrase import _cand_join
     from rifflux_spark.operators.local_exec import local_df
 
     group_fulls = sorted(
@@ -845,7 +877,6 @@ def _phrase_unit_frame(
             .filter(F.col("n_terms") == len(uniq))
             .select("doc_ord", "dl")
         )
-    from rifflux_spark.operators.phrase import _cand_join
     from rifflux_spark.operators.local_exec import local_df
 
     full_terms = sorted(set(unit.tokens[:-1] if unit.prefix else unit.tokens))
@@ -860,13 +891,7 @@ def _phrase_unit_frame(
             if pdf.empty:
                 continue
             tfs = [
-                count_unit_cols(
-                    {
-                        "content": tokenize(content),
-                        "heading_path": tokenize(heading),
-                    },
-                    u,
-                )
+                count_unit_cols({"content": content, "heading_path": heading}, u)
                 for content, heading in zip(pdf["content"], pdf["heading_path"])
             ]
             out = pd.DataFrame(

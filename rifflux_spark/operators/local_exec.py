@@ -24,7 +24,6 @@ routes on the embeddings table's byte size.
 
 from __future__ import annotations
 
-import math
 import os
 import threading
 from collections import OrderedDict
@@ -44,6 +43,7 @@ from rifflux_spark.operators.codec import (  # noqa: F401 (_cat_binary re-export
     bm25_wtf,
     decode_posting_arrow,
 )
+from rifflux_spark.operators.ftsquery import unit_idf
 from rifflux_spark.sources.tables import IndexStore
 
 
@@ -176,11 +176,7 @@ def local_df(store: IndexStore, terms: list[str]) -> dict[str, int]:
 
 def local_idf(store: IndexStore, terms: list[str], n_docs: int) -> dict[str, float]:
     """FTS5 ln-idf from the term_stats table, read coordinator-side."""
-    out: dict[str, float] = {}
-    for term, df_t in local_df(store, terms).items():
-        idf = math.log((n_docs - df_t + 0.5) / (df_t + 0.5))
-        out[term] = idf if idf > 0 else 1e-6
-    return out
+    return {term: unit_idf(n_docs, df_t) for term, df_t in local_df(store, terms).items()}
 
 
 # dead-ord sets re-read on EVERY query would pay parquet footer parses

@@ -1,263 +1,26 @@
-"""Phrase search: exact token-adjacency queries with FTS5-parity BM25.
+"""Phrase search: the whole query as ONE FTS5 phrase.
 
-The reference compiles every query to an OR of single terms
-(sqlite_store.py:239-243), but the engine underneath it — SQLite FTS5 —
-is a fulltext index whose MATCH language scores quoted phrases as
-units. This module adds that capability over the Spark index WITHOUT
-storing positions, using the classic candidate-recheck design:
-
-1. **Candidates** — docs containing ALL of the phrase's unique tokens
-   (posting-list AND-intersection). The candidate set is bounded by the
-   rarest token's document frequency, so the expensive stage below is
-   df-proportional, never corpus-proportional.
-2. **Verify** — rehydrate only the candidates and count exact phrase
-   occurrences per indexed column with the byte-parity FTS5 tokenizer
-   (a phrase never matches across the content/heading_path column
-   boundary, matching FTS5 column semantics). Occurrences may overlap,
-   as in FTS5 position scans.
-3. **Score** — FTS5 bm25 with the PHRASE as the scoring unit:
-   ``tf`` = phrase instance count across both columns (unit weights),
-   ``df`` = number of rows containing the phrase, same ``k1/b/avgdl/dl``
-   and the same negated-score + rowid tie-break conventions as the term
-   path (rank-identical to SQLite FTS5 ``MATCH '"..."'`` —
-   tests/test_phrase_rank_identity.py).
-
-Why recheck instead of positional postings: positions would grow the
-posting payload ~4x for every query (the build's single exchange is
-bandwidth-bound, SURVEY §4) to speed up only the phrase minority, and
-the recheck stage is bounded by min-df. The documented degradation is
-stopword-only phrases, where candidates approach corpus size — the same
-regime where the term path already pays its stopword worst case.
-
-Scale shape (distributed path): pruned posting scan → vectorized block
-decode → ONE groupBy(doc_ord) exchange for the AND-intersection →
-broadcast-joined chunk rehydration of candidates only → Arrow-batched
-verify kernel → TakeOrderedAndProject. The phrase df needed for exact
-score values rides in as a broadcast 1-row aggregate; since a single
-phrase's idf is a constant factor, ranking is df-independent and the
-duplicated verify branch under that aggregate only affects score
-labels, never membership (Spark reuses the intersection exchange for
-both branches).
+SQLite FTS5 answers a phrase query as ``MATCH '"t1 t2 ..."'``; so does
+this engine. :func:`phrase_match` compiles a query to that quoted MATCH
+expression and the FTS5 MATCH evaluator (operators/ftsquery.py) runs
+it on either path — candidate recheck or positional, FTS5-parity BM25
+with the phrase as the scoring unit (tf = occurrence count incl.
+overlaps, df = phrase row count).
 """
 
 from __future__ import annotations
 
-import math
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
 from rifflux_spark.config import EngineConfig
-from rifflux_spark.functions.tokenizer import compile_query, tokenize
-from rifflux_spark.operators.codec import bm25_wtf, decode_posting_arrow
+from rifflux_spark.functions.tokenizer import compile_query
+from rifflux_spark.operators.ftsquery import fts_topk_local
 from rifflux_spark.sources.tables import IndexStore
 
-# candidate frames at or under this row bound get an explicit broadcast
-# hint into the chunk scan; above it the join is left to the planner
-# (AQE still broadcasts at runtime when the actual size allows) — a
-# forced broadcast of a stopword phrase's corpus-sized candidate set
-# would hit Spark's broadcast hard limit instead of degrading
-BROADCAST_CAND_MAX = 4_000_000
 
-
-def _cand_join(chunks, cand, bound: int | None):
-    if bound is not None and bound <= BROADCAST_CAND_MAX:
-        cand = F.broadcast(cand)
-    return chunks.join(cand, on="doc_ord", how="inner")
-
-_CAND_ROW = T.StructType(
-    [
-        T.StructField("doc_ord", T.LongType(), False),
-        T.StructField("term", T.StringType(), False),
-        T.StructField("dl", T.LongType(), False),
-    ]
-)
-
-_VERIFY_ROW = T.StructType(
-    [
-        T.StructField("doc_ord", T.LongType(), False),
-        T.StructField("tfp", T.LongType(), False),
-        T.StructField("dl", T.LongType(), False),
-    ]
-)
-
-
-def count_phrase(tokens: list[str], phrase: list[str]) -> int:
-    """Occurrences of ``phrase`` as a contiguous token run (overlapping
-    starts each count, matching FTS5's position scan)."""
-    n, m = len(tokens), len(phrase)
-    if m == 0 or n < m:
-        return 0
-    if m == 1:
-        return tokens.count(phrase[0])
-    first = phrase[0]
-    count = 0
-    for i in range(n - m + 1):
-        if tokens[i] == first and tokens[i : i + m] == phrase:
-            count += 1
-    return count
-
-
-def phrase_idf(n_docs: int, df_p: int) -> float:
-    """FTS5 ln-idf over the phrase's row count, same 1e-6 clamp as the
-    term path (operators/bm25.idf_for_terms)."""
-    idf = math.log((n_docs - df_p + 0.5) / (df_p + 0.5))
-    return idf if idf > 0 else 1e-6
-
-
-def _decode_candidates(blocks: DataFrame) -> DataFrame:
-    """Posting blocks → (doc_ord, term, dl) rows via the shared
-    vectorized block decoder (tf is not needed until verification).
-    Arrow-native: payloads flow from the batch's binary buffers."""
-
-    def decode(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            docs, _tf, dl, ns = decode_posting_arrow(rb)
-            row_idx = np.repeat(np.arange(rb.num_rows, dtype=np.int64), ns)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(docs, pa.int64()),
-                    pc.take(rb.column("term"), pa.array(row_idx)),
-                    pa.array(dl, pa.int64()),
-                ],
-                names=["doc_ord", "term", "dl"],
-            )
-
-    cols = ["term", "gaps", "tfs", "dls", "n_docs", "first_doc"]
-    return blocks.select(*cols).mapInArrow(decode, schema=_CAND_ROW)
-
-
-def _verify_phrase(cand_chunks: DataFrame, phrase: list[str]) -> DataFrame:
-    """Count exact phrase occurrences in each candidate's columns with
-    the index tokenizer; emits only rows where the phrase occurs."""
-    p = list(phrase)
-
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            tfp = [
-                count_phrase(tokenize(content), p)
-                + count_phrase(tokenize(heading), p)
-                for content, heading in zip(
-                    pdf["content"], pdf["heading_path"]
-                )
-            ]
-            out = pd.DataFrame(
-                {
-                    "doc_ord": pdf["doc_ord"],
-                    "tfp": pd.Series(tfp, dtype="int64"),
-                    "dl": pdf["dl"],
-                }
-            )
-            yield out[out["tfp"] > 0]
-
-    return cand_chunks.select("doc_ord", "content", "heading_path", "dl").mapInPandas(
-        verify, schema=_VERIFY_ROW
-    )
-
-
-def phrase_candidates(
-    spark, store: IndexStore, phrase: list[str]
-) -> DataFrame | None:
-    """AND-intersection of the phrase's unique tokens → (doc_ord, dl).
-
-    Returns None when the phrase is empty or a token is missing from
-    the index (no doc can match). ONE exchange (groupBy doc_ord); the
-    HAVING count == n_terms filter runs map-side partially first.
-    """
-    uniq = sorted(set(phrase))
-    if not uniq:
-        return None
-    blocks = store.postings_for_terms(uniq)
-    decoded = _decode_candidates(blocks)
-    cand = (
-        decoded.groupBy("doc_ord")
-        .agg(
-            F.countDistinct("term").alias("n_terms"),
-            F.first("dl").alias("dl"),
-        )
-        .filter(F.col("n_terms") == len(uniq))
-        .select("doc_ord", "dl")
-    )
-    if store.exists("tombstones"):
-        cand = cand.join(
-            F.broadcast(store.tombstones()), on="doc_ord", how="left_anti"
-        )
-    return cand
-
-
-def phrase_topk(
-    spark,
-    store: IndexStore,
-    query: str,
-    top_k: int = 10,
-    config: EngineConfig | None = None,
-    cstats: dict | None = None,
-) -> DataFrame:
-    """Distributed phrase top-k → (doc_ord, bm25_score), negated score,
-    best first, ties on doc_ord ascending (FTS5 conventions)."""
-    config = config or EngineConfig()
-    phrase = compile_query(query)
-    empty = spark.createDataFrame([], "doc_ord long, bm25_score double")
-    if not phrase:
-        return empty
-    cstats = cstats or store.corpus_stats()
-    n_docs, avgdl = int(cstats["n_docs"]), float(cstats["avgdl"])
-
-    if store.has_positions():
-        # positional path (operators/positions.py): candidates narrow by
-        # position intersection — zero chunk-table access
-        from rifflux_spark.operators.positions import positional_phrase_counts
-
-        ver = positional_phrase_counts(store, phrase)
-        if ver is None:
-            return empty
-        if store.exists("tombstones"):
-            ver = ver.join(
-                F.broadcast(store.tombstones()), on="doc_ord", how="left_anti"
-            )
-    else:
-        cand = phrase_candidates(spark, store, phrase)
-        if cand is None:
-            return empty
-        # the candidate count is bounded by the rarest token's df — read
-        # driver-side (ms) to decide the join strategy
-        from rifflux_spark.operators.local_exec import local_df
-
-        dfs = local_df(store, sorted(set(phrase)))
-        bound = min(dfs.values()) if dfs else 0
-        chunks = store.chunks().select("doc_ord", "content", "heading_path")
-        ver = _verify_phrase(_cand_join(chunks, cand, bound), phrase)
-    # phrase df as a broadcast scalar: ranking does not depend on it (a
-    # single phrase's idf is a constant factor), so the duplicated
-    # verify branch under this aggregate cannot change membership/order
-    dfp = ver.agg(F.count("*").cast("long").alias("df_p"))
-    k1, b = config.bm25_k1, config.bm25_b
-    idf_expr = F.log(
-        (F.lit(float(n_docs)) - F.col("df_p") + 0.5) / (F.col("df_p") + 0.5)
-    )
-    idf_clamped = F.when(idf_expr > 0, idf_expr).otherwise(F.lit(1e-6))
-    wtf = (F.col("tfp") * (k1 + 1.0)) / (
-        F.col("tfp")
-        + F.lit(k1)
-        * (1.0 - b + b * F.col("dl") / F.lit(avgdl))
-    )
-    scored = ver.crossJoin(F.broadcast(dfp)).select(
-        "doc_ord", (idf_clamped * wtf).alias("score")
-    )
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_ord")).limit(top_k)
-    return topk.select("doc_ord", (-F.col("score")).alias("bm25_score"))
+def phrase_match(query: str) -> str | None:
+    """``query``'s tokens as one quoted MATCH phrase; None when the
+    query has no tokens (punctuation-only)."""
+    tokens = compile_query(query)
+    return '"' + " ".join(tokens) + '"' if tokens else None
 
 
 def phrase_topk_local(
@@ -267,112 +30,6 @@ def phrase_topk_local(
     config: EngineConfig | None = None,
     cstats: dict | None = None,
 ) -> list[tuple[int, float]]:
-    """Coordinator-path phrase top-k: [(doc_ord, negated_score)], best
-    first — byte-identical semantics to :func:`phrase_topk` (same
-    decoder, same tokenizer, same scoring), for the df-routed fast path
-    where the rarest token's postings fit the driver budget."""
-    from rifflux_spark.operators.local_exec import (
-        _bucket_files,
-        _read_filtered,
-        local_tombstones,
-        rehydrate_local,
-    )
-    from rifflux_spark.functions.xxhash64 import term_bucket
-
-    config = config or EngineConfig()
-    phrase = compile_query(query)
-    if not phrase:
-        return []
-    uniq = sorted(set(phrase))
-    cstats = cstats or store.corpus_stats()
-    n_docs, avgdl = int(cstats["n_docs"]), float(cstats["avgdl"])
-
-    if store.has_positions():
-        # positional fast path: intersect poslists, never touch chunks
-        from rifflux_spark.operators.positions import (
-            local_positions,
-            phrase_instance_starts,
-        )
-
-        per_term, dl_map = local_positions(store, uniq)
-        if any(not per_term[u] for u in uniq):
-            return []
-        cand = set.intersection(*(set(per_term[u]) for u in uniq))
-        tombs = local_tombstones(store)
-        if tombs.size:
-            cand -= set(int(x) for x in tombs)
-        verified = []
-        for doc_ord in sorted(cand):
-            tfp = int(
-                phrase_instance_starts([per_term[t][doc_ord] for t in phrase]).size
-            )
-            if tfp > 0:
-                verified.append((doc_ord, tfp))
-        if not verified:
-            return []
-        idf = phrase_idf(n_docs, len(verified))
-        docs = np.array([d for d, _ in verified], dtype=np.int64)
-        tfs = np.array([tf for _, tf in verified], dtype=np.float64)
-        dls = np.array([dl_map[d] for d, _ in verified], dtype=np.float64)
-        scores = idf * bm25_wtf(tfs, dls, avgdl, config.bm25_k1, config.bm25_b)
-        order = np.lexsort((docs, -scores))[:top_k]
-        return [(int(docs[i]), float(-scores[i])) for i in order]
-
-    buckets = {term_bucket(t, store.n_term_buckets) for t in uniq}
-    files = _bucket_files(store, "postings", buckets)
-    t = _read_filtered(
-        files, ["term", "n_docs", "first_doc", "gaps", "tfs", "dls"], uniq
-    )
-    if t is None:
-        return []
-    # vectorized per-term doc sets + candidate intersection (no
-    # per-posting Python loop): slice each term's contiguous posting
-    # spans out of the batch decode, intersect as sorted numpy arrays
-    terms_col = t.column("term").to_pylist()
-    docs_all, _tf_all, dl_all, ns = decode_posting_arrow(t)
-    starts = np.concatenate(([0], np.cumsum(ns)))
-    spans: dict[str, list[tuple[int, int]]] = {}
-    for i, term in enumerate(terms_col):
-        spans.setdefault(term, []).append((int(starts[i]), int(starts[i + 1])))
-    if any(u not in spans for u in uniq):
-        return []
-    per_term_docs: dict[str, np.ndarray] = {}
-    for u in uniq:
-        parts = [docs_all[s:e] for s, e in spans[u]]
-        arr = parts[0] if len(parts) == 1 else np.concatenate(parts)
-        per_term_docs[u] = np.unique(arr)
-    cand_arr = per_term_docs[uniq[0]]
-    for u in uniq[1:]:
-        cand_arr = np.intersect1d(cand_arr, per_term_docs[u], assume_unique=True)
-        if cand_arr.size == 0:
-            return []
-    tombs = local_tombstones(store)
-    if tombs.size:
-        cand_arr = cand_arr[~np.isin(cand_arr, tombs)]
-    if cand_arr.size == 0:
-        return []
-    dl_map: dict[int, int] = dict(zip(docs_all.tolist(), dl_all.tolist()))
-    cand = cand_arr.tolist()
-
-    chunks = rehydrate_local(
-        store, sorted(cand), columns=["doc_ord", "content", "heading_path"]
-    )
-    verified: list[tuple[int, int]] = []
-    for doc_ord in sorted(cand):
-        c = chunks.get(doc_ord)
-        if c is None:
-            continue
-        tfp = count_phrase(tokenize(c["content"]), phrase) + count_phrase(
-            tokenize(c["heading_path"]), phrase
-        )
-        if tfp > 0:
-            verified.append((doc_ord, tfp))
-    if not verified:
-        return []
-    idf = phrase_idf(n_docs, len(verified))
-    docs = np.array([d for d, _ in verified], dtype=np.int64)
-    tfs = np.array([tf for _, tf in verified], dtype=np.float64)
-    dls = np.array([dl_map[d] for d, _ in verified], dtype=np.float64)
-    scores = idf * bm25_wtf(tfs, dls, avgdl, config.bm25_k1, config.bm25_b)
-    order = np.lexsort((docs, -scores))[:top_k]
-    return [(int(docs[i]), float(-scores[i])) for i in order]
+    """Coordinator-path phrase top-k: [(doc_ord, negated_score)]."""
+    match = phrase_match(query)
+    return fts_topk_local(store, match, top_k, config, cstats) if match else []

@@ -5,7 +5,7 @@ every posting (reference src/rifflux/db/schema.sql:21-28 delegates to
 FTS5's poslists), which is what lets its phrase/NEAR queries narrow
 candidates before touching any row content. The rebuild's default
 design verifies phrases by candidate-intersection + text recheck
-(operators/phrase.py — df-bounded but still rehydration-bound for
+(operators/ftsquery.py — df-bounded but still rehydration-bound for
 phrases of two high-df terms). This module is the scale-path upgrade
 the round-4 verdict called for: a ``positions`` table that rides the
 SAME physical layout as the postings table — (term_bucket, salt)

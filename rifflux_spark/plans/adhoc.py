@@ -168,7 +168,8 @@ def phrase_logical(
 ) -> DataFrame:
     """Phrase BM25 top-k as one declarative plan over a raw corpus
     table — the ad-hoc twin of the indexed phrase path
-    (operators/phrase.py; same semantics, index-free).
+    (a one-phrase MATCH through operators/ftsquery.py; same semantics,
+    index-free).
 
     The phrase-occurrence count is a pure Catalyst array expression
     (``filter`` over candidate start positions with ``element_at``

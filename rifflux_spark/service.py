@@ -86,8 +86,9 @@ class SearchService:
     # use a byte budget since a semantic scan is always corpus-sized.
     LOCAL_EXEC_MAX_POSTINGS = 2_000_000
     LOCAL_EXEC_BUDGET_BYTES = 256 << 20
-    # phrase routing: candidate rehydration is bounded by the rarest
-    # token's df — cap what the coordinator will re-read and recheck
+    # recheck routing (phrase / column-filtered / anchored MATCH units):
+    # candidate rehydration is bounded by the rarest full token's df —
+    # cap what the coordinator will re-read and recheck
     LOCAL_EXEC_MAX_CANDIDATES = 100_000
 
     def lexical(
@@ -118,61 +119,27 @@ class SearchService:
             self.spark, self.store, query, top_k, self.config,
             prune=prune, cstats=self._corpus_stats(),
         )
-        rows = (
-            topk.join(self.store.chunks(), on="doc_ord", how="inner")
-            .select("chunk_id", "url", "heading_path", "chunk_index", "content", "bm25_score", "doc_ord")
-            .orderBy(F.asc("bm25_score"), F.asc("doc_ord"))
-            .collect()
-        )
-        return [
-            {
-                "chunk_id": r["chunk_id"],
-                "path": r["url"],
-                "heading_path": r["heading_path"],
-                "chunk_index": r["chunk_index"],
-                "content": r["content"],
-                "bm25_score": r["bm25_score"],
-            }
-            for r in rows
-        ]
+        return self._spark_rows(topk)
 
     def _lexical_local(self, query: str, top_k: int, prune: bool = True) -> list[dict[str, Any]]:
-        from rifflux_spark.operators.local_exec import bm25_topk_local, rehydrate_local
+        from rifflux_spark.operators.local_exec import bm25_topk_local
 
-        topk = bm25_topk_local(
-            self.store, query, top_k, self.config,
-            cstats=self._corpus_stats(), prune=prune,
-        )
-        if not topk:
-            return []
-        chunks = rehydrate_local(self.store, [d for d, _ in topk])
-        out = []
-        for doc_ord, score in topk:
-            c = chunks.get(doc_ord)
-            if c is None:
-                continue
-            out.append(
-                {
-                    "chunk_id": c["chunk_id"],
-                    "path": c["url"],
-                    "heading_path": c["heading_path"],
-                    "chunk_index": c["chunk_index"],
-                    "content": c["content"],
-                    "bm25_score": score,
-                }
+        return self._local_rows(
+            bm25_topk_local(
+                self.store, query, top_k, self.config,
+                cstats=self._corpus_stats(), prune=prune,
             )
-        return out
+        )
 
     def phrase(
         self, query: str, top_k: int = 10, engine: str = "auto"
     ) -> list[dict[str, Any]]:
-        """Exact-phrase search (beyond-reference; operators/phrase.py):
-        the whole query is ONE phrase — docs where its tokens appear
-        contiguously within a single indexed column, BM25-ranked with
-        the phrase as the scoring unit (rank-identical to SQLite FTS5
-        ``MATCH '"..."'``). Routing mirrors lexical: the coordinator
-        path serves queries whose candidate working set (bounded by the
-        rarest token's df) fits the driver budget."""
+        """Exact-phrase search (beyond-reference): the whole query is ONE
+        phrase — docs where its tokens appear contiguously within a
+        single indexed column, BM25-ranked with the phrase as the
+        scoring unit. It is the FTS5 ``MATCH '"..."'`` of the query's
+        tokens (operators/phrase.phrase_match), evaluated and routed by
+        :meth:`fts`."""
         if engine not in {"auto", "local", "spark"}:
             raise ValueError(f"unknown engine: {engine}")
         with self.store.read_snapshot():
@@ -181,68 +148,10 @@ class SearchService:
     def _phrase(
         self, query: str, top_k: int, engine: str = "auto"
     ) -> list[dict[str, Any]]:
-        from rifflux_spark.operators import phrase as P
+        from rifflux_spark.operators.phrase import phrase_match
 
-        tokens = compile_query(query)
-        if not tokens:
-            return []
-        if engine != "spark":
-            from rifflux_spark.operators import local_exec
-
-            dfs = local_exec.local_df(self.store, sorted(set(tokens)))
-            # candidates are bounded by the rarest token; the decode cost
-            # by the summed postings — both must fit the driver budget
-            use_local = engine == "local" or (
-                sum(dfs.values()) <= self.LOCAL_EXEC_MAX_POSTINGS
-                and (min(dfs.values()) if dfs else 0)
-                <= self.LOCAL_EXEC_MAX_CANDIDATES
-            )
-            if use_local:
-                topk = P.phrase_topk_local(
-                    self.store, query, top_k, self.config,
-                    cstats=self._corpus_stats(),
-                )
-                if not topk:
-                    return []
-                from rifflux_spark.operators.local_exec import rehydrate_local
-
-                chunks = rehydrate_local(self.store, [d for d, _ in topk])
-                return [
-                    {
-                        "chunk_id": c["chunk_id"],
-                        "path": c["url"],
-                        "heading_path": c["heading_path"],
-                        "chunk_index": c["chunk_index"],
-                        "content": c["content"],
-                        "bm25_score": score,
-                    }
-                    for doc_ord, score in topk
-                    if (c := chunks.get(doc_ord)) is not None
-                ]
-        topk_df = P.phrase_topk(
-            self.spark, self.store, query, top_k, self.config,
-            cstats=self._corpus_stats(),
-        )
-        rows = (
-            topk_df.join(self.store.chunks(), on="doc_ord", how="inner")
-            .select(
-                "chunk_id", "url", "heading_path", "chunk_index", "content",
-                "bm25_score", "doc_ord",
-            )
-            .orderBy(F.asc("bm25_score"), F.asc("doc_ord"))
-            .collect()
-        )
-        return [
-            {
-                "chunk_id": r["chunk_id"],
-                "path": r["url"],
-                "heading_path": r["heading_path"],
-                "chunk_index": r["chunk_index"],
-                "content": r["content"],
-                "bm25_score": r["bm25_score"],
-            }
-            for r in rows
-        ]
+        match = phrase_match(query)
+        return self._fts(match, top_k, engine=engine) if match else []
 
     def fts(
         self, query: str, top_k: int = 10, engine: str = "auto"
@@ -279,7 +188,7 @@ class SearchService:
 
     @staticmethod
     def _result_row(
-        chunk: dict[str, Any] | Any, score: float
+        chunk: dict[str, Any] | Any, score: float, key: str = "bm25_score"
     ) -> dict[str, Any]:
         get = chunk.get if isinstance(chunk, dict) else chunk.__getitem__
         return {
@@ -288,8 +197,41 @@ class SearchService:
             "heading_path": get("heading_path"),
             "chunk_index": get("chunk_index"),
             "content": get("content"),
-            "bm25_score": score,
+            key: score,
         }
+
+    def _local_rows(
+        self, topk: list[tuple[int, float]], key: str = "bm25_score"
+    ) -> list[dict[str, Any]]:
+        """Coordinator top-k ``[(doc_ord, score)]`` → result rows, in
+        top-k order (rows whose chunk is gone are dropped)."""
+        if not topk:
+            return []
+        from rifflux_spark.operators.local_exec import rehydrate_local
+
+        chunks = rehydrate_local(self.store, [d for d, _ in topk])
+        return [
+            self._result_row(c, score, key)
+            for doc_ord, score in topk
+            if (c := chunks.get(doc_ord)) is not None
+        ]
+
+    def _spark_rows(
+        self, topk, key: str = "bm25_score", descending: bool = False
+    ) -> list[dict[str, Any]]:
+        """Distributed top-k frame ``(doc_ord, key)`` → result rows: join
+        the chunks, order by score then doc_ord, collect."""
+        order = F.desc(key) if descending else F.asc(key)
+        rows = (
+            topk.join(self.store.chunks(), on="doc_ord", how="inner")
+            .select(
+                "chunk_id", "url", "heading_path", "chunk_index", "content",
+                key, "doc_ord",
+            )
+            .orderBy(order, F.asc("doc_ord"))
+            .collect()
+        )
+        return [self._result_row(r, r[key], key) for r in rows]
 
     def _fts(
         self, query: str, top_k: int, engine: str = "auto"
@@ -335,38 +277,36 @@ class SearchService:
             # the resolved terms ARE the working set)
             _per_unit, all_terms = FQ._units_needing(units, self.store)
             dfs = local_exec.local_df(self.store, all_terms)
+            # a recheck unit (multi-token, column-filtered or anchored)
+            # verifies candidates bounded by its rarest full token's df
+            recheck_bounds = [
+                min(
+                    (dfs.get(t, 0) for t in (u.tokens[:-1] if u.prefix else u.tokens)),
+                    default=0,
+                )
+                for u in units
+                if len(u.tokens) > 1 or u.cols is not None or u.anchored
+            ]
             use_local = engine == "local" or (
                 sum(dfs.values()) <= self.LOCAL_EXEC_MAX_POSTINGS
+                and all(
+                    bound <= self.LOCAL_EXEC_MAX_CANDIDATES
+                    for bound in recheck_bounds
+                )
             )
             if use_local:
-                topk = FQ.fts_topk_local(
-                    self.store, query, top_k, self.config,
-                    cstats=self._corpus_stats(),
+                return self._local_rows(
+                    FQ.fts_topk_local(
+                        self.store, query, top_k, self.config,
+                        cstats=self._corpus_stats(),
+                    )
                 )
-                if not topk:
-                    return []
-                from rifflux_spark.operators.local_exec import rehydrate_local
-
-                chunks = rehydrate_local(self.store, [d for d, _ in topk])
-                return [
-                    self._result_row(c, score)
-                    for doc_ord, score in topk
-                    if (c := chunks.get(doc_ord)) is not None
-                ]
-        topk_df = FQ.fts_topk(
-            self.spark, self.store, query, top_k, self.config,
-            cstats=self._corpus_stats(),
-        )
-        rows = (
-            topk_df.join(self.store.chunks(), on="doc_ord", how="inner")
-            .select(
-                "chunk_id", "url", "heading_path", "chunk_index", "content",
-                "bm25_score", "doc_ord",
+        return self._spark_rows(
+            FQ.fts_topk(
+                self.spark, self.store, query, top_k, self.config,
+                cstats=self._corpus_stats(),
             )
-            .orderBy(F.asc("bm25_score"), F.asc("doc_ord"))
-            .collect()
         )
-        return [self._result_row(r, r["bm25_score"]) for r in rows]
 
     def highlight(
         self,
@@ -467,47 +407,14 @@ class SearchService:
         if self.store.exists("tombstones") or self.store.exists("purged"):
             emb = emb.join(F.broadcast(self.store.dead_ords()), on="doc_ord", how="left_anti")
         topk = semantic_topk(emb, query_vector, top_k, id_cols=["doc_ord"])
-        rows = (
-            topk.join(self.store.chunks(), on="doc_ord", how="inner")
-            .select("chunk_id", "url", "heading_path", "chunk_index", "content", "cosine", "doc_ord")
-            .orderBy(F.desc("cosine"), F.asc("doc_ord"))
-            .collect()
-        )
-        return [
-            {
-                "chunk_id": r["chunk_id"],
-                "path": r["url"],
-                "heading_path": r["heading_path"],
-                "chunk_index": r["chunk_index"],
-                "content": r["content"],
-                "cosine": r["cosine"],
-            }
-            for r in rows
-        ]
+        return self._spark_rows(topk, "cosine", descending=True)
 
     def _semantic_local(self, query_vector, top_k: int) -> list[dict[str, Any]]:
-        from rifflux_spark.operators.local_exec import rehydrate_local, semantic_topk_local
+        from rifflux_spark.operators.local_exec import semantic_topk_local
 
-        topk = semantic_topk_local(self.store, query_vector, top_k)
-        if not topk:
-            return []
-        chunks = rehydrate_local(self.store, [d for d, _ in topk])
-        out = []
-        for doc_ord, cos in topk:
-            c = chunks.get(doc_ord)
-            if c is None:
-                continue
-            out.append(
-                {
-                    "chunk_id": c["chunk_id"],
-                    "path": c["url"],
-                    "heading_path": c["heading_path"],
-                    "chunk_index": c["chunk_index"],
-                    "content": c["content"],
-                    "cosine": cos,
-                }
-            )
-        return out
+        return self._local_rows(
+            semantic_topk_local(self.store, query_vector, top_k), "cosine"
+        )
 
     # --- the reference search orchestration (search.py:30-100) ---
 

@@ -105,7 +105,7 @@ class SqliteOracle:
     def phrase_search(self, query: str, top_k: int) -> list[dict[str, Any]]:
         """The whole query as ONE FTS5 phrase: MATCH '"t1 t2 ..."' —
         the oracle for the engine's beyond-reference phrase mode
-        (operators/phrase.py)."""
+        (a one-phrase MATCH through operators/ftsquery.py)."""
         terms = [t for t in re.findall(r"\w+", query, flags=re.UNICODE) if t]
         if not terms:
             return []

@@ -1,6 +1,7 @@
 """Phrase-mode correctness gate: rank- and score-identical top-k
-between operators/phrase.py (both execution paths) and a real SQLite
-FTS5 phrase MATCH over the same chunks — the same oracle discipline as
+between phrase mode (a one-phrase MATCH through operators/ftsquery.py,
+both execution paths) and a real SQLite FTS5 phrase MATCH over the
+same chunks — the same oracle discipline as
 the term-query gate (test_bm25_rank_identity), extended to the
 beyond-reference phrase operator.
 
@@ -13,11 +14,15 @@ an unknown token (AND semantics -> [])."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 
 from rifflux_spark.config import EngineConfig
+from rifflux_spark.functions.ftsparse import Unit
 from rifflux_spark.functions.tokenizer import tokenize
-from rifflux_spark.operators.phrase import count_phrase
+from rifflux_spark.operators import ftsquery
+from rifflux_spark.operators.ftsquery import count_unit, unit_instances
 from rifflux_spark.plans.build import build_index
 from rifflux_spark.service import SearchService
 from rifflux_spark.sources.pages import synthetic_pages
@@ -96,14 +101,14 @@ def _nonadjacent_phrase(chunks) -> str | None:
     frequent = [t for t, _ in vocab.most_common(40)]
     for i, a in enumerate(frequent):
         for b in frequent[i + 1 :]:
-            pair = [a, b]
+            pair = Unit((a, b))
             coocc = adjacent = 0
             for c in chunks:
                 toks = tokenize(c["content"]) + tokenize(c["heading_path"])
                 if a in toks and b in toks:
                     coocc += 1
-                    adjacent += count_phrase(tokenize(c["content"]), pair)
-                    adjacent += count_phrase(tokenize(c["heading_path"]), pair)
+                    adjacent += count_unit(tokenize(c["content"]), pair)
+                    adjacent += count_unit(tokenize(c["heading_path"]), pair)
             if coocc > 0 and adjacent == 0:
                 return f"{a} {b}"
     return None
@@ -160,9 +165,88 @@ def test_phrase_edge_queries(built_index, spark) -> None:
     assert service.search("!!!", top_k=5, mode="phrase") == []
 
 
-def test_count_phrase_overlapping() -> None:
-    assert count_phrase(["a", "a", "a"], ["a", "a"]) == 2
-    assert count_phrase(["a", "b", "a", "b", "a"], ["a", "b", "a"]) == 2
-    assert count_phrase(["x"], ["x"]) == 1
-    assert count_phrase([], ["x"]) == 0
-    assert count_phrase(["x", "y"], []) == 0
+def test_phrase_routes_to_spark_past_candidate_bound(
+    built_index, spark, monkeypatch
+) -> None:
+    """A phrase whose rarest token's df exceeds LOCAL_EXEC_MAX_CANDIDATES
+    takes the Spark route under engine="auto" and returns the local
+    route's rows."""
+    from rifflux_spark.operators.local_exec import local_df
+
+    index_dir, _oracle, chunks = built_index
+    service = SearchService(spark, index_dir, CONFIG)
+    q = _corpus_phrases(chunks)[0]
+    local = service.phrase(q, top_k=10, engine="local")
+    assert local, f"vacuous phrase pick {q!r}"
+
+    spark_calls = []
+    fts_topk = ftsquery.fts_topk
+
+    def counting_fts_topk(*args, **kwargs):
+        spark_calls.append(args)
+        return fts_topk(*args, **kwargs)
+
+    monkeypatch.setattr(ftsquery, "fts_topk", counting_fts_topk)
+    # under the default bound the same query stays on the coordinator
+    assert service.phrase(q, top_k=10) == local
+    assert not spark_calls
+
+    def no_local(*_args, **_kwargs):
+        raise AssertionError("phrase past the candidate bound ran locally")
+
+    rarest = min(local_df(service.store, sorted(set(tokenize(q)))).values())
+    monkeypatch.setattr(SearchService, "LOCAL_EXEC_MAX_CANDIDATES", rarest - 1)
+    monkeypatch.setattr(ftsquery, "fts_topk_local", no_local)
+    got = service.phrase(q, top_k=10)
+    assert len(spark_calls) == 1
+    assert [r["chunk_id"] for r in got] == [r["chunk_id"] for r in local]
+    for g, w in zip(got, local):
+        assert {**g, "bm25_score": 0.0} == {**w, "bm25_score": 0.0}
+        assert abs(g["bm25_score"] - w["bm25_score"]) < 1e-9
+
+
+def _instances_reference(tokens: list[str], unit: Unit) -> list[tuple[int, int]]:
+    """Brute force: test every start position token by token."""
+    p = unit.tokens
+    m = len(p)
+    if m == 0 or len(tokens) < m:
+        return []
+    out = []
+    for i in [0] if unit.anchored else range(len(tokens) - m + 1):
+        head = all(tokens[i + j] == p[j] for j in range(m - 1))
+        tail = tokens[i + m - 1]
+        if head and (tail.startswith(p[-1]) if unit.prefix else tail == p[-1]):
+            out.append((i, i + m - 1))
+    return out
+
+
+def test_unit_instances_match_bruteforce() -> None:
+    fixed = [
+        # overlapping instances each count
+        (["a", "a", "a"], Unit(("a", "a")), 2),
+        (["a", "b", "a", "b", "a"], Unit(("a", "b", "a")), 2),
+        (["x"], Unit(("x",)), 1),
+        ([], Unit(("x",)), 0),
+        (["x", "y"], Unit(()), 0),
+        # prefix on the last token, anchored only at token 0
+        (["ab", "abc", "b"], Unit(("ab",), prefix=True), 2),
+        (["a", "abc", "a", "ab"], Unit(("a", "ab"), prefix=True), 2),
+        (["a", "b", "a", "b"], Unit(("a", "b"), anchored=True), 1),
+        (["b", "a", "b"], Unit(("a", "b"), anchored=True), 0),
+    ]
+    for tokens, unit, want in fixed:
+        assert count_unit(tokens, unit) == want, (tokens, unit)
+        assert unit_instances(tokens, unit) == _instances_reference(tokens, unit)
+
+    rng = random.Random(7)
+    vocab = ["a", "b", "ab", "ba", "abc", "c"]
+    for _ in range(3000):
+        tokens = [rng.choice(vocab) for _ in range(rng.randint(0, 12))]
+        unit = Unit(
+            tuple(rng.choice(vocab) for _ in range(rng.randint(0, 4))),
+            prefix=rng.random() < 0.3,
+            anchored=rng.random() < 0.2,
+        )
+        want = _instances_reference(tokens, unit)
+        assert unit_instances(tokens, unit) == want, (tokens, unit)
+        assert count_unit(tokens, unit) == len(want)

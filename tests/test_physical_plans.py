@@ -389,27 +389,22 @@ def test_chunk_row_groups_keep_rehydration_docord_proportional(
 
 
 def test_phrase_path_prunes_broadcasts_and_takeordered(spark, store) -> None:
-    """The indexed phrase path (operators/phrase.py): term filters reach
-    the posting scan (partition + pushed predicate), candidate
-    rehydration broadcasts the df-bounded candidate side into the chunk
-    scan, the phrase-df scalar arrives as a broadcast 1-row aggregate,
-    and top-k is TakeOrderedAndProject — no corpus-wide sort, no
-    unbounded shuffle."""
-    from rifflux_spark.operators.phrase import phrase_topk
+    """The distributed phrase plan (a one-phrase MATCH through
+    operators/ftsquery.py): term filters reach the posting scan
+    (partition + pushed predicate), candidate rehydration broadcasts
+    the df-bounded candidate side into the chunk scan, and top-k is
+    TakeOrderedAndProject — no corpus-wide sort, no unbounded
+    shuffle."""
+    from rifflux_spark.operators.ftsquery import fts_topk
 
-    df = phrase_topk(spark, store, "cache ttl", top_k=5)
+    df = fts_topk(spark, store, '"cache ttl"', top_k=5)
     plan = explain_str(df)
     assert "PartitionFilters" in plan and "term_bucket" in plan
     # the postings scan (not the chunks scan) carries the term pushdown
     assert "In(term, [cache,ttl])" in plan
     assert "BroadcastHashJoin" in plan  # candidates -> chunks rehydration
     assert "TakeOrderedAndProject" in plan
-    # the only non-broadcast exchanges: the candidate intersection's
-    # two-phase countDistinct and the 1-row phrase-df aggregate
-    import re as _re
-
-    per_branch = plan.split("BroadcastNestedLoopJoin", 1)[0]
-    assert "SinglePartition" not in per_branch
+    assert "SinglePartition" not in plan
     rows = df.collect()
     assert rows and all(r["bm25_score"] < 0 for r in rows)
 

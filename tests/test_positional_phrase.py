@@ -130,12 +130,12 @@ def test_positional_plan_never_touches_chunks(twin_indexes, spark) -> None:
     """The distributed positional phrase plan: term filters pushed into
     the POSITIONS scan (partition + predicate), no chunks-table scan,
     no text rehydration join, top-k is TakeOrderedAndProject."""
-    from rifflux_spark.operators.phrase import phrase_topk
+    from rifflux_spark.operators.ftsquery import fts_topk
     from tests.test_physical_plans import explain_str
 
     pos_dir, _, _, _ = twin_indexes
     store = IndexStore(spark, pos_dir, CONFIG.n_term_buckets)
-    df = phrase_topk(spark, store, "cache ttl", top_k=5)
+    df = fts_topk(spark, store, '"cache ttl"', top_k=5)
     plan = explain_str(df)
     assert "PartitionFilters" in plan and "term_bucket" in plan
     assert "In(term, [cache,ttl])" in plan
