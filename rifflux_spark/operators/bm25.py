@@ -242,9 +242,10 @@ def _prune_blocks(
       live seed score, keep blocks whose bound ≥ θ (exactness proof in
       the module docstring).
 
-    ``prune=False`` with an over-budget query applies ONLY the budget
-    branch (the coordinator path's exact behavior); under budget it is
-    a no-op — no seed job, no metadata-derived pruning.
+    The budget branch runs at any block count. ``prune=False`` applies
+    ONLY the budget branch (what the coordinator path does for every
+    query); under budget it is a no-op — no seed job, no metadata-
+    derived pruning. ``min_blocks_to_prune`` gates only exact pruning.
     """
     budget = int(getattr(config, "lexical_budget_postings", 0) or 0)
     # EXACT-prune cap only: past this many blocks the seed machinery
@@ -289,11 +290,16 @@ def _prune_blocks(
         def _col(name):
             return np.array([int(r[name]) for r in rows], dtype=np.int64)
     n_blocks = len(terms_arr)
-    if n_blocks < min_blocks_to_prune or (cap is not None and n_blocks > cap):
+    if cap is not None and n_blocks > cap:
+        return blocks, None
+    ns = _col("n_docs")
+    over_budget = budget > 0 and int(ns.sum()) > budget
+    # an under-budget query with pruning disabled is a straight full
+    # scan, as on the coordinator
+    if not over_budget and (not prune or n_blocks < min_blocks_to_prune):
         return blocks, None
     salts = _col("salt")
     seqs = _col("block_seq")
-    ns = _col("n_docs")
     firsts = _col("first_doc")
     lasts = _col("last_doc")
     ub = wand.block_upper_bounds(
@@ -303,9 +309,8 @@ def _prune_blocks(
         idf, avgdl, config.bm25_k1, config.bm25_b,
     )
     bound = wand.aligned_bounds(terms_arr, firsts, lasts, ub)
-    total_postings = int(ns.sum())
 
-    if budget and total_postings > budget:
+    if over_budget:
         order = wand.selection_order(terms_arr, salts, seqs, bound)
         mask, ranges = wand.budget_ranges(
             terms_arr, firsts, lasts, ns, bound, budget, order=order
@@ -317,12 +322,6 @@ def _prune_blocks(
             ),
             ranges,
         )
-
-    if not prune:
-        # under-budget query with pruning disabled: the full scan IS the
-        # plan — mirror the coordinator path's `not prune and not
-        # over_budget` straight decode, no seed job
-        return blocks, None
 
     if wand.is_uniform(bound):
         return blocks, None

@@ -386,7 +386,11 @@ def fts_topk_local(
     """Coordinator-path MATCH evaluation: [(doc_ord, negated_score)],
     best first. Raises FtsSyntaxError on malformed queries (callers
     apply the reference's bare-terms fallback)."""
-    from rifflux_spark.operators.local_exec import local_tombstones, rehydrate_local
+    from rifflux_spark.operators.local_exec import (
+        local_tombstones,
+        rehydrate_local,
+        top_k_order,
+    )
 
     config = config or EngineConfig()
     ast = parse_fts(query)
@@ -565,8 +569,7 @@ def fts_topk_local(
             [m[docs[j]] for j in idxs], dtype=np.float64
         )
         scores[idxs] += idf * bm25_wtf(tf, dls[idxs], avgdl, k1, b)
-    order = np.lexsort((docs_arr, -scores))[:top_k]
-    return [(int(docs_arr[i]), float(-scores[i])) for i in order]
+    return [(int(docs_arr[i]), float(-scores[i])) for i in top_k_order(scores, docs_arr, top_k)]
 
 
 class _DocSet:

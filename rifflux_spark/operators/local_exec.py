@@ -12,7 +12,12 @@ SQLite never pays (reference lexical mean 8 ms, BASELINE.md).
 This module runs the IDENTICAL decode + BM25 math driver-side with
 pyarrow + numpy, short-circuiting the scheduler: same blocks, same idf
 clamp, same tie-break, rank-identical results (tested against the Spark
-path and the FTS5 oracle). Real distributed engines do the same thing —
+path and the FTS5 oracle). The lexical scorer is exact under the posting
+budget — one decode of every matching block, one sort to sum per doc, a
+partition top-k — and takes the budgeted range closure over it; the
+block-max WAND pruning of the distributed plan does not pay at
+coordinator sizes (measurement in :func:`bm25_topk_local`). Real
+distributed engines do the same thing —
 coordinator-only execution for selective queries (e.g. single-node plans
 in Trino/Presto-style engines) — while bulk scans stay on the cluster.
 
@@ -98,7 +103,9 @@ def _read_filtered(files: list[Path], columns: list[str], terms: list[str]):
                 groups.append(g)
         if not groups:
             continue
-        t = pf.read_row_groups(groups, columns=columns)
+        # single-threaded: a query's few row groups decode as fast without
+        # the per-column thread pool, on one core instead of ~1.4
+        t = pf.read_row_groups(groups, columns=columns, use_threads=False)
         mask = pc.is_in(t.column("term"), value_set=pa.array(terms))
         t = t.filter(mask)
         if t.num_rows:
@@ -233,12 +240,39 @@ def _decode_score_arrow(t, idf: dict[str, float], avgdl: float, k1: float, b: fl
     return docs, bm25_wtf(tf, dl, avgdl, k1, b) * idf_per
 
 
-def _agg_topk(docs: np.ndarray, partials: np.ndarray):
-    """Per-doc sums via sorted reduce — no Python dict loop."""
+def _sum_by_doc(docs: np.ndarray, partials: np.ndarray):
+    """Per-doc sums: one stable sort, then a reduceat over the runs of
+    equal docs. Stability keeps each doc's partials in posting (file)
+    order, so each sum's float addition order is fixed by the files."""
     order = np.argsort(docs, kind="stable")
     docs, partials = docs[order], partials[order]
-    uniq, starts = np.unique(docs, return_index=True)
-    return uniq, np.add.reduceat(partials, starts)
+    starts = np.flatnonzero(np.concatenate(([True], docs[1:] != docs[:-1])))
+    return docs[starts], np.add.reduceat(partials, starts)
+
+
+def top_k_order(scores: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
+    """Row indices of the ``k`` best rows by (score desc, id asc), best
+    first: ``np.lexsort((ids, -scores))[:k]`` without sorting every row.
+    A partition finds the k-th best score, and only the rows scoring at
+    least that are sorted, so a tie group straddling the k-th slot is
+    ordered by id exactly as the full sort orders it."""
+    neg = -np.asarray(scores)
+    if k <= 0 or neg.size == 0:
+        return np.empty(0, dtype=np.intp)
+    if k < neg.size:
+        kth = np.partition(neg, k - 1)[k - 1]
+        # NaN sorts last in both the partition and the lexsort; a NaN at
+        # the k-th slot leaves nothing to cut
+        if not np.isnan(kth):
+            cand = np.flatnonzero(neg <= kth)
+            return cand[np.lexsort((ids[cand], neg[cand]))][:k]
+    return np.lexsort((ids, neg))[:k]
+
+
+# posting columns the scorer decodes, and the per-block metadata only
+# the budgeted range closure needs
+POSTING_COLUMNS = ["term", "n_docs", "first_doc", "gaps", "tfs", "dls"]
+BOUND_COLUMNS = ["term", "salt", "block_seq", "last_doc", "block_max_tf", "block_min_dl"]
 
 
 def bm25_topk_local(
@@ -247,32 +281,44 @@ def bm25_topk_local(
     top_k: int = 10,
     config: EngineConfig | None = None,
     cstats: dict | None = None,
-    prune: bool = True,
-    min_blocks_to_prune: int = 64,
 ) -> list[tuple[int, float]]:
     """Driver-side BM25 top-k: [(doc_ord, negated_score)], best first.
 
     Exactly the semantics of operators/bm25.bm25_topk (same codec, same
     constants, same (score desc, doc_ord asc) tie-break, same negation).
-    Pruning is IMPACT-ORDERED EARLY TERMINATION (the block-max WAND
-    bound math from operators/wand.py, reorganized as a scan): blocks
-    are decoded in descending ``UB(B_t) + Σ_{t'≠t} max UB(B_t')`` order
-    in geometric waves; after each wave θ = the k-th best accumulated
-    LIVE score, and the scan STOPS once the next block's bound is below
-    θ. Exactness proof is the WAND keep test's: every undecoded block's
-    bound < θ means no doc it holds can reach the top-k, and a doc with
-    one undecoded block has true score < θ, so its partial sum cannot
-    displace a fully-scored member (all of whose blocks have bound ≥
-    their true score ≥ θ and are therefore decoded). Correctness-
-    invariant on/off (tested).
+    Under the posting budget every matching block is decoded in one
+    vectorized pass, each doc's partials are summed after one stable
+    sort, and the top k are picked by partition (:func:`top_k_order`).
 
-    ``config.lexical_budget_postings > 0`` additionally caps the decoded
-    posting count: stopword-class queries (clamped uniform idfs — no
-    bound can prune them, the FTS5 engine scans them in full too) stop
-    at the budget and return the impact-ordered approximation. Default
-    ON (config.py): under-budget queries are bit-identical to exact
-    mode, so only df≈100% queries past ~1M postings see the coverage
-    trade; 0 opts back into exact FTS5-parity behavior at any cost."""
+    There is no block-max pruning here. An impact-ordered wave scan
+    (blocks decoded in descending WAND bound order, stopping once the
+    next bound falls below the k-th best score) never beat decoding
+    every block. Median ms per query over 5 interleaved reps, top 10,
+    4-vCPU shared host; the three return equal results on every query:
+
+    ================================  ==========  ===========  =======
+    index / queries                   wave scan   full decode  this
+    ================================  ==========  ===========  =======
+    26.1k chunks, 48 head (Σdf ≤87k)  12.6        9.4          6.7
+    26.1k, rare + 1–3 head terms      8.8         6.6          4.7
+    26.1k, mid (df 100–1k) + head     10.4        7.7          5.3
+    26.1k, upper (df 1k–13k) + head   11.0        8.1          5.7
+    26.1k, 2–3 terms, df ≤ 1%         2.5         2.5          2.0
+    260k chunks, rare + 1–3 head      66.6        58.4         40.4
+    260k, mid (df 1k–10k) + head      73.9        58.5         38.5
+    260k, upper (df 10k–130k) + head  91.8        61.3         42.2
+    260k, 2–4 head (Σdf ≤ 780k)       110.8       71.6         49.9
+    260k, 2–3 terms, df ≤ 1%          6.5         6.5          6.6
+    ================================  ==========  ===========  =======
+
+    ``config.lexical_budget_postings > 0`` caps the decoded posting
+    count: a query whose blocks hold more postings than the budget
+    decodes only the impact-ordered range closure (operators/wand.py),
+    so every returned doc still carries its exact full score and the
+    trade is coverage. Under-budget queries are exact; 0 opts back into
+    exact FTS5-parity behavior at any cost. The distributed plan
+    (operators/bm25.py) applies the same closure and keeps WAND pruning
+    for exact scans."""
     config = config or EngineConfig()
     terms = compile_query(query)
     if not terms:
@@ -290,115 +336,50 @@ def bm25_topk_local(
 
     buckets = {term_bucket(t, store.n_term_buckets) for t in qterms}
     files = _bucket_files(store, "postings", buckets)
-    t = _read_filtered(
-        files,
-        ["term", "salt", "block_seq", "n_docs", "first_doc", "last_doc",
-         "gaps", "tfs", "dls", "block_max_tf", "block_min_dl"],
-        qterms,
-    )
+    t = _read_filtered(files, POSTING_COLUMNS, qterms)
     if t is None:
         return []
     tombs = local_tombstones(store)
     k1, b = config.bm25_k1, config.bm25_b
-    n_blocks = t.num_rows
     budget = int(getattr(config, "lexical_budget_postings", 0) or 0)
     ns = t.column("n_docs").to_numpy().astype(np.int64)
-    total_postings = int(ns.sum())
-    over_budget = budget > 0 and total_postings > budget
 
-    if (not prune and not over_budget) or n_blocks < min_blocks_to_prune:
+    if budget <= 0 or int(ns.sum()) <= budget:
         docs, partials = _decode_score_arrow(t, idf, avgdl, k1, b)
         return _finish_topk(docs, partials, tombs, top_k)
 
-    # range-aligned disjunctive bounds (operators/wand.py): each block
-    # charged the other terms' best OVERLAPPING block, not their global
-    # best — tighter, same exactness proof
-    terms_arr = np.array(t.column("term").to_pylist())
+    # budgeted mode: impact-ordered RANGE CLOSURE — every returned doc
+    # has ALL its postings decoded (exact scores); the trade is coverage
+    # of the corpus, never the correctness of shown scores. The bounds
+    # are range-aligned (each block charged the other terms' best
+    # OVERLAPPING block), and the selection order is row-order-
+    # independent (ties broken on (term, salt, seq)), so this matches the
+    # distributed path. The same files and filter give the same rows in
+    # the same order as the posting read above.
+    m = _read_filtered(files, BOUND_COLUMNS, qterms)
+    terms_arr = np.array(m.column("term").to_pylist())
     firsts = t.column("first_doc").to_numpy().astype(np.int64)
-    lasts = t.column("last_doc").to_numpy().astype(np.int64)
+    lasts = m.column("last_doc").to_numpy().astype(np.int64)
     ub = wand.block_upper_bounds(
         list(terms_arr),
-        t.column("block_max_tf").to_pylist(),
-        t.column("block_min_dl").to_pylist(),
+        m.column("block_max_tf").to_pylist(),
+        m.column("block_min_dl").to_pylist(),
         idf, avgdl, k1, b,
     )
     bound = wand.aligned_bounds(terms_arr, firsts, lasts, ub)
-
-    if over_budget:
-        # budgeted mode: impact-ordered RANGE CLOSURE — every returned
-        # doc has ALL its postings decoded (exact scores); the trade is
-        # coverage of the corpus, never the correctness of shown scores.
-        # Selection order is row-order-independent (ties broken on
-        # (term, salt, seq)) so this matches the distributed path.
-        order = wand.selection_order(
-            terms_arr,
-            t.column("salt").to_numpy().astype(np.int64),
-            t.column("block_seq").to_numpy().astype(np.int64),
-            bound,
-        )
-        mask, ranges = wand.budget_ranges(
-            terms_arr, firsts, lasts, ns, bound, budget, order=order
-        )
-        sl = t.take(pa.array(np.flatnonzero(mask)))
-        docs, partials = _decode_score_arrow(sl, idf, avgdl, k1, b)
-        inside = wand.mask_docs_to_ranges(docs, ranges)
-        return _finish_topk(docs[inside], partials[inside], tombs, top_k)
-
-    # uniformity bail: stopword-class queries (clamped idfs) have near-
-    # flat bounds no θ can beat — skip the wave machinery and decode
-    # once (exactly what the no-prune path does; FTS5 scans these too)
-    if wand.is_uniform(bound):
-        docs, partials = _decode_score_arrow(t, idf, avgdl, k1, b)
-        return _finish_topk(docs, partials, tombs, top_k)
-
-    # impact-ordered early termination: decode in descending bound
-    # order in geometric waves; stop once the next bound is provably
-    # below the k-th best accumulated LIVE score (strict <: an equal
-    # bound could still tie in and win on doc_ord)
-    order = np.argsort(-bound, kind="stable")  # deterministic tie order
-    acc_docs: list[np.ndarray] = []
-    acc_parts: list[np.ndarray] = []
-    acc_blk: list[np.ndarray] = []  # block index per posting, for re-ordering
-    done = 0
-    wave = max(top_k * 64, 4096)  # postings per wave, grows geometrically
-    while done < n_blocks:
-        end = done
-        wave_postings = 0
-        while end < n_blocks and wave_postings < wave:
-            wave_postings += int(ns[order[end]])
-            end += 1
-        idx = np.sort(order[done:end])
-        sl = t.take(pa.array(idx))
-        d, p = _decode_score_arrow(sl, idf, avgdl, k1, b)
-        acc_docs.append(d)
-        acc_parts.append(p)
-        acc_blk.append(np.repeat(idx, ns[idx]))
-        done = end
-        if done >= n_blocks:
-            break
-        uniq, sums = _agg_topk(np.concatenate(acc_docs), np.concatenate(acc_parts))
-        if tombs.size:
-            live = ~np.isin(uniq, tombs)
-            uniq, sums = uniq[live], sums[live]
-        if uniq.size >= top_k:
-            # one-ulp safety margin: θ from partial sums can exceed the
-            # exact value by rounding; shave it so a boundary tie is
-            # never pruned
-            theta = np.nextafter(np.sort(sums)[-top_k], -np.inf)
-            if bound[order[done]] < theta:
-                break  # exact early termination (WAND keep-test proof)
-        wave *= 4
-
-    if not acc_docs:
-        return []
-    docs = np.concatenate(acc_docs)
-    parts = np.concatenate(acc_parts)
-    # restore the original (term-sorted) posting order so per-doc float
-    # summation order — hence every last ulp of every score — is
-    # IDENTICAL to the no-prune full decode (rank ties must not flip
-    # between paths)
-    perm = np.argsort(np.concatenate(acc_blk), kind="stable")
-    return _finish_topk(docs[perm], parts[perm], tombs, top_k)
+    order = wand.selection_order(
+        terms_arr,
+        m.column("salt").to_numpy().astype(np.int64),
+        m.column("block_seq").to_numpy().astype(np.int64),
+        bound,
+    )
+    mask, ranges = wand.budget_ranges(
+        terms_arr, firsts, lasts, ns, bound, budget, order=order
+    )
+    sl = t.take(pa.array(np.flatnonzero(mask)))
+    docs, partials = _decode_score_arrow(sl, idf, avgdl, k1, b)
+    inside = wand.mask_docs_to_ranges(docs, ranges)
+    return _finish_topk(docs[inside], partials[inside], tombs, top_k)
 
 
 def _finish_topk(
@@ -406,15 +387,11 @@ def _finish_topk(
 ) -> list[tuple[int, float]]:
     if docs.size == 0:
         return []
-    uniq, sums = _agg_topk(docs, partials)
+    uniq, sums = _sum_by_doc(docs, partials)
     if tombs.size:
         keep = ~np.isin(uniq, tombs)
         uniq, sums = uniq[keep], sums[keep]
-    if uniq.size == 0:
-        return []
-    # top-k by (score desc, doc_ord asc): lexsort on (-score, doc)
-    order = np.lexsort((uniq, -sums))[:top_k]
-    return [(int(uniq[i]), float(-sums[i])) for i in order]
+    return [(int(uniq[i]), float(-sums[i])) for i in top_k_order(sums, uniq, top_k)]
 
 
 def embeddings_bytes(store: IndexStore) -> int:
@@ -474,8 +451,8 @@ def semantic_topk_local(
     first, reference semantics (zero-norm → 0.0). Only chosen by the
     service when the embeddings table fits the local budget — a full
     embedding scan is inherently corpus-sized and belongs on executors
-    otherwise. Warm queries hit the decoded-matrix cache: one matvec +
-    top-k partition, no parquet IO."""
+    otherwise. Warm queries hit the decoded-matrix cache: one matvec and
+    a partition top-k (:func:`top_k_order`), no parquet IO."""
     if query_vector is None:
         return []
     loaded = _emb_matrix(store)
@@ -493,23 +470,7 @@ def semantic_topk_local(
     if tombs.size:
         keep = ~np.isin(docs, tombs)
         docs, cos = docs[keep], cos[keep]
-    if docs.size == 0:
-        return []
-    k = min(top_k, docs.size)
-    # partial select then exact order — avoids a full sort of the corpus
-    # (slots past k in an argpartition are arbitrary, so taking exactly
-    # k is as good as any wider slice; the kth-tie re-check below covers
-    # the only boundary case)
-    cand = np.argpartition(-cos, k - 1)[:k]
-    order = cand[np.lexsort((docs[cand], -cos[cand]))][:k]
-    # ties at the k-th score across the partition boundary: argpartition
-    # guarantees the top-k VALUES are inside the partition, but equal
-    # values may be ordered arbitrarily — re-check with a stable rule
-    kth = cos[order[k - 1]]
-    if (cos == kth).sum() > (cos[order[:k]] == kth).sum():
-        full = np.lexsort((docs, -cos))[:k]
-        order = full
-    return [(int(docs[i]), float(cos[i])) for i in order[:k]]
+    return [(int(docs[i]), float(cos[i])) for i in top_k_order(cos, docs, top_k)]
 
 
 # Cached per-file row-group [min,max] doc_ord ranges for the chunks

@@ -1,12 +1,13 @@
-"""Shared block-max WAND bound math for both execution paths.
+"""Shared block-max bound math for both execution paths.
 
-The distributed plan (operators/bm25._prune_blocks) and the coordinator
-short-circuit (operators/local_exec.bm25_topk_local) must prune with the
-IDENTICAL upper-bound formula, seed-block selection, and keep test — a
-drift between the two dialects silently desyncs their rankings. This
-module is the single source of truth; each path supplies only its own
-θ computation (a Spark job vs a numpy aggregation) and its own block
-keying.
+The distributed plan (operators/bm25._prune_blocks) uses it for exact
+WAND pruning and for the posting budget's range closure; the coordinator
+scorer (operators/local_exec.bm25_topk_local) decodes exactly under the
+budget and uses it only for the range closure over it. Both engines must
+bound and order blocks with the IDENTICAL formula — a drift between the
+two silently desyncs their budgeted results. This module is the single
+source of truth; each path supplies only its own block reads (and, for
+pruning, the distributed path its own θ job).
 
 Bound: UB(B_t) = idf_t · wtf(block_max_tf, block_min_dl, avgdl) — wtf is
 monotone ↑ in tf and ↓ in dl, so the block's stored extremes bound every

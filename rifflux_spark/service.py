@@ -94,6 +94,11 @@ class SearchService:
     def lexical(
         self, query: str, top_k: int, prune: bool = True, engine: str = "auto"
     ) -> list[dict[str, Any]]:
+        """BM25 top-k over the posting blocks, on the coordinator when the
+        query's Σdf fits ``LOCAL_EXEC_MAX_POSTINGS`` and on Spark otherwise.
+        ``prune`` switches the distributed plan's block-max WAND pruning
+        and affects only the Spark route: the coordinator scorer decodes
+        every matching block (the posting budget applies on both)."""
         if engine not in {"auto", "local", "spark"}:
             raise ValueError(f"unknown engine: {engine}")
         with self.store.read_snapshot():
@@ -114,22 +119,16 @@ class SearchService:
                 <= self.LOCAL_EXEC_MAX_POSTINGS
             )
             if use_local:
-                return self._lexical_local(query, top_k, prune=prune)
+                return self._local_rows(
+                    local_exec.bm25_topk_local(
+                        self.store, query, top_k, self.config, cstats=self._corpus_stats()
+                    )
+                )
         topk = bm25_topk(
             self.spark, self.store, query, top_k, self.config,
             prune=prune, cstats=self._corpus_stats(),
         )
         return self._spark_rows(topk)
-
-    def _lexical_local(self, query: str, top_k: int, prune: bool = True) -> list[dict[str, Any]]:
-        from rifflux_spark.operators.local_exec import bm25_topk_local
-
-        return self._local_rows(
-            bm25_topk_local(
-                self.store, query, top_k, self.config,
-                cstats=self._corpus_stats(), prune=prune,
-            )
-        )
 
     def phrase(
         self, query: str, top_k: int = 10, engine: str = "auto"

@@ -1,9 +1,8 @@
 """Impact-ordered evaluation gates (round-4 verdict #3):
 
-- exactness invariants: prune on/off and the impact-ordered wave path
-  return identical rankings and bit-identical scores per path (float
-  summation order is restored to the full-decode order before the final
-  aggregation);
+- exactness invariants: the distributed plan's prune on/off return
+  identical rankings and bit-identical scores, and the coordinator's
+  full decode matches the distributed plain scan;
 - ``lexical_budget_postings``: under-budget queries are EXACT; over-
   budget (stopword-class) queries return the impact-ordered range-
   closure approximation whose SCORES are exact (every returned doc has
@@ -67,18 +66,18 @@ def _rare_query(spark, store) -> str:
     return " ".join(r["term"] for r in rows)
 
 
-def test_prune_and_wave_invariance(spark, store) -> None:
+def test_prune_invariance_and_coordinator_matches_scan(spark, store) -> None:
     from rifflux_spark.operators.bm25 import bm25_topk
     from rifflux_spark.operators.local_exec import bm25_topk_local
 
     for q in (_stopword_query(spark, store), _rare_query(spark, store)):
-        # min_blocks_to_prune=1 forces the impact-ordered machinery on
-        a = bm25_topk_local(store, q, top_k=10, config=CONFIG, prune=True, min_blocks_to_prune=1)
-        b = bm25_topk_local(store, q, top_k=10, config=CONFIG, prune=False)
-        assert a == b, q
         s1 = [(r["doc_ord"], r["bm25_score"]) for r in bm25_topk(spark, store, q, 10, CONFIG, prune=True, min_blocks_to_prune=1).collect()]
         s2 = [(r["doc_ord"], r["bm25_score"]) for r in bm25_topk(spark, store, q, 10, CONFIG, prune=False).collect()]
         assert s1 == s2, q
+        # the coordinator decodes every block: it must equal the plain scan
+        local = bm25_topk_local(store, q, top_k=10, config=CONFIG)
+        assert [d for d, _ in local] == [d for d, _ in s2], q
+        assert all(abs(a[1] - b[1]) < 1e-12 for a, b in zip(local, s2)), q
 
 
 def test_under_budget_queries_stay_exact(spark, store) -> None:
@@ -100,9 +99,7 @@ def test_budgeted_scores_are_exact_and_paths_agree(spark, store) -> None:
     assert total > BUDGET.lexical_budget_postings, "probe not over budget"
 
     exact = dict(bm25_topk_local(store, q, top_k=10_000, config=CONFIG))
-    got = bm25_topk_local(
-        store, q, top_k=10, config=BUDGET, min_blocks_to_prune=1
-    )
+    got = bm25_topk_local(store, q, top_k=10, config=BUDGET)
     assert got, "budgeted mode returned nothing"
     for doc, score in got:
         # every returned doc's score equals its EXACT full score — the
@@ -139,6 +136,39 @@ def test_default_config_budget_is_on_and_under_budget_exact(spark, store) -> Non
         assert bm25_topk_local(store, q, top_k=10, config=CONFIG) == bm25_topk_local(
             store, q, top_k=10, config=exact
         )
+
+
+def test_budget_caps_queries_below_min_blocks_to_prune(spark, store) -> None:
+    """The budget applies at any block count: an over-budget query with
+    fewer blocks than the default ``min_blocks_to_prune`` (64) is capped,
+    and identically on both engines."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from rifflux_spark.operators.bm25 import bm25_topk
+    from rifflux_spark.operators.local_exec import bm25_topk_local
+
+    t = pq.ParquetDataset([str(f) for f in store.data_files("postings")]).read(
+        columns=["term", "n_docs"]
+    )
+    per = t.group_by("term").aggregate([("n_docs", "count"), ("n_docs", "sum")])
+    per = per.filter(
+        pc.and_(pc.greater(per["n_docs_count"], 8), pc.less(per["n_docs_count"], 64))
+    ).sort_by([("n_docs_sum", "descending"), ("term", "ascending")])
+    assert per.num_rows, "no term with 8-63 blocks"
+    q = per["term"][0].as_py()
+    cfg = dataclasses.replace(CONFIG, lexical_budget_postings=per["n_docs_sum"][0].as_py() // 4)
+
+    exact = dict(bm25_topk_local(store, q, top_k=10_000, config=CONFIG))
+    got = bm25_topk_local(store, q, top_k=10_000, config=cfg)
+    assert 0 < len(got) < len(exact), "the budget did not cap the query"
+    assert all(abs(score - exact[doc]) < 1e-12 for doc, score in got)
+    spark_got = [
+        (r["doc_ord"], r["bm25_score"])
+        for r in bm25_topk(spark, store, q, 10_000, cfg).collect()
+    ]
+    assert [d for d, _ in spark_got] == [d for d, _ in got]
+    assert all(abs(a[1] - b[1]) < 1e-12 for a, b in zip(spark_got, got))
 
 
 def test_budget_ranges_caps_decoded_postings() -> None:
@@ -220,7 +250,7 @@ def test_prune_false_with_budget_matches_local_contract(spark, store) -> None:
     """prune=False + budget: an over-budget query still applies the
     budget (both engines agree on the doc set); an under-budget query
     is a straight full scan — _prune_blocks must be a no-op, mirroring
-    the coordinator path's `not prune and not over_budget` branch."""
+    the coordinator path's exact decode under the budget."""
     from rifflux_spark.operators import bm25 as bm25mod
     from rifflux_spark.operators.local_exec import bm25_topk_local, local_df
 
@@ -230,9 +260,7 @@ def test_prune_false_with_budget_matches_local_contract(spark, store) -> None:
     assert sum(local_df(store, sorted(set(under_q.split()))).values()) <= BUDGET.lexical_budget_postings
 
     for q in (over_q, under_q):
-        got_local = bm25_topk_local(
-            store, q, top_k=10, config=BUDGET, prune=False, min_blocks_to_prune=1
-        )
+        got_local = bm25_topk_local(store, q, top_k=10, config=BUDGET)
         got_spark = [
             (r["doc_ord"], r["bm25_score"])
             for r in bm25mod.bm25_topk(
