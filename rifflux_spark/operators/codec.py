@@ -100,11 +100,12 @@ def decode_varbyte(data: bytes, n: int | None = None) -> np.ndarray:
     """Decode LEB128 bytes back to uint64 (vectorized).
 
     Hot-path shapes get O(1)-dispatch fast lanes: posting payloads are
-    overwhelmingly uniform-width (stopword gaps and tfs are 1 byte,
-    dls 2 bytes), where the general scatter machinery (value-index
-    cumsum + bitwise_or.at) costs ~5× the arithmetic. The uniform lanes
-    are pure slicing + one shift-or; mixed streams fall through to the
-    general path. Identical outputs by construction (fuzz-pinned)."""
+    overwhelmingly uniform-width (stopword gaps and tfs are 1 byte),
+    where even the general gather lane costs several times the
+    arithmetic. The uniform lanes are pure slicing + one shift-or;
+    mixed streams (dls, ~1.3 bytes a value) take the general lane.
+    Identical outputs by construction (fuzz-pinned against a scalar
+    decoder in tests/test_codec.py)."""
     if not data:
         if n:  # empty payload must not silently satisfy an n>0 contract
             raise ValueError(f"decoded 0 values, expected {n}")
@@ -115,7 +116,7 @@ def decode_varbyte(data: bytes, n: int | None = None) -> np.ndarray:
         # trailing value would otherwise be silently dropped
         raise ValueError("truncated varbyte stream (trailing continuation bit)")
     is_cont = raw >= 0x80  # continuation bit set
-    n_vals = int(raw.size - int(is_cont.sum()))
+    n_vals = raw.size - int(np.count_nonzero(is_cont))
     if n is not None and n_vals != n:
         raise ValueError(f"decoded {n_vals} values, expected {n}")
     # fast lane: every value single-byte
@@ -128,22 +129,26 @@ def decode_varbyte(data: bytes, n: int | None = None) -> np.ndarray:
             out = (raw[0::2] & np.uint8(0x7F)).astype(np.uint64)
             out |= raw[1::2].astype(np.uint64) << np.uint64(7)
             return out
-    # general lane: one gather pass per byte of significance (maxlen is
-    # tiny — ≤3 for doc gaps, ≤10 ever), no scatter, no per-byte index
-    # arrays. ~10× the old bitwise_or.at formulation on mixed streams.
-    is_last = ~is_cont
-    ends = np.flatnonzero(is_last)
+    # general lane: one full-width gather per byte of significance
+    # (maxlen is tiny — ≤3 for doc gaps and dls, ≤10 ever). Byte j of a
+    # value shorter than j+1 bytes re-reads its last byte (clamped
+    # index) and is multiplied away, so no pass indexes by a mask
+    # (masked scatter made this lane ~3.5× slower on a dls-like stream).
+    # Values of ≤4 bytes fit 28 bits and are assembled in uint32, halving
+    # the passes' memory traffic.
+    ends = np.flatnonzero(~is_cont)
     starts = np.empty_like(ends)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
-    len_k = ends - starts + 1
-    maxlen = int(len_k.max())
+    maxlen = int((ends - starts).max()) + 1
+    acc = np.uint32 if maxlen <= 4 else np.uint64
     low7 = raw & np.uint8(0x7F)
-    out = np.zeros(n_vals, dtype=np.uint64)
-    for j in range(maxlen):
-        mask = len_k > j
-        out[mask] |= low7[starts[mask] + j].astype(np.uint64) << np.uint64(7 * j)
-    return out
+    out = low7[starts].astype(acc)
+    for j in range(1, maxlen):
+        at = starts + j
+        byte = low7[np.minimum(at, ends)] * (at <= ends)
+        out |= byte.astype(acc) << acc(7 * j)
+    return out.astype(np.uint64, copy=False)
 
 
 def bm25_wtf(tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float, b: float) -> np.ndarray:

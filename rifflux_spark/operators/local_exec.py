@@ -21,6 +21,15 @@ distributed engines do the same thing —
 coordinator-only execution for selective queries (e.g. single-node plans
 in Trino/Presto-style engines) — while bulk scans stay on the cluster.
 
+Like SQLite serving doclists and rows from its warm page cache, every
+coordinator read of postings, positions, term_stats (past the
+vocabulary cache) and chunks goes through ONE cache of decoded parquet
+row groups (``_GROUP_CACHE``: one LRU, one lock, one byte budget,
+invalidated by file signature and by the table's snapshot). It holds
+what parquet returns — posting payloads stay varbyte-encoded — so
+decode, scoring and aggregation run on every query; there is no
+per-term, per-query or result cache.
+
 The SearchService picks the path per query (``engine="auto"``): local
 when the query's total posting volume (Σ df of its terms, read from
 term_stats in milliseconds) fits the budget, Spark otherwise; semantic
@@ -30,6 +39,7 @@ routes on the embeddings table's byte size.
 from __future__ import annotations
 
 import os
+import sys
 import threading
 from collections import OrderedDict
 from pathlib import Path
@@ -54,7 +64,9 @@ from rifflux_spark.sources.tables import IndexStore
 
 def _bucket_files(store: IndexStore, table: str, buckets: set[int]) -> list[Path]:
     # manifest-level partition pruning: only the referenced buckets'
-    # current-generation files are even enumerated
+    # current-generation files are even enumerated; the row-group cache
+    # is pruned to the same snapshot first
+    _sync_groups(store, table)
     return store.partition_files(table, buckets)
 
 
@@ -68,48 +80,164 @@ _PQ_FILE_CACHE: dict[str, tuple[tuple[int, int], pq.ParquetFile]] = {}
 _PQ_FILE_CACHE_MAX = 512
 
 
-def pq_file(path) -> pq.ParquetFile:
-    """ParquetFile with a cached footer (the coordinator analog of
-    SQLite's always-open database handle)."""
+def _pq_open(path) -> tuple[tuple[int, int], pq.ParquetFile]:
+    """(file signature (mtime_ns, size), ParquetFile with a cached
+    footer) — one stat, whose signature also keys the row-group cache."""
     p = str(path)
     st = os.stat(p)
     sig = (st.st_mtime_ns, st.st_size)
     hit = _PQ_FILE_CACHE.get(p)
     if hit is not None and hit[0] == sig:
-        return hit[1]
+        return hit
     f = pq.ParquetFile(p)
     if len(_PQ_FILE_CACHE) >= _PQ_FILE_CACHE_MAX:
         _PQ_FILE_CACHE.clear()
     _PQ_FILE_CACHE[p] = (sig, f)
-    return f
+    return sig, f
+
+
+def pq_file(path) -> pq.ParquetFile:
+    """ParquetFile with a cached footer (the coordinator analog of
+    SQLite's always-open database handle)."""
+    return _pq_open(path)[1]
+
+
+# Decoded row groups of the tables the coordinator reads by key: chunks
+# by doc_ord (top-k rehydration) and postings, positions and term_stats
+# by term (every posting read). (path, row_group) → (file signature,
+# Arrow table, stable sort order of the key column, sorted keys, bytes).
+# The coordinator analog of SQLite's warm page cache, next to the
+# embedding and vocabulary caches: read from parquet, a rehydrate
+# decompressed whole chunk groups to keep ~20 rows (26 ms of a 32 ms
+# lexical query at 1k pages), and an `ingest` head query's posting read
+# decompressed ~2.8k block rows to keep ~430 (5.2–6.6 of a 17.6–19.5 ms
+# scorer call on a loaded 4-core host; 0.8–0.9 ms from this cache). Posting
+# entries hold what parquet returns — payloads still varbyte-encoded,
+# decoded and scored on every query. One LRU by decoded bytes under
+# GROUP_CACHE_MAX_BYTES; entries of files that leave their table are
+# dropped when the table's snapshot changes (_chunk_rg_state,
+# _sync_groups). The lock guards the dict only (reads happen outside
+# it), because a background auto-reindex can commit while searches are
+# being served.
+_GROUP_CACHE: OrderedDict[
+    tuple[str, int], tuple[tuple[int, int], pa.Table, np.ndarray, np.ndarray, int]
+] = OrderedDict()
+_GROUP_BYTES = 0
+_GROUP_LOCK = threading.Lock()
+# table dir → the manifest entry its cached groups were last pruned to
+_GROUP_SYNCED: dict[str, dict] = {}
+_NO_ROWS = np.empty(0, dtype=np.int64)
+
+
+def _cached_group(path: str, g: int, fsig: tuple[int, int], key: str, columns=None):
+    """(table, stable sort order of its ``key`` column, sorted keys) of
+    row group ``g`` — from the cache, or read once (``columns``, or every
+    column) and inserted."""
+    global _GROUP_BYTES
+    k = (path, g)
+    with _GROUP_LOCK:
+        hit = _GROUP_CACHE.get(k)
+        if hit is not None and hit[0] == fsig:
+            _GROUP_CACHE.move_to_end(k)
+            return hit[1], hit[2], hit[3]
+    # single-threaded decode: at 2k pages (4-core host) a cold chunks
+    # group reads as fast as with the per-column thread pool, and the
+    # allocator's high-water mark stays ~8 MB lower
+    t = pq_file(path).read_row_group(g, columns=columns, use_threads=False)
+    col = t.column(key)
+    order = pc.sort_indices(col).to_numpy().astype(np.int64)  # stable
+    sorted_col = col.take(order)
+    if pa.types.is_integer(col.type):
+        keys, words = sorted_col.to_numpy(), []
+    else:
+        # an object array whose rows share one str per distinct term (a
+        # head term spans many block rows)
+        enc = sorted_col.combine_chunks().dictionary_encode()
+        words = enc.dictionary.to_numpy(zero_copy_only=False)
+        keys = words[enc.indices.to_numpy()]
+    nbytes = t.nbytes + order.nbytes + keys.nbytes + sum(map(sys.getsizeof, words))
+    with _GROUP_LOCK:
+        old = _GROUP_CACHE.pop(k, None)
+        if old is not None:
+            _GROUP_BYTES -= old[4]
+        _GROUP_CACHE[k] = (fsig, t, order, keys, nbytes)
+        _GROUP_BYTES += nbytes
+        # least recently used first; a group alone past the budget is
+        # served, not kept
+        while _GROUP_BYTES > GROUP_CACHE_MAX_BYTES:
+            _GROUP_BYTES -= _GROUP_CACHE.popitem(last=False)[1][4]
+    return t, order, keys
+
+
+def _group_rows(path: str, g: int, fsig: tuple[int, int], key: str, want: np.ndarray, columns=None):
+    """(cached table of row group ``g``, indices of its rows whose ``key``
+    is in the sorted array ``want``, ascending — file row order)."""
+    t, order, keys = _cached_group(path, g, fsig, key, columns)
+    left = np.searchsorted(keys, want, side="left")
+    right = np.searchsorted(keys, want, side="right")
+    hits = [order[a:b] for a, b in zip(left, right) if b > a]
+    return t, np.sort(np.concatenate(hits)) if hits else _NO_ROWS
+
+
+def _drop_groups(table_dir: str, live: set[str]) -> None:
+    """Evict cached groups of files under ``table_dir`` that are no longer
+    in the table (compaction / overwrite replaced them)."""
+    global _GROUP_BYTES
+    prefix = table_dir.rstrip(os.sep) + os.sep
+    with _GROUP_LOCK:
+        for k in [k for k in _GROUP_CACHE if k[0].startswith(prefix) and k[0] not in live]:
+            _GROUP_BYTES -= _GROUP_CACHE.pop(k)[4]
+
+
+def _sync_groups(store: IndexStore, table: str) -> None:
+    """Drop cached groups of files that left ``table``'s snapshot — one
+    dict comparison while its manifest entry is unchanged. A table
+    without a manifest entry (legacy flat layout) is only revalidated
+    by file signature. Racing threads at worst prune twice."""
+    entry = store._entry(table)
+    table_dir = store.path(table)
+    if entry is None or _GROUP_SYNCED.get(table_dir) == entry:
+        return
+    _drop_groups(table_dir, {str(f) for f in store.data_files(table)})
+    if len(_GROUP_SYNCED) > 64:  # many short-lived stores (test runs)
+        _GROUP_SYNCED.clear()
+    _GROUP_SYNCED[table_dir] = entry
 
 
 def _read_filtered(files: list[Path], columns: list[str], terms: list[str]):
-    """Row-group-pruned read of term-matching rows (files are sorted by
-    term, so parquet min/max stats skip non-matching row groups)."""
+    """The rows of ``files`` whose ``term`` is in ``terms``, ``columns``
+    only: the same rows in the same order (file, then row) as a plain
+    ``read_row_groups`` + ``is_in`` filter, served from the decoded
+    row-group cache. Footer min/max statistics skip row groups that
+    cannot hold a term (files are written sorted by term); each covering
+    group's entry keeps a stable sort order of its ``term`` column, so
+    its rows are found by ``searchsorted`` — no file is assumed sorted —
+    and pulled with one ``take`` in row order (a zero-copy slice when
+    they are one run). A cold group is read once, whole, and kept still
+    varbyte-encoded: decode and scoring run on every query."""
+    want = np.array(sorted(set(terms)), dtype=object)
     tables = []
-    tset = set(terms)
     for f in files:
-        pf = pq_file(f)
+        path = str(f)
+        fsig, pf = _pq_open(path)
         md = pf.metadata
-        col_idx = {md.row_group(0).column(i).path_in_schema: i for i in range(md.num_columns)} if md.num_row_groups else {}
-        groups = []
+        term_col = md.schema.names.index("term")
         for g in range(md.num_row_groups):
-            st = md.row_group(g).column(col_idx["term"]).statistics
-            if st is None or st.min is None:
-                groups.append(g)
+            st = md.row_group(g).column(term_col).statistics
+            if st is not None and st.min is not None and not any(
+                st.min <= t <= st.max for t in want
+            ):
                 continue
-            if any(st.min <= t <= st.max for t in tset):
-                groups.append(g)
-        if not groups:
-            continue
-        # single-threaded: a query's few row groups decode as fast without
-        # the per-column thread pool, on one core instead of ~1.4
-        t = pf.read_row_groups(groups, columns=columns, use_threads=False)
-        mask = pc.is_in(t.column("term"), value_set=pa.array(terms))
-        t = t.filter(mask)
-        if t.num_rows:
-            tables.append(t)
+            t, rows = _group_rows(path, g, fsig, "term", want)
+            if not rows.size:
+                continue
+            t = t.select(columns)
+            if rows[-1] - rows[0] + 1 == rows.size:
+                # one run of rows (one term of a term-sorted group): a
+                # zero-copy slice of the cached buffers
+                tables.append(t.slice(rows[0], rows.size))
+            else:
+                tables.append(t.take(pa.array(rows)))
     if not tables:
         return None
     return pa.concat_tables(tables)
@@ -123,8 +251,8 @@ def _read_filtered(files: list[Path], columns: list[str], terms: list[str]):
 # queries resolve df lookups and prefix expansions with zero parquet IO.
 _TS_CACHE: dict[str, tuple[tuple, dict[str, int], pa.Table]] = {}
 TS_CACHE_MAX_BYTES = 64 << 20
-# decoded chunk row groups kept for rehydration (LRU; see _CHUNK_GROUP_CACHE)
-CHUNK_CACHE_MAX_BYTES = 128 << 20
+# decoded chunk and posting row groups, one LRU (see _GROUP_CACHE)
+GROUP_CACHE_MAX_BYTES = 128 << 20
 
 
 def term_stats_cached(store: IndexStore) -> tuple[dict[str, int], pa.Table] | None:
@@ -179,11 +307,6 @@ def local_df(store: IndexStore, terms: list[str]) -> dict[str, int]:
         term: int(df)
         for term, df in zip(t.column("term").to_pylist(), t.column("df_docs").to_pylist())
     }
-
-
-def local_idf(store: IndexStore, terms: list[str], n_docs: int) -> dict[str, float]:
-    """FTS5 ln-idf from the term_stats table, read coordinator-side."""
-    return {term: unit_idf(n_docs, df_t) for term, df_t in local_df(store, terms).items()}
 
 
 # dead-ord sets re-read on EVERY query would pay parquet footer parses
@@ -281,6 +404,7 @@ def bm25_topk_local(
     top_k: int = 10,
     config: EngineConfig | None = None,
     cstats: dict | None = None,
+    dfs: dict[str, int] | None = None,
 ) -> list[tuple[int, float]]:
     """Driver-side BM25 top-k: [(doc_ord, negated_score)], best first.
 
@@ -318,18 +442,24 @@ def bm25_topk_local(
     trade is coverage. Under-budget queries are exact; 0 opts back into
     exact FTS5-parity behavior at any cost. The distributed plan
     (operators/bm25.py) applies the same closure and keeps WAND pruning
-    for exact scans."""
+    for exact scans.
+
+    ``dfs`` is :func:`local_df` of the query's distinct terms when the
+    caller already looked them up (the service routes on it); it is
+    looked up here otherwise."""
     config = config or EngineConfig()
     terms = compile_query(query)
     if not terms:
         return []
     cstats = cstats or store.corpus_stats()
     n_docs, avgdl = int(cstats["n_docs"]), float(cstats["avgdl"])
-    idf = local_idf(store, sorted(set(terms)), n_docs)
+    if dfs is None:
+        dfs = local_df(store, sorted(set(terms)))
     mult: dict[str, int] = {}
     for t in terms:
         mult[t] = mult.get(t, 0) + 1
-    idf = {t: v * mult[t] for t, v in idf.items()}
+    # FTS5 ln-idf, times the term's multiplicity in the query
+    idf = {t: unit_idf(n_docs, df_t) * mult[t] for t, df_t in dfs.items()}
     if not idf:
         return []
     qterms = sorted(idf)
@@ -479,23 +609,8 @@ def semantic_topk_local(
 # Saves re-opening and re-parsing every footer on every query.
 _CHUNK_RG_CACHE: dict[str, tuple[tuple, list[tuple[str, int, int, int]]]] = {}
 
-# Decoded chunk row groups, (path, row_group) → (file signature, display
-# columns as an Arrow table, doc_ord sort order, sorted doc_ords, bytes).
-# A chunks row group holds thousands of chunks, and a top-k rehydrate
-# wants ~20 ordinals spread over every file: read from parquet, each
-# query decompresses whole groups to keep 20 rows (26 ms of a 32 ms
-# lexical query at 1k pages). The coordinator analog of SQLite's warm
-# page cache, next to the embedding and vocabulary caches. LRU-bounded
-# by decoded bytes; entries for files that leave the table are dropped
-# when the row-group index rebuilds. The lock guards the dict only (reads
-# happen outside it), because a background auto-reindex can commit while
-# searches are being served.
+# what a cached chunks group holds: the result columns, never ``tokens``
 CHUNK_DISPLAY_COLUMNS = ["doc_ord", "chunk_id", "url", "heading_path", "chunk_index", "content"]
-_CHUNK_GROUP_CACHE: OrderedDict[
-    tuple[str, int], tuple[tuple[int, int], pa.Table, np.ndarray, np.ndarray, int]
-] = OrderedDict()
-_CHUNK_GROUP_BYTES = 0
-_CHUNK_LOCK = threading.Lock()
 
 
 def _chunk_rg_state(store: IndexStore) -> tuple[tuple, list[tuple[str, int, int, int]]]:
@@ -518,7 +633,7 @@ def _chunk_rg_state(store: IndexStore) -> tuple[tuple, list[tuple[str, int, int,
                 index.append((str(f), g, -(1 << 62), 1 << 62))
             else:
                 index.append((str(f), g, int(st.min), int(st.max)))
-    _drop_chunk_groups(key, {p for p, _, _ in sig})
+    _drop_groups(key, {p for p, _, _ in sig})
     _CHUNK_RG_CACHE.clear()
     _CHUNK_RG_CACHE[key] = (sig, index)
     return sig, index
@@ -526,47 +641,6 @@ def _chunk_rg_state(store: IndexStore) -> tuple[tuple, list[tuple[str, int, int,
 
 def _chunk_rg_index(store: IndexStore) -> list[tuple[str, int, int, int]]:
     return _chunk_rg_state(store)[1]
-
-
-def _drop_chunk_groups(table_dir: str, live: set[str]) -> None:
-    """Evict cached groups of files under ``table_dir`` that are no longer
-    in the table (compaction / overwrite replaced them)."""
-    global _CHUNK_GROUP_BYTES
-    prefix = table_dir.rstrip(os.sep) + os.sep
-    with _CHUNK_LOCK:
-        for k in [k for k in _CHUNK_GROUP_CACHE if k[0].startswith(prefix) and k[0] not in live]:
-            _CHUNK_GROUP_BYTES -= _CHUNK_GROUP_CACHE.pop(k)[4]
-
-
-def _chunk_group(path: str, g: int, fsig: tuple[int, int]):
-    """(display table, doc_ord sort order, sorted doc_ords) of one row
-    group — from the cache, or read once and inserted."""
-    global _CHUNK_GROUP_BYTES
-    key = (path, g)
-    with _CHUNK_LOCK:
-        hit = _CHUNK_GROUP_CACHE.get(key)
-        if hit is not None and hit[0] == fsig:
-            _CHUNK_GROUP_CACHE.move_to_end(key)
-            return hit[1], hit[2], hit[3]
-    # single-threaded decode: at 2k pages (4-core host) the cold read
-    # takes as long as with the per-column thread pool, and the
-    # allocator's high-water mark stays ~8 MB lower
-    t = pq_file(path).read_row_group(g, columns=CHUNK_DISPLAY_COLUMNS, use_threads=False)
-    ords = t.column("doc_ord").to_numpy()
-    order = np.argsort(ords, kind="stable")
-    sorted_ords = ords[order]
-    nbytes = t.nbytes + order.nbytes + sorted_ords.nbytes
-    with _CHUNK_LOCK:
-        old = _CHUNK_GROUP_CACHE.pop(key, None)
-        if old is not None:
-            _CHUNK_GROUP_BYTES -= old[4]
-        _CHUNK_GROUP_CACHE[key] = (fsig, t, order, sorted_ords, nbytes)
-        _CHUNK_GROUP_BYTES += nbytes
-        # least recently used first; a group alone past the budget is
-        # served, not kept
-        while _CHUNK_GROUP_BYTES > CHUNK_CACHE_MAX_BYTES:
-            _CHUNK_GROUP_BYTES -= _CHUNK_GROUP_CACHE.popitem(last=False)[1][4]
-    return t, order, sorted_ords
 
 
 def rehydrate_local(
@@ -590,15 +664,9 @@ def rehydrate_local(
         hi = np.searchsorted(want, mx, side="right")
         if lo >= hi:
             continue
-        t, order, sorted_ords = _chunk_group(path, g, fsigs[path])
-        sub = want[lo:hi]
-        left = np.searchsorted(sorted_ords, sub, side="left")
-        right = np.searchsorted(sorted_ords, sub, side="right")
-        hits = [order[a:b] for a, b in zip(left, right) if b > a]
-        if not hits:
-            continue
-        # file row order, as the filtered read it replaces returned them
-        rows = np.sort(np.concatenate(hits))
-        for row in t.take(pa.array(rows)).select(cols).to_pylist():
+        t, rows = _group_rows(
+            path, g, fsigs[path], "doc_ord", want[lo:hi], CHUNK_DISPLAY_COLUMNS
+        )
+        for row in t.select(cols).take(pa.array(rows)).to_pylist():
             out[int(row["doc_ord"])] = row
     return out

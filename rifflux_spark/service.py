@@ -110,18 +110,17 @@ class SearchService:
         if engine != "spark":
             from rifflux_spark.operators import local_exec
 
-            use_local = engine == "local" or (
-                sum(
-                    local_exec.local_df(
-                        self.store, sorted(set(compile_query(query)))
-                    ).values()
-                )
-                <= self.LOCAL_EXEC_MAX_POSTINGS
+            # the routing dfs are the scorer's: one lookup per query
+            dfs = (
+                None
+                if engine == "local"
+                else local_exec.local_df(self.store, sorted(set(compile_query(query))))
             )
-            if use_local:
+            if dfs is None or sum(dfs.values()) <= self.LOCAL_EXEC_MAX_POSTINGS:
                 return self._local_rows(
                     local_exec.bm25_topk_local(
-                        self.store, query, top_k, self.config, cstats=self._corpus_stats()
+                        self.store, query, top_k, self.config,
+                        cstats=self._corpus_stats(), dfs=dfs,
                     )
                 )
         topk = bm25_topk(

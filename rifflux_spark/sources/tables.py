@@ -41,7 +41,9 @@ from rifflux_spark.sources.manifest import Manifest
 # chunks once a bucket grows to multi-GB): 8 MB keeps row groups
 # term-min/max-prunable and the read cost df-proportional at 100×
 # corpus growth, while staying far above the ~1 MB floor where footer
-# overhead starts to matter. Tests pin the mechanism by shrinking it.
+# overhead starts to matter. Warm coordinator posting reads are served
+# from local_exec's decoded row-group cache, so the bound sizes a COLD
+# read and one cache entry. Tests pin the mechanism by shrinking it.
 POSTINGS_ROW_GROUP_BYTES = 8 << 20
 
 # The chunks table is rehydration-read by doc_ord (top-k join-back on the

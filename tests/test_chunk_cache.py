@@ -73,8 +73,8 @@ def _same(got: dict, want: dict) -> bool:
 
 @pytest.fixture()
 def fresh_cache(monkeypatch):
-    monkeypatch.setattr(local_exec, "_CHUNK_GROUP_CACHE", OrderedDict())
-    monkeypatch.setattr(local_exec, "_CHUNK_GROUP_BYTES", 0)
+    monkeypatch.setattr(local_exec, "_GROUP_CACHE", OrderedDict())
+    monkeypatch.setattr(local_exec, "_GROUP_BYTES", 0)
 
 
 def _build(spark, tmp_path_factory, name: str, n_pages: int) -> tuple[IndexStore, object]:
@@ -136,19 +136,19 @@ def test_cache_stays_under_byte_bound(appended_store, fresh_cache, monkeypatch) 
     store = appended_store
     live = sorted(o for ords in _all_ords(store).values() for o in ords)
     # room for ~two decoded groups
-    one = local_exec._chunk_group(*_first_group(store))[0].nbytes
+    one = _chunk_group_nbytes(store)
     bound = 2 * one + one // 2
-    monkeypatch.setattr(local_exec, "CHUNK_CACHE_MAX_BYTES", bound)
-    monkeypatch.setattr(local_exec, "_CHUNK_GROUP_CACHE", OrderedDict())
-    monkeypatch.setattr(local_exec, "_CHUNK_GROUP_BYTES", 0)
+    monkeypatch.setattr(local_exec, "GROUP_CACHE_MAX_BYTES", bound)
+    monkeypatch.setattr(local_exec, "_GROUP_CACHE", OrderedDict())
+    monkeypatch.setattr(local_exec, "_GROUP_BYTES", 0)
     n_groups = len(local_exec._chunk_rg_index(store))
     for i in range(0, len(live), 25):
         ords = live[i : i + 25]
         assert _same(local_exec.rehydrate_local(store, ords), _plain(store, ords))
-        cache = local_exec._CHUNK_GROUP_CACHE
-        assert local_exec._CHUNK_GROUP_BYTES <= bound
-        assert local_exec._CHUNK_GROUP_BYTES == sum(e[4] for e in cache.values())
-    assert 0 < len(local_exec._CHUNK_GROUP_CACHE) < n_groups
+        cache = local_exec._GROUP_CACHE
+        assert local_exec._GROUP_BYTES <= bound
+        assert local_exec._GROUP_BYTES == sum(e[4] for e in cache.values())
+    assert 0 < len(local_exec._GROUP_CACHE) < n_groups
 
 
 def _first_group(store: IndexStore):
@@ -156,6 +156,13 @@ def _first_group(store: IndexStore):
     path, g, _, _ = index[0]
     fsig = next((m, s) for p, m, s in sig if p == path)
     return path, g, fsig
+
+
+def _chunk_group_nbytes(store: IndexStore) -> int:
+    t = local_exec._cached_group(
+        *_first_group(store), "doc_ord", local_exec.CHUNK_DISPLAY_COLUMNS
+    )[0]
+    return t.nbytes
 
 
 def test_warm_rehydrate_reads_no_row_groups(appended_store, fresh_cache, monkeypatch) -> None:
@@ -184,7 +191,7 @@ def test_apply_and_vacuum_invalidate(spark, tmp_path_factory, fresh_cache) -> No
     before = _all_ords(store)
     # warm every group of the built generation
     local_exec.rehydrate_local(store, [o for ords in before.values() for o in ords])
-    assert local_exec._CHUNK_GROUP_CACHE
+    assert local_exec._GROUP_CACHE
 
     res = apply_incremental(spark, store, _mutate(pages, 4), CONFIG, with_embeddings=False)
     assert res["tombstoned"] > 0
@@ -199,13 +206,15 @@ def test_apply_and_vacuum_invalidate(spark, tmp_path_factory, fresh_cache) -> No
     assert hits and all(MARKER in h["content"] for h in hits)
 
     # vacuum rewrites the chunks table: no entry may outlive its file
-    cached_before = {p for p, _ in local_exec._CHUNK_GROUP_CACHE}
+    # postings groups share the cache (the search above): chunks only
+    chunks_dir = store.path("chunks") + "/"
+    cached_before = {p for p, _ in local_exec._GROUP_CACHE if p.startswith(chunks_dir)}
     vacuum(spark, store, CONFIG)
     live_files = {str(f) for f in store.data_files("chunks")}
     assert cached_before - live_files, "vacuum should replace cached files"
     final = [o for ords in _all_ords(store).values() for o in ords]
     assert _same(local_exec.rehydrate_local(store, final), _plain(store, final))
-    cached = {p for p, _ in local_exec._CHUNK_GROUP_CACHE}
+    cached = {p for p, _ in local_exec._GROUP_CACHE if p.startswith(chunks_dir)}
     assert cached <= live_files
 
 
@@ -220,10 +229,10 @@ def test_concurrent_rehydrates_keep_cache_consistent(appended_store, fresh_cache
     live = sorted(o for ords in _all_ords(store).values() for o in ords)
     batches = [random.Random(i).sample(live, 20) for i in range(12)]
     want = [_plain(store, b) for b in batches]
-    bound = 3 * local_exec._chunk_group(*_first_group(store))[0].nbytes
-    monkeypatch.setattr(local_exec, "CHUNK_CACHE_MAX_BYTES", bound)
-    monkeypatch.setattr(local_exec, "_CHUNK_GROUP_CACHE", OrderedDict())
-    monkeypatch.setattr(local_exec, "_CHUNK_GROUP_BYTES", 0)
+    bound = 3 * _chunk_group_nbytes(store)
+    monkeypatch.setattr(local_exec, "GROUP_CACHE_MAX_BYTES", bound)
+    monkeypatch.setattr(local_exec, "_GROUP_CACHE", OrderedDict())
+    monkeypatch.setattr(local_exec, "_GROUP_BYTES", 0)
     errors: list[str] = []
 
     def worker(w: int) -> None:
@@ -244,6 +253,6 @@ def test_concurrent_rehydrates_keep_cache_consistent(appended_store, fresh_cache
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
     assert errors == []
-    cache = local_exec._CHUNK_GROUP_CACHE
-    assert local_exec._CHUNK_GROUP_BYTES == sum(e[4] for e in cache.values())
-    assert local_exec._CHUNK_GROUP_BYTES <= bound
+    cache = local_exec._GROUP_CACHE
+    assert local_exec._GROUP_BYTES == sum(e[4] for e in cache.values())
+    assert local_exec._GROUP_BYTES <= bound
