@@ -406,9 +406,7 @@ def run_scaling_pair(
     return summary, detail
 
 
-def run_stress(
-    spark, n_docs: int, page_scale: int, cpus: int, with_positional: bool = True
-) -> dict:
+def run_stress(spark, n_docs: int, page_scale: int, cpus: int) -> dict:
     """Scale-robustness block: a one-shot large-corpus build at full
     parallelism + the worst-case (stopword-class, df≈100%) and a
     PROVABLY selective query against the built index — the
@@ -503,29 +501,6 @@ def run_stress(
         )
     )
 
-    # positional postings at stress scale: resume the SAME build with
-    # store_positions=True (build_id ignores the flag, so only the
-    # positions stage runs — its wall time is the opt-in storage cost),
-    # then re-time the SAME phrase probe on the poslist-intersection
-    # path for a like-for-like recheck-vs-positional comparison.
-    # Skipped for the scale2 growth point, which keeps only the
-    # build/stopword/selective numbers — the positional rebuild is the
-    # most expensive step and would be pure discarded wall-clock there.
-    positions_build_sec = phrase_positional_sec = None
-    if with_positional:
-        from rifflux_spark.plans.build import build_index as _bi
-
-        t0 = time.perf_counter()
-        _bi(
-            spark, pages, index_dir,
-            _dc.replace(CONFIG, store_positions=True),
-            with_embeddings=False,
-        )
-        positions_build_sec = time.perf_counter() - t0
-        service.phrase(" ".join(rare_terms[:2]), top_k=10)  # warm the path
-        phrase_positional_sec = best_of(
-            lambda: service.phrase(" ".join(rare_terms[:2]), top_k=10)
-        )
     shutil.rmtree(index_dir, ignore_errors=True)
     shutil.rmtree(pages_dir, ignore_errors=True)
     return {
@@ -538,14 +513,6 @@ def run_stress(
         "stopword_budgeted_sec": round(stopword_budgeted_sec, 4),
         "selective_query_sec": round(selective_sec, 4),
         "phrase_query_sec": round(phrase_sec, 4),
-        **(
-            {
-                "phrase_positional_sec": round(phrase_positional_sec, 4),
-                "positions_build_sec": round(positions_build_sec, 2),
-            }
-            if with_positional
-            else {}
-        ),
         "fts_query_sec": round(fts_sec, 4),
         "selective_terms": rare_df,
     }
@@ -678,7 +645,7 @@ def main() -> None:
         # (FTS5's own full-scan behavior), the BUDGETED mode stays ~flat
         stress2_docs = int(os.environ.get("SPARK_GRAFT_STRESS_DOCS2", str(stress_docs * 2)))
         if stress2_docs > 0:
-            s2 = run_stress(spark, stress2_docs, page_scale, cpus, with_positional=False)
+            s2 = run_stress(spark, stress2_docs, page_scale, cpus)
             stress["scale2"] = {
                 k: s2[k]
                 for k in (

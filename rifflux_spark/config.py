@@ -51,12 +51,6 @@ class EngineConfig:
     # queries of that length read ONE posting list instead of expanding
     # against the vocabulary. Opt-in — () builds none.
     prefix_lengths: tuple[int, ...] = ()
-    # positional postings (operators/positions.py): opt-in extra table
-    # of column-strided token positions per (term, doc), riding the same
-    # block codec + (term_bucket, salt) layout; phrase/NEAR queries then
-    # narrow by position intersection with zero chunk-table access.
-    # Storage cost ~4 bytes/occurrence — FTS5's own poslist trade.
-    store_positions: bool = False
     # posting budget for lexical top-k: impact-ordered evaluation stops
     # after decoding this many postings. Stopword-class queries (clamped
     # uniform idfs — provably unprunable by any bound; FTS5 scans them
@@ -113,7 +107,6 @@ class EngineConfig:
                 for x in _env("PREFIX_LENGTHS", "").split(",")
                 if x.strip()
             ),
-            store_positions=_env("STORE_POSITIONS", "0") in ("1", "true", "True"),
             lexical_budget_postings=int(_env("LEXICAL_BUDGET_POSTINGS", "1000000")),
             salt_range=int(_env("SALT_RANGE", str(1 << 20))),
             n_term_buckets=int(_env("N_TERM_BUCKETS", "32")),

@@ -281,57 +281,3 @@ def decode_block(block: dict) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     dls = decode_varbyte(block["dls"], n).astype(np.int64)
     return doc_ords, tfs, dls
 
-
-# ---------------------------------------------------------------- positions
-#
-# Positional postings (opt-in, ``EngineConfig.store_positions``): per
-# (term, doc) the sorted token positions, encoded column-aware — a token
-# at offset ``i`` of column ``c`` is stored as ``c * POS_COL_STRIDE + i``
-# (FTS5 stores (column, offset) pairs in its poslists; the stride
-# flattens the pair into one monotone int so phrase adjacency ``p+1``
-# and NEAR windows can never cross a column boundary, matching FTS5's
-# per-column match semantics). The per-doc position list is delta-
-# encoded (first value absolute) through the same LEB128 codec as the
-# doc gaps, so the whole block decodes in one vectorized pass with a
-# segmented cumsum.
-
-POS_COL_STRIDE = 1 << 20  # > max dl (65535) + any sane NEAR distance
-
-
-def encode_positions_flat(pos_flat: np.ndarray, counts: np.ndarray) -> bytes:
-    """Delta-encode per-doc position segments (first absolute) and
-    varbyte the result. ``pos_flat`` = concatenated per-doc sorted
-    position lists, ``counts`` = positions per doc."""
-    pos_flat = np.asarray(pos_flat, dtype=np.int64)
-    counts = np.asarray(counts, dtype=np.int64)
-    if pos_flat.size == 0:
-        return b""
-    deltas = np.empty_like(pos_flat)
-    deltas[0] = pos_flat[0]
-    deltas[1:] = np.diff(pos_flat)
-    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    starts = starts[starts < pos_flat.size]  # empty trailing segments have no first
-    deltas[starts] = pos_flat[starts]  # segment-first values stay absolute
-    if (np.delete(deltas, starts) <= 0).any():
-        raise ValueError("positions must be strictly increasing within a doc")
-    return encode_varbyte(deltas)
-
-
-def decode_positions_flat(data: bytes, counts: np.ndarray) -> np.ndarray:
-    """Inverse of :func:`encode_positions_flat` → flat absolute
-    positions, segmented by ``counts`` (segmented cumsum — the same
-    trick as :func:`decode_blocks_batch`, no per-doc Python loop)."""
-    counts = np.asarray(counts, dtype=np.int64)
-    total = int(counts.sum())
-    deltas = decode_varbyte(data, total).astype(np.int64)
-    if total == 0:
-        return deltas
-    g = np.cumsum(deltas)
-    ends = np.cumsum(counts)
-    nz = counts > 0
-    # base to subtract for each nonzero segment = cumsum at the end of
-    # the previous NONEMPTY segment (0 for the first)
-    seg_ends = ends[nz]
-    base = np.concatenate(([0], g[seg_ends[:-1] - 1]))
-    out = g - np.repeat(base, counts[nz])
-    return out

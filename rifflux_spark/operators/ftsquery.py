@@ -28,14 +28,39 @@ matches across the column boundary, and overlapping instances each
 count. Phrase mode (``SearchService.phrase``, operators/phrase.py) is
 a one-phrase MATCH through this module.
 
-Why recheck instead of positional postings: positions would grow the
-posting payload ~4x for every query (the build's single exchange is
-bandwidth-bound, SURVEY §4) to speed up only the phrase minority, and
-the recheck stage is bounded by min-df. The documented degradation is
-stopword-only phrases, where candidates approach corpus size — the same
-regime where the term path already pays its stopword worst case.
-Positions stay opt-in (``EngineConfig.store_positions``,
-operators/positions.py) for indexes that want zero-rehydration phrases.
+The recheck is the only verifier of phrase, NEAR, column-filtered and
+anchored units on both engines. The FTS5 semantics (adjacency within
+one column, overlapping instances, NEAR participation) do not depend on
+how positions are stored: the recheck derives every instance from the
+tokenized column text. Positional postings (FTS5-style poslists in an
+opt-in sibling table) were a second verifier of the same semantics and
+were removed after this crossover. It was measured with perfbench's
+corpus and config on a shared 4-vCPU host, one process per scale, the
+same queries against the same index without and with positions; each
+cell is the median over 5 queries of each query's median coordinator
+time. Selective = the rarer token's df ≤ 2% of chunks, high-df = both
+tokens' df ≥ 20%, NEAR distance 10. Rows were rank- and score-identical:
+
+| scale | verifier | selective phrase | high-df phrase | selective NEAR | high-df NEAR |
+|---|---|---|---|---|---|
+| 1k pages (12,952 chunks), 7 reps | recheck | 2.0 ms | 89 ms | 3.1 ms | 283 ms |
+| 1k pages (12,952 chunks), 7 reps | positions | 4.1 ms | 155 ms | 7.1 ms | 206 ms |
+| 20k pages (259,856 chunks), 5 reps | recheck | 500 ms | 2.31 s | 590 ms | 3.01 s |
+| 20k pages (259,856 chunks), 5 reps | positions | 35 ms | 4.70 s | 69 ms | 1.76 s |
+
+Positions grew the index by 14.5% at 1k pages (index bytes per text
+byte 4.381 → 5.014, about three times that metric's 5% bound) and by
+12.9% at 20k pages (4.290 → 4.843). Forced-Spark at 1k pages (median
+of 3 queries × 3 reps): high-df phrase 1.90 s recheck, 2.16 s
+positions; high-df NEAR 3.19 s and 3.29 s. So positions are a trade,
+not a win: at 20k pages they answer selective phrase/NEAR 8–14x faster
+(the recheck rehydrates and re-tokenizes every candidate chunk;
+positions read only the tokens' position lists), high-df NEAR 1.7x
+faster and high-df phrase 2x slower. At 1k pages, the benchmark's
+scale, the recheck wins three of the four classes. The recheck stage
+is bounded by min-df; its documented degradation is stopword-only
+phrases, where candidates approach corpus size — the same regime where
+the term path already pays its stopword worst case.
 
 Scale shape (distributed): each unit yields a df-bounded
 ``(doc_ord, unit_id, tf, dl)`` frame — term/prefix units straight from
@@ -73,11 +98,7 @@ from rifflux_spark.functions.ftsparse import (
     parse_fts,
 )
 from rifflux_spark.functions.tokenizer import tokenize
-from rifflux_spark.operators.codec import (
-    POS_COL_STRIDE,
-    bm25_wtf,
-    decode_posting_arrow,
-)
+from rifflux_spark.operators.codec import bm25_wtf, decode_posting_arrow
 from rifflux_spark.sources.tables import IndexStore
 
 # vocabulary expansion guard: a 1-letter prefix over a web-scale vocab
@@ -257,75 +278,6 @@ def _units_needing(units: list[Unit], store: IndexStore):
 # --------------------------------------------------------------- local path
 
 
-class _PositionalCtx:
-    """Local-path positional instance provider (operators/positions.py):
-    when the index stores poslists, recheck-class units (multi-token /
-    column-filtered / anchored / prefix-tail-in-phrase) and NEAR members
-    compute their instances from position intersection instead of
-    rehydrated text. A unit falls back to text recheck when its prefix
-    tail cannot be enumerated (marker-indexed length whose expansion
-    overflows) — correctness is path-independent, pinned in
-    tests/test_positional_phrase.py and the NEAR identity suite."""
-
-    # NEAR distances at or past this cannot be proven column-local by
-    # the stride encoding — fall back to text recheck (never hit by
-    # sane queries; FTS5 default N is 10)
-    MAX_NEAR = POS_COL_STRIDE // 2
-
-    def __init__(self, store: IndexStore, units: list[Unit], groups: list) -> None:
-        self._pos: dict[str, dict[int, "np.ndarray"]] = {}
-        self._slots: dict[int, list[list[str]]] = {}
-        if not store.has_positions():
-            return
-        needed: set[str] = set()
-        for i, u in enumerate(units):
-            in_near = groups[i] is not None
-            recheck_class = not (
-                len(u.tokens) == 1 and u.cols is None and not u.anchored
-            )
-            if not (in_near or recheck_class):
-                continue
-            slots = _unit_slot_terms(store, u)
-            if slots is None:
-                continue  # expansion overflow — unit stays on text recheck
-            self._slots[i] = slots
-            for s in slots:
-                needed.update(s)
-        if self._slots:
-            from rifflux_spark.operators.positions import local_positions
-
-            self._pos, _ = local_positions(store, sorted(needed))
-
-    def usable(self, i: int) -> bool:
-        return i in self._slots
-
-    def starts(self, i: int, unit: Unit, doc: int) -> "np.ndarray":
-        """Strided instance starts of unit ``i`` in ``doc`` (anchored
-        applied; column filtering is the caller's, since NEAR scopes it
-        group-wide)."""
-        from rifflux_spark.operators.positions import phrase_instance_starts
-
-        slot_arrays: list[np.ndarray] = []
-        for terms in self._slots[i]:
-            arrs = [
-                a
-                for a in (self._pos.get(t, {}).get(doc) for t in terms)
-                if a is not None
-            ]
-            if not arrs:
-                return np.empty(0, dtype=np.int64)
-            slot_arrays.append(
-                arrs[0] if len(arrs) == 1 else np.unique(np.concatenate(arrs))
-            )
-        starts = phrase_instance_starts(slot_arrays)
-        if unit.anchored and starts.size:
-            starts = starts[starts % POS_COL_STRIDE == 0]
-        return starts
-
-    def n_slots(self, i: int) -> int:
-        return len(self._slots[i])
-
-
 _EMPTY = np.empty(0, dtype=np.int64)
 
 
@@ -404,7 +356,6 @@ def fts_topk_local(
     postings, (dl_docs, dl_vals) = _local_postings(store, all_terms)
     tombs = set(int(x) for x in local_tombstones(store))
     groups = leaf_groups(ast)
-    posctx = _PositionalCtx(store, units, groups)
 
     rehydrated: dict[int, dict] = {}
 
@@ -426,7 +377,7 @@ def fts_topk_local(
     def docs_of(term: str) -> np.ndarray:
         return postings[term][0] if term in postings else _EMPTY
 
-    def standalone_map(i: int, u: Unit, terms: list[str]) -> dict[int, int]:
+    def standalone_map(u: Unit, terms: list[str]) -> dict[int, int]:
         from rifflux_spark.operators.prefix import tail_match_terms
 
         # postings carry COMBINED-column tf, so only unfiltered
@@ -460,18 +411,8 @@ def fts_topk_local(
         for a in full[1:]:
             cand_arr = np.intersect1d(cand_arr, a, assume_unique=True)
         cand = cand_arr.tolist()
-        counts: dict[int, int] = {}
-        if posctx.usable(i):
-            # positional recheck: instance starts from poslist
-            # intersection — no rehydration
-            from rifflux_spark.operators.positions import filter_unit_starts
-
-            for d in cand:
-                starts = filter_unit_starts(posctx.starts(i, u, d), False, u.cols)
-                if starts.size:
-                    counts[d] = int(starts.size)
-            return counts
         rehydrate(cand)
+        counts: dict[int, int] = {}
         for d in cand:
             c = rehydrated.get(d)
             if c is None:
@@ -482,8 +423,7 @@ def fts_topk_local(
         return counts
 
     standalone: list[dict[int, int]] = [
-        standalone_map(i, u, terms)
-        for i, (u, terms) in enumerate(zip(units, per_unit_terms))
+        standalone_map(u, terms) for u, terms in zip(units, per_unit_terms)
     ]
     if tombs:
         standalone = [
@@ -495,7 +435,7 @@ def fts_topk_local(
     # ones (per-column clusters, df stays the standalone row count)
     unit_tf: list[dict[int, int]] = list(standalone)
     done_groups: set[int] = set()
-    for gi, g in enumerate(groups):
+    for g in groups:
         if g is None or id(g) in done_groups:
             continue
         done_groups.add(id(g))
@@ -505,26 +445,7 @@ def fts_topk_local(
             standalone[i] for i in idxs
         ) else set()
         trimmed: list[dict[int, int]] = [{} for _ in idxs]
-        if cand and all(posctx.usable(ii) for ii in idxs) and g.n < _PositionalCtx.MAX_NEAR:
-            # positional NEAR: strided instances make cross-column
-            # clusters numerically infeasible, so ONE near_trim over
-            # the combined lists equals the per-column sum
-            from rifflux_spark.operators.positions import filter_unit_starts
-
-            allowed = members[0].cols
-            for d in cand:
-                inst = []
-                for j, ii in enumerate(idxs):
-                    s = filter_unit_starts(
-                        posctx.starts(ii, members[j], d), False, allowed
-                    )
-                    m = posctx.n_slots(ii)
-                    inst.append([(int(p), int(p) + m - 1) for p in s])
-                counts = near_trim(inst, g.n)
-                if all(c > 0 for c in counts):
-                    for j, cnt in enumerate(counts):
-                        trimmed[j][d] = cnt
-        elif cand:
+        if cand:
             rehydrate(sorted(cand))
             allowed = members[0].cols or COLUMNS
             for d in cand:
@@ -671,18 +592,10 @@ def _unit_frames(
             )
             .select("doc_ord", "unit_id", "tf", "dl")
         )
-    has_pos = store.has_positions()
     for i, (u, terms) in enumerate(zip(units, per_unit_terms)):
         if len(u.tokens) == 1 and u.cols is None and not u.anchored:
             continue
-        f = (
-            _phrase_unit_frame_positional(spark, store, u, sid(i))
-            if has_pos
-            else None
-        )
-        if f is None:
-            f = _phrase_unit_frame(spark, store, u, terms, sid(i))
-        frames.append(f)
+        frames.append(_phrase_unit_frame(spark, store, u, terms, sid(i)))
     # one trimmed frame per distinct NEAR group
     done: set[int] = set()
     for i, g in enumerate(groups):
@@ -690,16 +603,9 @@ def _unit_frames(
             continue
         done.add(id(g))
         idxs = [j for j, gg in enumerate(groups) if gg is g]
-        f = (
-            _near_group_frame_positional(spark, store, g, idxs)
-            if has_pos
-            else None
+        frames.append(
+            _near_group_frame(spark, store, g, idxs, [per_unit_terms[j] for j in idxs])
         )
-        if f is None:
-            f = _near_group_frame(
-                spark, store, g, idxs, [per_unit_terms[j] for j in idxs]
-            )
-        frames.append(f)
     if not frames:
         return None
     out = frames[0]
@@ -910,198 +816,6 @@ def _phrase_unit_frame(
     return cand_chunks.select("doc_ord", "content", "heading_path", "dl").mapInPandas(
         verify, schema=_UNIT_ROW
     )
-
-
-def _unit_slot_terms(store: IndexStore, unit: Unit) -> list[list[str]] | None:
-    """Per-slot index terms for positional evaluation: exact tokens are
-    their own slot; a prefix tail expands against the vocabulary
-    (markers carry no positions). None = not positionally evaluable
-    (expansion overflow) — caller falls back to text recheck."""
-    from rifflux_spark.operators.prefix import is_marker
-
-    slots: list[list[str]] = [[t] for t in (unit.tokens[:-1] if unit.prefix else unit.tokens)]
-    if unit.prefix:
-        try:
-            tail = [
-                t
-                for t in expand_prefix_local(store, unit.tokens[-1])
-                if not is_marker(t)
-            ]
-        except FtsSyntaxError:
-            return None
-        slots.append(tail)
-    return slots
-
-
-def _grouped_slot_positions(spark, store: IndexStore, slot_pairs, n_slots: int):
-    """Positional rows → one row per doc with every slot present:
-    (doc_ord, dl, parts=[(slot, pos-binary)...]). ``slot_pairs`` =
-    (term, slot-label) pairs; a term may serve several slots."""
-    from rifflux_spark.operators.positions import _decode_to_rows
-
-    terms = sorted({t for t, _ in slot_pairs})
-    rows = _decode_to_rows(store.positions_for_terms(terms))
-    smap = spark.createDataFrame(sorted(set(slot_pairs)), "term string, slot string")
-    return (
-        rows.join(F.broadcast(smap), "term")
-        .groupBy("doc_ord")
-        .agg(
-            F.max("dl").alias("dl"),
-            F.countDistinct("slot").alias("n_slots"),
-            F.collect_list(F.struct("slot", "pos")).alias("parts"),
-        )
-        .filter(F.col("n_slots") == n_slots)
-        .select("doc_ord", "dl", "parts")
-    )
-
-
-def _slot_arrays_of(parts, labels: list[str]) -> list[np.ndarray] | None:
-    """parts=[(slot, pos-bin)...] → per-label sorted-unique position
-    arrays (None when a label is absent)."""
-    by: dict[str, list[np.ndarray]] = {}
-    for p in parts:
-        # array<struct> arrives as dicts through mapInPandas
-        slot, pos = (p["slot"], p["pos"]) if isinstance(p, dict) else (p[0], p[1])
-        by.setdefault(slot, []).append(np.frombuffer(pos, dtype="<u4").astype(np.int64))
-    out: list[np.ndarray] = []
-    for lab in labels:
-        arrs = by.get(lab)
-        if not arrs:
-            return None
-        out.append(arrs[0] if len(arrs) == 1 else np.unique(np.concatenate(arrs)))
-    return out
-
-
-def _phrase_unit_frame_positional(
-    spark, store: IndexStore, unit: Unit, unit_id: int
-) -> DataFrame | None:
-    """Positional twin of :func:`_phrase_unit_frame`: instance counts
-    from poslist intersection — candidates bounded by position-
-    intersected df, zero chunk-table access."""
-    slots = _unit_slot_terms(store, unit)
-    if slots is None:
-        return None
-    labels = [str(j) for j in range(len(slots))]
-    pairs = [(t, lab) for lab, terms in zip(labels, slots) for t in terms]
-    if not pairs or any(not terms for terms in slots):
-        return (
-            spark.createDataFrame([], _UNIT_ROW)
-        )
-    grouped = _grouped_slot_positions(spark, store, pairs, len(slots))
-    u = unit
-
-    def count(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rifflux_spark.operators.positions import (
-            filter_unit_starts,
-            phrase_instance_starts,
-        )
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            tfs = np.zeros(len(pdf), dtype=np.int64)
-            for r, parts in enumerate(pdf["parts"]):
-                arrs = _slot_arrays_of(parts, labels)
-                if arrs is None:
-                    continue
-                starts = filter_unit_starts(
-                    phrase_instance_starts(arrs), u.anchored, u.cols
-                )
-                tfs[r] = starts.size
-            out = pd.DataFrame(
-                {
-                    "doc_ord": pdf["doc_ord"],
-                    "unit_id": np.int32(unit_id),
-                    "tf": tfs,
-                    "dl": pdf["dl"],
-                }
-            )
-            yield out[out["tf"] > 0]
-
-    return grouped.mapInPandas(count, schema=_UNIT_ROW)
-
-
-def _near_group_frame_positional(
-    spark,
-    store: IndexStore,
-    group,
-    member_ids: list[int],
-) -> DataFrame | None:
-    """Positional twin of :func:`_near_group_frame`: participation
-    trimming over strided instances (cross-column clusters numerically
-    infeasible, so one near_trim equals the per-column sum)."""
-    members = list(group.units)
-    if group.n >= _PositionalCtx.MAX_NEAR:
-        return None
-    member_slots: list[list[list[str]]] = []
-    for mu in members:
-        slots = _unit_slot_terms(store, mu)
-        if slots is None:
-            return None
-        member_slots.append(slots)
-    labels_of: list[list[str]] = []
-    pairs: list[tuple[str, str]] = []
-    for j, slots in enumerate(member_slots):
-        labs = [f"{j}:{s}" for s in range(len(slots))]
-        labels_of.append(labs)
-        for lab, terms in zip(labs, slots):
-            for t in terms:
-                pairs.append((t, lab))
-    n_slots = sum(len(s) for s in member_slots)
-    if any(not terms for slots in member_slots for terms in slots):
-        return spark.createDataFrame([], _UNIT_ROW)
-    grouped = _grouped_slot_positions(spark, store, pairs, n_slots)
-    allowed = members[0].cols
-    n_near = group.n
-    ids = list(member_ids)
-    anchored = [mu.anchored for mu in members]
-
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rifflux_spark.operators.positions import (
-            filter_unit_starts,
-            phrase_instance_starts,
-        )
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out_doc: list[int] = []
-            out_uid: list[int] = []
-            out_tf: list[int] = []
-            out_dl: list[int] = []
-            for doc, dl, parts in zip(pdf["doc_ord"], pdf["dl"], pdf["parts"]):
-                inst = []
-                ok = True
-                for j, labs in enumerate(labels_of):
-                    arrs = _slot_arrays_of(parts, labs)
-                    if arrs is None:
-                        ok = False
-                        break
-                    starts = phrase_instance_starts(arrs)
-                    if anchored[j] and starts.size:
-                        starts = starts[starts % POS_COL_STRIDE == 0]
-                    starts = filter_unit_starts(starts, False, allowed)
-                    m = len(labs)
-                    inst.append([(int(p), int(p) + m - 1) for p in starts])
-                if not ok:
-                    continue
-                counts = near_trim(inst, n_near)
-                if all(c > 0 for c in counts):
-                    for j, t in enumerate(counts):
-                        out_doc.append(doc)
-                        out_uid.append(ids[j])
-                        out_tf.append(t)
-                        out_dl.append(dl)
-            yield pd.DataFrame(
-                {
-                    "doc_ord": pd.Series(out_doc, dtype="int64"),
-                    "unit_id": pd.Series(out_uid, dtype="int32"),
-                    "tf": pd.Series(out_tf, dtype="int64"),
-                    "dl": pd.Series(out_dl, dtype="int64"),
-                }
-            )
-
-    return grouped.mapInPandas(verify, schema=_UNIT_ROW)
 
 
 def fts_topk(

@@ -22,9 +22,9 @@ coordinator-only execution for selective queries (e.g. single-node plans
 in Trino/Presto-style engines) — while bulk scans stay on the cluster.
 
 Like SQLite serving doclists and rows from its warm page cache, every
-coordinator read of postings, positions, term_stats (past the
-vocabulary cache) and chunks goes through ONE cache of decoded parquet
-row groups (``_GROUP_CACHE``: one LRU, one lock, one byte budget,
+coordinator read of postings, term_stats (past the vocabulary cache)
+and chunks goes through ONE cache of decoded parquet row groups
+(``_GROUP_CACHE``: one LRU, one lock, one byte budget,
 invalidated by file signature and by the table's snapshot). It holds
 what parquet returns — posting payloads stay varbyte-encoded — so
 decode, scoring and aggregation run on every query; there is no
@@ -103,8 +103,8 @@ def pq_file(path) -> pq.ParquetFile:
 
 
 # Decoded row groups of the tables the coordinator reads by key: chunks
-# by doc_ord (top-k rehydration) and postings, positions and term_stats
-# by term (every posting read). (path, row_group) → (file signature,
+# by doc_ord (top-k rehydration) and postings and term_stats by term
+# (every posting read). (path, row_group) → (file signature,
 # Arrow table, stable sort order of the key column, sorted keys, bytes).
 # The coordinator analog of SQLite's warm page cache, next to the
 # embedding and vocabulary caches: read from parquet, a rehydrate

@@ -115,12 +115,7 @@ def make_build_id(pages: DataFrame, config: EngineConfig, source_fp: str | None 
     # EVERY layout knob that shapes what a stage writes must be in the
     # id: resuming 'postings_shard_1 of 4' under n_build_shards=2 would
     # silently skip half the buckets; a new embedding_dim or prefix set
-    # would keep stale tables. store_positions is deliberately NOT in
-    # the id: it only gates whether the 'positions' stage runs (its own
-    # lineage row), never what any other stage writes — so enabling it
-    # on an already-built index resumes every completed stage and runs
-    # ONLY the positions build (the opt-in storage cost bench.py's
-    # stress block times), instead of a full rebuild.
+    # would keep stale tables.
     sig = (
         f"{fp}:{config.block_size}:{config.salt_range}:{config.n_term_buckets}:"
         f"{config.max_chunk_chars}:{config.min_chunk_chars}:"
@@ -491,33 +486,6 @@ def build_index(
             "prefix_postings", None, "prefix_postings",
             detail="adopted" if published else None,
         )
-
-    # --- positional postings (opt-in; operators/positions.py) ---
-    # FTS5-style poslists as a sibling table in the same physical
-    # layout: phrase/NEAR queries narrow by position intersection
-    # instead of rehydrating candidate text.
-    if config.store_positions and "positions" not in done:
-        from rifflux_spark.operators.positions import (
-            encode_position_postings,
-            packed_positions,
-        )
-
-        pblocks = encode_position_postings(
-            packed_positions(
-                store.chunks().select("doc_ord", "dl", "tokens", "heading_path"),
-                config,
-            ),
-            config,
-        )
-        # one snapshot transaction, same resume discipline as the
-        # prefix stage: a killed build publishes nothing
-        with store.transaction():
-            # full-table commit: this stage derives ALL positions from
-            # live chunks, so stale buckets from a prior corpus vanish
-            store.write_positions(pblocks, mode="full")
-        store.meta_set("layout.store_positions", "1")
-        _lap("positions")
-        mark("positions", None, "positions")
 
     # --- embeddings: join the concurrent job (started above) ---
     if emb_thread is not None:

@@ -269,27 +269,6 @@ def apply_incremental(
                 )
                 store.write_postings(encode_postings(pthin, config), mode="append")
                 prefix_plus = prefix_term_deltas(pthin)
-            if store.has_positions():
-                # positional postings (operators/positions.py): append
-                # the new docs' poslists — fresh salt ranges above the
-                # ceiling, same slot-in as term runs
-                from rifflux_spark.operators.positions import (
-                    encode_position_postings,
-                    packed_positions,
-                )
-
-                store.write_positions(
-                    encode_position_postings(
-                        packed_positions(
-                            staged_new.select(
-                                "doc_ord", "dl", "tokens", "heading_path"
-                            ),
-                            config,
-                        ),
-                        config,
-                    ),
-                    mode="append",
-                )
             agg = staged_new.agg(F.count("*").alias("n"), F.sum("dl").alias("sdl")).collect()[0]
             n_appended, dl_plus = int(agg["n"]), int(agg["sdl"] or 0)
             # +stats straight off the packs (n = df contribution per
@@ -649,33 +628,6 @@ def compact(spark: SparkSession, store: IndexStore, config: EngineConfig | None 
 
         rewritten = part.mapInPandas(rewrite_stream, schema=_COMPACT_SCHEMA)
 
-    # positional table (operators/positions.py): same block-range check,
-    # same rewrite discipline — a compaction that dropped the tombstone
-    # set while leaving dead docs in the poslists would resurrect them
-    # for phrase/NEAR queries
-    pos_affected: list[int] = []
-    pos_rewritten = None
-    if store.has_positions():
-        from rifflux_spark.operators.positions import compact_positions_stream
-        from rifflux_spark.sources.tables import POSITIONS_BUCKETED_SCHEMA
-
-        pmeta = store.positions().select("term_bucket", "first_doc", "last_doc")
-        pos_affected = sorted(
-            int(r["term_bucket"])
-            for r in pmeta.filter(block_hit("first_doc", "last_doc"))
-            .select("term_bucket")
-            .distinct()
-            .collect()
-        )
-        if pos_affected:
-            pos_rewritten = (
-                store.positions()
-                .filter(F.col("term_bucket").isin(pos_affected))
-                .mapInPandas(
-                    compact_positions_stream(b_ords), schema=POSITIONS_BUCKETED_SCHEMA
-                )
-            )
-
     # ONE snapshot commit moves the index from (old blocks + tombstones)
     # to (rewritten blocks + purged): a query racing the compaction sees
     # either state in full — never rewritten blocks WITH the tombstone
@@ -695,13 +647,6 @@ def compact(spark: SparkSession, store: IndexStore, config: EngineConfig | None 
                 affected,
             )
             n_rewritten = len(affected)
-        if pos_rewritten is not None:
-            store.overwrite_position_buckets(
-                pos_rewritten.repartition(
-                    len(pos_affected), "term_bucket"
-                ).sortWithinPartitions("term", "salt", "block_seq"),
-                pos_affected,
-            )
         store.write_small(purged, "purged", mode="append")
         store.drop_table("tombstones")
     b_ords.unpersist()
@@ -739,27 +684,6 @@ def vacuum(spark: SparkSession, store: IndexStore, config: EngineConfig | None =
         gen = store._new_gen_dir("postings")
         blocks.write.partitionBy("term_bucket").parquet(str(gen))
         store._commit_partitioned("postings", gen, "full")
-
-        if store.has_positions():
-            # full positional rebuild from live chunks (same one-pass
-            # discipline; the old generations stay readable until gc)
-            from rifflux_spark.operators.positions import (
-                encode_position_postings,
-                packed_positions,
-            )
-
-            pblocks = encode_position_postings(
-                packed_positions(
-                    _live_chunks(store).select(
-                        "doc_ord", "dl", "tokens", "heading_path"
-                    ),
-                    config,
-                ),
-                config,
-            )
-            pgen = store._new_gen_dir("positions")
-            pblocks.write.partitionBy("term_bucket").parquet(str(pgen))
-            store._commit_partitioned("positions", pgen, "full")
 
         had_embeddings = store.exists("embeddings")
         live_chunks = _live_chunks(store)  # still resolves OLD chunks + dead set

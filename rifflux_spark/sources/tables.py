@@ -138,29 +138,6 @@ POSTINGS_BUCKETED_SCHEMA = T.StructType(
     POSTINGS_SCHEMA.fields + [T.StructField("term_bucket", T.IntegerType(), False)]
 )
 
-# positional postings (operators/positions.py, opt-in): same block
-# layout as POSTINGS_SCHEMA, payload = per-doc position-count/dl arrays
-# plus the delta+varbyte column-strided position stream
-POSITIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("salt", T.LongType(), False),
-        T.StructField("block_seq", T.LongType(), False),
-        T.StructField("n_docs", T.IntegerType(), False),
-        T.StructField("first_doc", T.LongType(), False),
-        T.StructField("last_doc", T.LongType(), False),
-        T.StructField("gaps", T.BinaryType(), False),
-        T.StructField("pos_counts", T.BinaryType(), False),
-        T.StructField("dls", T.BinaryType(), False),
-        T.StructField("positions", T.BinaryType(), False),
-        T.StructField("n_pos", T.LongType(), False),
-    ]
-)
-
-POSITIONS_BUCKETED_SCHEMA = T.StructType(
-    POSITIONS_SCHEMA.fields + [T.StructField("term_bucket", T.IntegerType(), False)]
-)
-
 TERM_STATS_SCHEMA = T.StructType(
     [
         T.StructField("term", T.StringType(), False),
@@ -794,47 +771,6 @@ class IndexStore:
         )
 
     @_releases_gens_on_error
-    def write_positions(
-        self, df: DataFrame, mode: str = "overwrite", expected_parts=None
-    ) -> None:
-        """Persist positional block rows partitioned by term bucket —
-        the write twin of :meth:`write_postings` (encode_position_postings
-        emits rows already clustered+sorted by ``term_bucket``)."""
-        if "term_bucket" not in df.columns:
-            df = (
-                df.withColumn(
-                    "term_bucket",
-                    F.pmod(F.xxhash64("term"), F.lit(self.n_term_buckets)).cast("int"),
-                )
-                .repartition(self.n_term_buckets, "term_bucket")
-                .sortWithinPartitions("term_bucket", "term", "salt", "block_seq")
-            )
-        # no pre-manifest positions tables exist, but keep the twin
-        # uniform with write_postings: adopt-before-write is the rule
-        self._adopt_legacy("positions", partitioned=True)
-        gen = self._new_gen_dir("positions")
-        df.write.option("parquet.block.size", str(POSTINGS_ROW_GROUP_BYTES)).partitionBy(
-            "term_bucket"
-        ).parquet(str(gen))
-        self._commit_partitioned(
-            "positions",
-            gen,
-            mode if mode in ("append", "full") else "dynamic",
-            expected_parts=expected_parts,
-        )
-
-    @_releases_gens_on_error
-    def overwrite_position_buckets(self, df: DataFrame, affected: list[int]) -> None:
-        """Compaction commit for the positional table — twin of
-        :meth:`overwrite_posting_buckets`."""
-        self._adopt_legacy("positions", partitioned=True)
-        gen = self._new_gen_dir("positions")
-        df.write.option("parquet.block.size", str(POSTINGS_ROW_GROUP_BYTES)).partitionBy(
-            "term_bucket"
-        ).parquet(str(gen))
-        self._commit_partitioned("positions", gen, "dynamic", expected_parts=affected)
-
-    @_releases_gens_on_error
     def overwrite_posting_buckets(self, df: DataFrame, affected: list[int]) -> None:
         """Compaction commit: replace exactly the ``affected`` bucket
         partitions with the gen's contents (buckets rewritten to empty
@@ -1141,25 +1077,6 @@ class IndexStore:
         buckets = sorted({term_bucket(t, self.n_term_buckets) for t in terms})
         return self._read_partitioned(
             "postings", POSTINGS_BUCKETED_SCHEMA, part_values=set(buckets)
-        ).filter(F.col("term_bucket").isin(buckets) & F.col("term").isin(terms))
-
-    def has_positions(self) -> bool:
-        """True when the index carries positional postings
-        (operators/positions.py) — phrase/NEAR queries route through
-        position intersection instead of text recheck."""
-        return self.exists("positions")
-
-    def positions(self) -> DataFrame:
-        return self._read_partitioned("positions", POSITIONS_BUCKETED_SCHEMA)
-
-    def positions_for_terms(self, terms: list[str]) -> DataFrame:
-        """Same bucket-prune + row-group-prune discipline as
-        :meth:`postings_for_terms`, over the positional table."""
-        if not terms:
-            return self.positions().limit(0)
-        buckets = sorted({term_bucket(t, self.n_term_buckets) for t in terms})
-        return self._read_partitioned(
-            "positions", POSITIONS_BUCKETED_SCHEMA, part_values=set(buckets)
         ).filter(F.col("term_bucket").isin(buckets) & F.col("term").isin(terms))
 
     def term_stats(self) -> DataFrame:

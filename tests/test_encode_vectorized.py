@@ -1,6 +1,6 @@
 """Vectorized block encoders vs the per-block reference codec.
 
-Round 6 rewrote ``encode_postings``/``encode_position_postings`` from a
+Round 6 rewrote ``encode_postings`` from a
 per-(term,salt)-group Python loop (3 ``encode_varbyte`` calls per block)
 to one global encode sliced at block boundaries. These tests pin the
 contract: the segmented encoder is byte-identical to per-segment
@@ -15,10 +15,8 @@ import numpy as np
 import pytest
 
 from rifflux_spark.operators.codec import (
-    decode_positions_flat,
     decode_varbyte,
     encode_block,
-    encode_positions_flat,
     encode_varbyte,
     encode_varbyte_segments,
     varbyte_lengths,
@@ -100,50 +98,3 @@ def test_encode_postings_rows_match_reference(spark, seed, tmp_path) -> None:
             assert (bytes(got) if isinstance(got, (bytes, bytearray)) else got) == want, (
                 r["term"], r["salt"], r["block_seq"], k,
             )
-
-
-def test_position_encode_roundtrip_random(spark) -> None:
-    """Random docs through packed_positions + the vectorized block
-    encoder decode back to exactly the tokenizer's per-doc positions."""
-    import pandas as pd
-
-    from rifflux_spark.config import EngineConfig
-    from rifflux_spark.functions.tokenizer import tokenize
-    from rifflux_spark.operators.codec import POS_COL_STRIDE
-    from rifflux_spark.operators.positions import (
-        decode_position_blocks,
-        encode_position_postings,
-        packed_positions,
-    )
-
-    rng = np.random.default_rng(23)
-    vocab = ["alpha", "beta", "gamma", "delta", "eps"]
-    rows = []
-    for d in range(40):
-        content = " ".join(vocab[rng.integers(0, 5)] for _ in range(int(rng.integers(1, 30))))
-        heading = " ".join(vocab[rng.integers(0, 5)] for _ in range(int(rng.integers(0, 4))))
-        toks = tokenize(content) + tokenize(heading)
-        rows.append((d * 3, len(toks), " ".join(toks), heading, content))
-    cfg = EngineConfig(block_size=8, salt_range=16, n_term_buckets=4)
-    df = spark.createDataFrame(
-        rows, "doc_ord long, dl int, tokens string, heading_path string, content string"
-    )
-    blocks = encode_position_postings(packed_positions(df, cfg), cfg).toPandas()
-    docs, counts, dls, pos_flat, row_idx = decode_position_blocks(blocks)
-    got: dict[tuple, list[int]] = {}
-    ends = np.cumsum(counts)
-    starts = ends - counts
-    for i in range(len(docs)):
-        term = blocks["term"][row_idx[i]]
-        got[(term, int(docs[i]))] = pos_flat[starts[i] : ends[i]].tolist()
-    # expected: content positions 0..n-1, heading positions at stride
-    for d_ord, dl, tokens, heading, content in rows:
-        ct = tokenize(content)
-        ht = tokenize(heading)
-        want: dict[str, list[int]] = {}
-        for i, t in enumerate(ct):
-            want.setdefault(t, []).append(i)
-        for i, t in enumerate(ht):
-            want.setdefault(t, []).append(POS_COL_STRIDE + i)
-        for t, plist in want.items():
-            assert got[(t, d_ord)] == plist, (t, d_ord)

@@ -87,6 +87,10 @@ FIXED = [
     "delta NOT NEAR(alpha beta, 0)",
     "content:NEAR(alpha beta, 1)",   # column-filtered group
     "NEAR(alpha zznever, 3)",        # unknown member -> []
+    '"alpha beta" gamma',            # phrase unit in boolean context
+    "^alpha beta",                   # anchored phrase
+    'content:"alpha beta"',          # column-filtered phrase
+    '"alpha beta" OR xr* NOT gamma',
 ]
 
 
@@ -110,7 +114,7 @@ def test_near_fixed_battery(built_index, spark, engine) -> None:
     index_dir, oracle = built_index
     service = SearchService(spark, index_dir, CONFIG)
     nonempty = sum(_check(service, oracle, q, engine) for q in FIXED)
-    assert nonempty >= 7, "battery mostly vacuous"
+    assert nonempty >= 9, "battery mostly vacuous"
 
 
 def test_near_randomized_differential(built_index, spark) -> None:

@@ -118,7 +118,8 @@ def _nonadjacent_phrase(chunks) -> str | None:
 def test_phrase_rank_identity(built_index, spark, engine) -> None:
     index_dir, oracle, chunks = built_index
     service = SearchService(spark, index_dir, CONFIG)
-    for q in _corpus_phrases(chunks):
+    # plus a repeated-token phrase (overlap counting) and a stopword
+    for q in _corpus_phrases(chunks) + ["cache cache", "the"]:
         got = service.phrase(q, top_k=10, engine=engine)
         want = oracle.phrase_search(q, top_k=10)
         assert [r["chunk_id"] for r in got] == [
