@@ -6,8 +6,8 @@ an ANSI-SQL twin DuckDB runs on the same parquet tables. Column names and
 rounding are aligned on both sides so the driver's order-insensitive
 value-hash matches.
 
-The physical posting-index path (block-compressed postings, block-max
-pruning) is not SQL-expressible; it is verified rank-identically against a
+The physical posting-index path (block-compressed postings, posting
+budget) is not SQL-expressible; it is verified rank-identically against a
 real SQLite FTS5 oracle in tests/test_bm25_rank_identity.py. The entries
 here exercise the same logical semantics (same tokenizer, same BM25
 conventions) as declarative plans.

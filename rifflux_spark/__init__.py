@@ -4,7 +4,7 @@ A from-scratch, Spark-first rebuild of the retrieval semantics of the
 reference engine (yxbh/rifflux — local SQLite FTS5/BM25 + embedding cosine
 + RRF hybrid): tokenization/chunking as vectorized Arrow UDFs, explicit
 posting-list construction with salted range runs and delta+varbyte block
-compression, BM25 (k1=1.2, b=0.75) top-k with block-max pruning, brute
+compression, BM25 (k1=1.2, b=0.75) top-k under a posting budget, brute
 force + LSH semantic search, RRF rank-window fusion, incremental catalog
 diffing, and per-shard lineage checkpointing — all expressed as DataFrame
 plans so Catalyst handles pushdown/pruning/AQE.

@@ -1,5 +1,4 @@
-"""BM25 top-k over the block-compressed posting index, with optional
-block-max pruning.
+"""BM25 top-k over the block-compressed posting index, as a Spark plan.
 
 Reproduces FTS5 bm25 exactly (verified against SQLite in
 tests/test_bm25_rank_identity.py; reference sqlite_store.py:150-182):
@@ -14,22 +13,43 @@ needs **no join against a doc-length table**: only the scalars N and
 avgdl ship with the query. Ranking ties break on ``doc_ord`` ascending =
 SQLite rowid order (SURVEY.md §4).
 
-Block-max pruning (SURVEY.md §2 Q3): per-term per-block upper bounds
-``UB(B_t) = idf_t * block_max_wtf(B_t)``. For a disjunctive query any
-doc touching block ``B_t`` has total score ≤ UB(B_t) + Σ_{t'≠t}
-max_B UB(B_t'). If that bound is below a threshold θ that itself lower-
-bounds the true k-th best score, every doc in the block is globally out
-of the top-k — so skipped blocks cannot affect membership *or* the exact
-scores of survivors. θ comes from fully scoring the highest-impact blocks
-per term. Pruning on/off is correctness-invariant (tested).
+The plan shares the coordinator scorer's parts (operators/local_exec):
+the df lookup (``local_df``, no Spark job), the multiplicity-weighted
+idf (``query_idf``), the per-batch decode/score/sum kernel, and the
+posting budget's block selection (``wand.budget_selection`` over the
+blocks' metadata, read driver-side). Only the scan, the shuffle
+aggregation and the top-k are Spark's.
+
+There is no block-max WAND pruning. Exact pruning (a seed job scoring
+the highest-bound blocks for a threshold θ, then a key filter keeping
+blocks whose range-aligned bound reaches θ) lost every class measured.
+Forced ``engine="spark"``, budget 0, 4 queries a class, 3 interleaved
+reps, median ms, pruning on / off; every query returned the
+coordinator's chunks, scores equal to a relative 1e-9:
+
+=================  ==========================  ==================
+index              class                       pruning on / off
+=================  ==========================  ==================
+26,100 chunks      2 head terms (df ≥ 50%)     952 / 741
+26,100 chunks      rare (df ≤ p5) + 2 head     1156 / 808
+26,100 chunks      mid (df 1–5%) + 1 head      1133 / 741
+259,856 chunks     2 head terms                1481 / 1113
+259,856 chunks     rare + 2 head               1651 / 1240
+259,856 chunks     mid + 1 head                1672 / 1284
+=================  ==========================  ==================
+
+Indexes: the benchmark's layout (perfbench/run.py) over
+``synthetic_pages(seed=1, page_scale=4)`` at 2k and 20k pages; 4-vCPU
+shared host, ``local[4]``.
+
+At 26,100 chunks pruning also ran two more Spark jobs per query (10.6
+against 8.6). With the default budget it never ran on the auto route:
+lexical reached Spark only past Σdf 2M, always over the budget.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -37,8 +57,14 @@ from pyspark.sql import types as T
 from rifflux_spark.config import EngineConfig
 from rifflux_spark.functions.tokenizer import compile_query
 from rifflux_spark.operators import wand
-from rifflux_spark.operators.codec import bm25_wtf, decode_posting_arrow
-from rifflux_spark.operators.ftsquery import unit_idf
+from rifflux_spark.operators.local_exec import (
+    POSTING_COLUMNS,
+    _decode_score_arrow,
+    _sum_by_doc,
+    local_df,
+    query_idf,
+    read_postings,
+)
 from rifflux_spark.sources.tables import IndexStore
 
 _SCORE_ROW = T.StructType(
@@ -49,20 +75,6 @@ _SCORE_ROW = T.StructType(
 )
 
 
-def idf_for_terms(store: IndexStore, terms: list[str], n_docs: int) -> dict[str, float]:
-    """FTS5 ln-idf with the observed 1e-6 clamp; terms absent from the
-    index simply contribute nothing (df lookup returns no row)."""
-    if not terms:
-        return {}
-    stats = (
-        store.term_stats()
-        .filter(F.col("term").isin(terms))
-        .select("term", "df_docs")
-        .collect()
-    )
-    return {row["term"]: unit_idf(n_docs, int(row["df_docs"])) for row in stats}
-
-
 def _score_blocks(
     blocks: DataFrame,
     idf: dict[str, float],
@@ -71,44 +83,30 @@ def _score_blocks(
     b: float,
     ranges: list[tuple[int, int]] | None = None,
 ) -> DataFrame:
-    """Decode blocks → per-(doc, term) partial scores, pre-aggregated per
-    Arrow batch to shrink the shuffle. ``ranges`` (budgeted mode): keep
-    only docs inside the selected doc intervals, so every emitted doc
-    has ALL its postings decoded — scores stay exact."""
+    """Decode blocks → per-doc partial scores, pre-aggregated per Arrow
+    batch to shrink the shuffle, with the coordinator's kernel. ``ranges``
+    (budgeted mode): keep only docs inside the selected doc intervals,
+    so every emitted doc has ALL its postings decoded — scores stay
+    exact."""
     idf_b = dict(idf)
 
     def score(batches):
-        # Arrow-native (mapInArrow): payload bytes flow straight from
-        # the record batch's contiguous binary buffers into the varbyte
-        # decoder (_cat_binary) — no per-blob Python bytes objects; the
-        # per-batch partial agg is a sorted reduceat, not a pandas
-        # groupby hash
         import pyarrow as pa
 
         for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            docs, tf, dl, ns = decode_posting_arrow(rb)
-            idf_per = np.repeat(
-                np.array([idf_b[t] for t in rb.column("term").to_pylist()]), ns
-            )
-            partials = bm25_wtf(tf, dl, avgdl, k1, b) * idf_per
+            docs, partials = _decode_score_arrow(rb, idf_b, avgdl, k1, b)
             if ranges is not None:
                 inside = wand.mask_docs_to_ranges(docs, ranges)
                 docs, partials = docs[inside], partials[inside]
-                if docs.size == 0:
-                    continue
-            order = np.argsort(docs, kind="stable")
-            docs, partials = docs[order], partials[order]
-            uniq, starts = np.unique(docs, return_index=True)
-            sums = np.add.reduceat(partials, starts)
+            if docs.size == 0:
+                continue
+            uniq, sums = _sum_by_doc(docs, partials)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(uniq, pa.int64()), pa.array(sums, pa.float64())],
                 names=["doc_ord", "partial"],
             )
 
-    cols = ["term", "gaps", "tfs", "dls", "n_docs", "first_doc"]
-    return blocks.select(*cols).mapInArrow(score, schema=_SCORE_ROW)
+    return blocks.select(*POSTING_COLUMNS).mapInArrow(score, schema=_SCORE_ROW)
 
 
 def bm25_topk(
@@ -117,48 +115,47 @@ def bm25_topk(
     query: str,
     top_k: int = 10,
     config: EngineConfig | None = None,
-    prune: bool = True,
     cstats: dict | None = None,
-    min_blocks_to_prune: int = 64,
+    dfs: dict[str, int] | None = None,
 ) -> DataFrame:
     """Top-k lexical search → (doc_ord, bm25_score) with FTS5's negated
     score convention, best first.
 
-    Physical shape: posting scan (partition+rowgroup pruned by term) →
-    decode/score mapInPandas → groupBy(doc_ord).sum → TakeOrderedAndProject.
-    """
+    Physical shape: posting scan (partition+rowgroup pruned by term,
+    key-filtered to the budget's selection when over budget) →
+    decode/score mapInArrow → groupBy(doc_ord).sum →
+    TakeOrderedAndProject. ``dfs`` is as in
+    :func:`local_exec.bm25_topk_local`."""
     config = config or EngineConfig()
     terms = compile_query(query)
-    if not terms:
-        return spark.createDataFrame(
-            [], "doc_ord long, bm25_score double"
-        )
-    cstats = cstats or store.corpus_stats()
-    n_docs, avgdl = int(cstats["n_docs"]), float(cstats["avgdl"])
-    idf = idf_for_terms(store, sorted(set(terms)), n_docs)
-    # FTS5 scores every phrase instance: a term repeated in the query
-    # contributes once per occurrence (observed vs the oracle), so weight
-    # idf by query-term multiplicity.
-    mult: dict[str, int] = {}
-    for t in terms:
-        mult[t] = mult.get(t, 0) + 1
-    idf = {t: v * mult[t] for t, v in idf.items()}
-    terms = sorted(idf)
-    if not terms:
+    if terms:
+        cstats = cstats or store.corpus_stats()
+        n_docs, avgdl = int(cstats["n_docs"]), float(cstats["avgdl"])
+        if dfs is None:
+            dfs = local_df(store, sorted(set(terms)))
+        idf = query_idf(terms, dfs, n_docs)
+    if not terms or not idf:
         return spark.createDataFrame([], "doc_ord long, bm25_score double")
+    qterms = sorted(idf)
+    k1, b = config.bm25_k1, config.bm25_b
 
-    blocks = store.postings_for_terms(terms)
-
+    blocks = store.postings_for_terms(qterms)
     ranges = None
-    if prune or int(getattr(config, "lexical_budget_postings", 0) or 0) > 0:
-        blocks, ranges = _prune_blocks(
-            blocks, idf, top_k, avgdl, config, min_blocks_to_prune,
-            store=store, prune=prune,
-        )
+    budget = int(getattr(config, "lexical_budget_postings", 0) or 0)
+    if budget > 0:
+        meta = read_postings(store, qterms, wand.BLOCK_META_COLUMNS)
+        sel = wand.budget_selection(meta, idf, avgdl, k1, b, budget)
+        if sel is not None:
+            mask, ranges = sel
+            blocks = _filter_blocks_by_keys(
+                spark, blocks,
+                meta.column("term").to_pylist(),
+                meta.column("salt").to_numpy(),
+                meta.column("block_seq").to_numpy(),
+                np.flatnonzero(mask),
+            )
 
-    scored = _score_blocks(
-        blocks, idf, avgdl, config.bm25_k1, config.bm25_b, ranges=ranges
-    )
+    scored = _score_blocks(blocks, idf, avgdl, k1, b, ranges=ranges)
     agg = scored.groupBy("doc_ord").agg(F.sum("partial").alias("score"))
     # incremental deletes: drop tombstoned docs (set is small between
     # compactions — broadcast anti-join; compaction clears it)
@@ -212,151 +209,4 @@ def _filter_blocks_by_keys(
     )
     return blocks.join(
         F.broadcast(keydf), on=["term", "salt", "block_seq"], how="left_semi"
-    )
-
-
-def _prune_blocks(
-    blocks: DataFrame,
-    idf: dict[str, float],
-    top_k: int,
-    avgdl: float,
-    config: EngineConfig,
-    min_blocks_to_prune: int = 64,
-    store: IndexStore | None = None,
-    prune: bool = True,
-) -> tuple[DataFrame, list[tuple[int, int]] | None]:
-    """Drop blocks that provably cannot host any top-k doc; optionally
-    apply the posting budget. Returns (blocks, ranges) — ranges non-None
-    only in budgeted mode (the scorer masks docs to them).
-
-    Driver-side on block *metadata* only (one row per block for the
-    query's terms), with the same range-aligned bound math as the
-    coordinator path (operators/wand.py):
-
-    - bounds near-uniform (stopword-class, clamped idfs) → no-op: no θ
-      can beat a flat bound, the seed job would be pure overhead —
-      UNLESS ``config.lexical_budget_postings`` caps the scan, in which
-      case the impact-ordered range closure picks what to decode and
-      every returned doc still carries its exact full score.
-    - otherwise: seed the highest-aligned-bound blocks, θ = k-th best
-      live seed score, keep blocks whose bound ≥ θ (exactness proof in
-      the module docstring).
-
-    The budget branch runs at any block count. ``prune=False`` applies
-    ONLY the budget branch (what the coordinator path does for every
-    query); under budget it is a no-op — no seed job, no metadata-
-    derived pruning. ``min_blocks_to_prune`` gates only exact pruning.
-    """
-    budget = int(getattr(config, "lexical_budget_postings", 0) or 0)
-    # EXACT-prune cap only: past this many blocks the seed machinery
-    # costs more than it saves. Budgeted mode takes the FULL metadata
-    # picture at any block count — the coordinator path (local_exec)
-    # holds strictly more per block and does the same, so both engines
-    # apply the budget identically however large the query.
-    max_blocks_to_prune = 200_000
-    cap = None if budget else max_blocks_to_prune
-    cols = [
-        "term", "salt", "block_seq", "n_docs", "first_doc", "last_doc",
-        "block_max_tf", "block_min_dl",
-    ]
-    t = None
-    if store is not None:
-        # block METADATA via a driver-side row-group-pruned Arrow read
-        # (the coordinator path's machinery) — a Spark collect of the
-        # same rows costs ~1 s of job overhead per query
-        from rifflux_spark.functions.xxhash64 import term_bucket
-        from rifflux_spark.operators.local_exec import _bucket_files, _read_filtered
-
-        qterms = sorted(idf)
-        files = _bucket_files(
-            store, "postings", {term_bucket(t, store.n_term_buckets) for t in qterms}
-        )
-        t = _read_filtered(files, cols, qterms)
-        if t is not None and cap is not None:
-            t = t.slice(0, cap + 1)
-        terms_arr = np.array([] if t is None else t.column("term").to_pylist())
-        def _col(name):
-            return (
-                np.array([], dtype=np.int64)
-                if t is None
-                else t.column(name).to_numpy().astype(np.int64)
-            )
-    else:
-        q = blocks.select(*cols)
-        if cap is not None:
-            q = q.limit(cap + 1)
-        rows = q.collect()
-        terms_arr = np.array([r["term"] for r in rows])
-        def _col(name):
-            return np.array([int(r[name]) for r in rows], dtype=np.int64)
-    n_blocks = len(terms_arr)
-    if cap is not None and n_blocks > cap:
-        return blocks, None
-    ns = _col("n_docs")
-    over_budget = budget > 0 and int(ns.sum()) > budget
-    # an under-budget query with pruning disabled is a straight full
-    # scan, as on the coordinator
-    if not over_budget and (not prune or n_blocks < min_blocks_to_prune):
-        return blocks, None
-    salts = _col("salt")
-    seqs = _col("block_seq")
-    firsts = _col("first_doc")
-    lasts = _col("last_doc")
-    ub = wand.block_upper_bounds(
-        list(terms_arr),
-        _col("block_max_tf"),
-        _col("block_min_dl"),
-        idf, avgdl, config.bm25_k1, config.bm25_b,
-    )
-    bound = wand.aligned_bounds(terms_arr, firsts, lasts, ub)
-
-    if over_budget:
-        order = wand.selection_order(terms_arr, salts, seqs, bound)
-        mask, ranges = wand.budget_ranges(
-            terms_arr, firsts, lasts, ns, bound, budget, order=order
-        )
-        return (
-            _filter_blocks_by_keys(
-                blocks.sparkSession, blocks, terms_arr, salts, seqs,
-                np.flatnonzero(mask),
-            ),
-            ranges,
-        )
-
-    if wand.is_uniform(bound):
-        return blocks, None
-
-    seed = wand.seed_by_bound(bound, ns, top_k)
-    if seed.size >= n_blocks:
-        return blocks, None
-    seed_blocks = blocks.filter(
-        _key_col().isin(_keys_of(terms_arr, salts, seqs, seed))
-    )
-    seed_agg = (
-        _score_blocks(seed_blocks, idf, avgdl, config.bm25_k1, config.bm25_b)
-        .groupBy("doc_ord")
-        .agg(F.sum("partial").alias("score"))
-    )
-    # θ must lower-bound the k-th best LIVE score: a tombstoned doc in the
-    # seed would inflate it and over-prune blocks holding live survivors
-    if store is not None and store.exists("tombstones"):
-        seed_agg = seed_agg.join(F.broadcast(store.tombstones()), on="doc_ord", how="left_anti")
-    seed_scores = seed_agg.orderBy(F.desc("score")).limit(top_k).collect()
-    if len(seed_scores) < top_k:
-        return blocks, None  # not enough docs to justify pruning
-    # one-ulp safety margin: θ from partial sums can exceed the exact
-    # value by rounding; shave it so a boundary tie is never pruned
-    theta = float(np.nextafter(seed_scores[-1]["score"], -np.inf))
-
-    keep = np.flatnonzero(bound >= theta)
-    keep_set = set(int(i) for i in keep) | set(int(i) for i in seed)
-    # a barely-selective keep set costs more (key filter + second decode
-    # of nearly everything) than it saves — scan instead
-    if len(keep_set) >= 0.7 * n_blocks:
-        return blocks, None
-    return (
-        _filter_blocks_by_keys(
-            blocks.sparkSession, blocks, terms_arr, salts, seqs, sorted(keep_set)
-        ),
-        None,
     )

@@ -17,7 +17,7 @@ data: each posting block packs up to ``block_size`` postings as
   ``wtf(max_tf, min_dl, avgdl_now)`` upper-bounds every posting in the
   block *under the current corpus stats* — storing the raw ints instead
   of a precomputed score keeps the bound valid when incremental updates
-  shift avgdl (block-max WAND, SURVEY.md §2 C4/Q3).
+  shift avgdl (the posting budget's block bounds, operators/wand.py).
 
 Storing ``dl`` inline trades bytes for locality: query-time scoring never
 joins a 10^12-row doc-length table — only the scalars N and avgdl ship

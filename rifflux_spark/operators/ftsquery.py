@@ -286,17 +286,12 @@ def _local_postings(store: IndexStore, terms: list[str]):
     (term → (docs, tfs), (docs, dls)): each term's sorted unique doc
     ordinals with their tf, and the sorted doc ordinals of all postings
     with their dl (looked up by ``searchsorted``)."""
-    from rifflux_spark.functions.xxhash64 import term_bucket
-    from rifflux_spark.operators.local_exec import _bucket_files, _read_filtered
+    from rifflux_spark.operators.local_exec import POSTING_COLUMNS, read_postings
 
     postings: dict[str, tuple[np.ndarray, np.ndarray]] = {}
     if not terms:
         return postings, (_EMPTY, _EMPTY)
-    buckets = {term_bucket(t, store.n_term_buckets) for t in terms}
-    files = _bucket_files(store, "postings", buckets)
-    t = _read_filtered(
-        files, ["term", "n_docs", "first_doc", "gaps", "tfs", "dls"], terms
-    )
+    t = read_postings(store, terms, POSTING_COLUMNS)
     if t is None:
         return postings, (_EMPTY, _EMPTY)
     docs, tfs, dls, ns = decode_posting_arrow(t)

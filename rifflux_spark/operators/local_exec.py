@@ -14,10 +14,12 @@ pyarrow + numpy, short-circuiting the scheduler: same blocks, same idf
 clamp, same tie-break, rank-identical results (tested against the Spark
 path and the FTS5 oracle). The lexical scorer is exact under the posting
 budget — one decode of every matching block, one sort to sum per doc, a
-partition top-k — and takes the budgeted range closure over it; the
-block-max WAND pruning of the distributed plan does not pay at
-coordinator sizes (measurement in :func:`bm25_topk_local`). Real
-distributed engines do the same thing —
+partition top-k — and takes the budgeted range closure over it; block-
+max pruning does not pay at coordinator sizes (measurement in
+:func:`bm25_topk_local`). The distributed plan reuses this module's df
+lookup, idf weighting and decode/score/sum kernel, and
+operators/wand.py's budget selection. Real distributed engines do the
+same thing —
 coordinator-only execution for selective queries (e.g. single-node plans
 in Trino/Presto-style engines) — while bulk scans stay on the cluster.
 
@@ -30,10 +32,8 @@ what parquet returns — posting payloads stay varbyte-encoded — so
 decode, scoring and aggregation run on every query; there is no
 per-term, per-query or result cache.
 
-The SearchService picks the path per query (``engine="auto"``): local
-when the query's total posting volume (Σ df of its terms, read from
-term_stats in milliseconds) fits the budget, Spark otherwise; semantic
-routes on the embeddings table's byte size.
+The SearchService picks the path per query (``engine="auto"``; the
+routing constants in service.py say which queries reach Spark).
 """
 
 from __future__ import annotations
@@ -41,7 +41,7 @@ from __future__ import annotations
 import os
 import sys
 import threading
-from collections import OrderedDict
+from collections import Counter, OrderedDict
 from pathlib import Path
 
 import numpy as np
@@ -243,6 +243,14 @@ def _read_filtered(files: list[Path], columns: list[str], terms: list[str]):
     return pa.concat_tables(tables)
 
 
+def read_postings(store: IndexStore, terms: list[str], columns: list[str]):
+    """``columns`` of every posting block of ``terms`` (None when there
+    are none): the query's term buckets only, through the row-group
+    cache. Both lexical engines and the FTS evaluator read here."""
+    buckets = {term_bucket(t, store.n_term_buckets) for t in terms}
+    return _read_filtered(_bucket_files(store, "postings", buckets), columns, terms)
+
+
 # Decoded term→df map + term table per store, keyed by the term_stats
 # files' signature (same invalidation discipline as the embedding-matrix
 # cache below). The vocabulary is metadata-sized next to the postings
@@ -307,6 +315,15 @@ def local_df(store: IndexStore, terms: list[str]) -> dict[str, int]:
         term: int(df)
         for term, df in zip(t.column("term").to_pylist(), t.column("df_docs").to_pylist())
     }
+
+
+def query_idf(terms: list[str], dfs: dict[str, int], n_docs: int) -> dict[str, float]:
+    """FTS5 ln-idf per looked-up term (``dfs``), times the term's
+    multiplicity in the compiled query ``terms``: FTS5 scores every
+    phrase instance, so a repeated query term counts once per occurrence.
+    Terms missing from ``dfs`` are not in the index and score nothing."""
+    mult = Counter(terms)
+    return {t: unit_idf(n_docs, df_t) * mult[t] for t, df_t in dfs.items()}
 
 
 # dead-ord sets re-read on EVERY query would pay parquet footer parses
@@ -392,10 +409,12 @@ def top_k_order(scores: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
     return np.lexsort((ids, neg))[:k]
 
 
-# posting columns the scorer decodes, and the per-block metadata only
-# the budgeted range closure needs
+# posting columns the scorer decodes, and those plus the block metadata
+# the budget selection reads: one read serves both
 POSTING_COLUMNS = ["term", "n_docs", "first_doc", "gaps", "tfs", "dls"]
-BOUND_COLUMNS = ["term", "salt", "block_seq", "last_doc", "block_max_tf", "block_min_dl"]
+LEXICAL_COLUMNS = POSTING_COLUMNS + [
+    c for c in wand.BLOCK_META_COLUMNS if c not in POSTING_COLUMNS
+]
 
 
 def bm25_topk_local(
@@ -437,12 +456,12 @@ def bm25_topk_local(
 
     ``config.lexical_budget_postings > 0`` caps the decoded posting
     count: a query whose blocks hold more postings than the budget
-    decodes only the impact-ordered range closure (operators/wand.py),
-    so every returned doc still carries its exact full score and the
-    trade is coverage. Under-budget queries are exact; 0 opts back into
-    exact FTS5-parity behavior at any cost. The distributed plan
-    (operators/bm25.py) applies the same closure and keeps WAND pruning
-    for exact scans.
+    decodes only the impact-ordered range closure
+    (:func:`operators.wand.budget_selection`), so every returned doc
+    still carries its exact full score and the trade is coverage.
+    Under-budget queries are exact; 0 opts back into exact FTS5-parity
+    behavior at any cost. The distributed plan (operators/bm25.py) runs
+    the same selection, idf and decode/score/sum kernel on executors.
 
     ``dfs`` is :func:`local_df` of the query's distinct terms when the
     caller already looked them up (the service routes on it); it is
@@ -455,59 +474,27 @@ def bm25_topk_local(
     n_docs, avgdl = int(cstats["n_docs"]), float(cstats["avgdl"])
     if dfs is None:
         dfs = local_df(store, sorted(set(terms)))
-    mult: dict[str, int] = {}
-    for t in terms:
-        mult[t] = mult.get(t, 0) + 1
-    # FTS5 ln-idf, times the term's multiplicity in the query
-    idf = {t: unit_idf(n_docs, df_t) * mult[t] for t, df_t in dfs.items()}
+    idf = query_idf(terms, dfs, n_docs)
     if not idf:
         return []
     qterms = sorted(idf)
-
-    buckets = {term_bucket(t, store.n_term_buckets) for t in qterms}
-    files = _bucket_files(store, "postings", buckets)
-    t = _read_filtered(files, POSTING_COLUMNS, qterms)
+    t = read_postings(store, qterms, LEXICAL_COLUMNS)
     if t is None:
         return []
     tombs = local_tombstones(store)
     k1, b = config.bm25_k1, config.bm25_b
-    budget = int(getattr(config, "lexical_budget_postings", 0) or 0)
-    ns = t.column("n_docs").to_numpy().astype(np.int64)
-
-    if budget <= 0 or int(ns.sum()) <= budget:
+    sel = wand.budget_selection(
+        t, idf, avgdl, k1, b, int(getattr(config, "lexical_budget_postings", 0) or 0)
+    )
+    if sel is None:
         docs, partials = _decode_score_arrow(t, idf, avgdl, k1, b)
         return _finish_topk(docs, partials, tombs, top_k)
-
-    # budgeted mode: impact-ordered RANGE CLOSURE — every returned doc
-    # has ALL its postings decoded (exact scores); the trade is coverage
-    # of the corpus, never the correctness of shown scores. The bounds
-    # are range-aligned (each block charged the other terms' best
-    # OVERLAPPING block), and the selection order is row-order-
-    # independent (ties broken on (term, salt, seq)), so this matches the
-    # distributed path. The same files and filter give the same rows in
-    # the same order as the posting read above.
-    m = _read_filtered(files, BOUND_COLUMNS, qterms)
-    terms_arr = np.array(m.column("term").to_pylist())
-    firsts = t.column("first_doc").to_numpy().astype(np.int64)
-    lasts = m.column("last_doc").to_numpy().astype(np.int64)
-    ub = wand.block_upper_bounds(
-        list(terms_arr),
-        m.column("block_max_tf").to_pylist(),
-        m.column("block_min_dl").to_pylist(),
-        idf, avgdl, k1, b,
+    # budgeted: decode the selected blocks, keep only docs inside the
+    # selected intervals — each has ALL its postings decoded
+    mask, ranges = sel
+    docs, partials = _decode_score_arrow(
+        t.take(pa.array(np.flatnonzero(mask))), idf, avgdl, k1, b
     )
-    bound = wand.aligned_bounds(terms_arr, firsts, lasts, ub)
-    order = wand.selection_order(
-        terms_arr,
-        m.column("salt").to_numpy().astype(np.int64),
-        m.column("block_seq").to_numpy().astype(np.int64),
-        bound,
-    )
-    mask, ranges = wand.budget_ranges(
-        terms_arr, firsts, lasts, ns, bound, budget, order=order
-    )
-    sl = t.take(pa.array(np.flatnonzero(mask)))
-    docs, partials = _decode_score_arrow(sl, idf, avgdl, k1, b)
     inside = wand.mask_docs_to_ranges(docs, ranges)
     return _finish_topk(docs[inside], partials[inside], tombs, top_k)
 

@@ -1,19 +1,18 @@
-"""Shared block-max bound math for both execution paths.
+"""Posting-budget block selection, shared by both execution paths.
 
-The distributed plan (operators/bm25._prune_blocks) uses it for exact
-WAND pruning and for the posting budget's range closure; the coordinator
-scorer (operators/local_exec.bm25_topk_local) decodes exactly under the
-budget and uses it only for the range closure over it. Both engines must
-bound and order blocks with the IDENTICAL formula — a drift between the
-two silently desyncs their budgeted results. This module is the single
-source of truth; each path supplies only its own block reads (and, for
-pruning, the distributed path its own θ job).
+Under ``EngineConfig.lexical_budget_postings`` a query whose blocks hold
+more postings than the budget decodes only an impact-ordered range
+closure of them. :func:`budget_selection` picks it from the blocks'
+metadata alone; the coordinator scorer (operators/local_exec) and the
+distributed plan (operators/bm25) both call it on the same rows, so the
+two engines select identical regions by construction. Each path supplies
+only its own decode of the selected blocks.
 
 Bound: UB(B_t) = idf_t · wtf(block_max_tf, block_min_dl, avgdl) — wtf is
 monotone ↑ in tf and ↓ in dl, so the block's stored extremes bound every
-posting under the current corpus stats (codec.py docstring). A block
-survives iff its own bound plus every other term's best-block bound can
-reach θ (the k-th best seed score), or it is itself a seed block.
+posting under the current corpus stats (codec.py docstring). Each block
+is ranked by its own bound plus every other term's best OVERLAPPING
+block bound (:func:`aligned_bounds`).
 """
 
 from __future__ import annotations
@@ -43,34 +42,12 @@ def block_upper_bounds(
     return np.array([idf[t] for t in terms]) * wtf
 
 
-def seed_by_bound(bound: np.ndarray, n_docs: np.ndarray, top_k: int) -> np.ndarray:
-    """Seed block indices: highest-aligned-bound blocks until they cover
-    ≥ top_k docs (their accumulated scores establish θ, a lower bound of
-    the true k-th best since partial ≤ true)."""
-    order = np.argsort(-bound, kind="stable")
-    cum = np.cumsum(n_docs[order])
-    take = int(np.searchsorted(cum, top_k)) + 1
-    return order[: min(take, order.size)]
-
-
-def is_uniform(bound: np.ndarray, q: float = 0.05, ratio: float = 0.98) -> bool:
-    """Stopword-class detection: near-flat bound distribution (clamped
-    uniform idfs) — no θ can beat it, pruning machinery is pure
-    overhead. Performance heuristic only; both branches are exact."""
-    if bound.size == 0:
-        return True
-    bmax = float(bound.max())
-    return bmax > 0 and float(np.quantile(bound, q)) >= ratio * bmax
-
-
 # ----------------------------------------------------- range-aligned bounds
 #
-# The global slack above charges every block the OTHER terms' best block
-# anywhere in the corpus. Within one term a block's doc interval
-# [first_doc, last_doc] is disjoint from its siblings', so the other
-# terms' contribution to any doc in the block is bounded by their best
-# block OVERLAPPING that interval — strictly tighter, same exactness
-# proof (the other term's block containing a shared doc necessarily
+# Within one term a block's doc interval [first_doc, last_doc] is
+# disjoint from its siblings', so the other terms' contribution to any
+# doc in the block is bounded by their best block OVERLAPPING that
+# interval (the other term's block containing a shared doc necessarily
 # overlaps). Range-max over the overlap run (contiguous, since sorted
 # disjoint intervals) answers from an O(n log n) numpy sparse table.
 
@@ -138,8 +115,8 @@ def selection_order(
     bound: np.ndarray,
 ) -> np.ndarray:
     """Deterministic impact order: bound desc, ties on (term, salt,
-    block_seq) — independent of input ROW order, so the coordinator and
-    distributed paths select identical budget regions."""
+    block_seq) — independent of input ROW order, so a reordered read of
+    the same blocks selects the same budget region."""
     _, codes = np.unique(terms, return_inverse=True)
     return np.lexsort((seqs, salts, codes, -bound))
 
@@ -207,6 +184,47 @@ def budget_ranges(
         spent += cost
         ranges.append((lo, hi))
     return included, ranges
+
+
+# the block metadata budget_selection reads, one row per posting block
+BLOCK_META_COLUMNS = [
+    "term", "salt", "block_seq", "n_docs", "first_doc", "last_doc",
+    "block_max_tf", "block_min_dl",
+]
+
+
+def budget_selection(
+    meta,
+    idf: dict[str, float],
+    avgdl: float,
+    k1: float,
+    b: float,
+    budget: int,
+) -> tuple[np.ndarray, list[tuple[int, int]]] | None:
+    """The posting budget's block selection over ``meta``, an Arrow table
+    with :data:`BLOCK_META_COLUMNS` (extra columns are ignored).
+
+    None when the budget is off (``budget <= 0``) or the blocks' summed
+    ``n_docs`` is within it: the query decodes every block. Otherwise
+    (decode_mask over ``meta``'s rows, selected doc intervals) from
+    :func:`budget_ranges` in :func:`selection_order`."""
+    if budget <= 0 or meta is None:
+        return None
+
+    def col(name):
+        return meta.column(name).to_numpy().astype(np.int64)
+
+    ns = col("n_docs")
+    if int(ns.sum()) <= budget:
+        return None
+    terms = np.array(meta.column("term").to_pylist())
+    firsts, lasts = col("first_doc"), col("last_doc")
+    ub = block_upper_bounds(
+        list(terms), col("block_max_tf"), col("block_min_dl"), idf, avgdl, k1, b
+    )
+    bound = aligned_bounds(terms, firsts, lasts, ub)
+    order = selection_order(terms, col("salt"), col("block_seq"), bound)
+    return budget_ranges(terms, firsts, lasts, ns, bound, budget, order=order)
 
 
 def mask_docs_to_ranges(docs: np.ndarray, ranges: list[tuple[int, int]]) -> np.ndarray:

@@ -1,8 +1,8 @@
 """THE correctness gate: rank-identical BM25 top-k (docIDs + scores,
 |Δ|<1e-6 on the negated-score convention) between the Spark posting index
 and a real SQLite FTS5 database built from the same chunks (SURVEY.md §5
-item 2), on the reference query set plus edge queries, with block-max
-pruning both on and off."""
+item 2), on the reference query set plus edge queries, on both
+engines."""
 
 from __future__ import annotations
 
@@ -36,7 +36,7 @@ QUERIES = [
 
 N_DOCS = 120
 CONFIG = EngineConfig(
-    block_size=16,      # small blocks → many blocks → pruning paths exercised
+    block_size=16,      # small blocks → many blocks per term
     salt_range=64,      # multiple salt runs per common term
     n_term_buckets=8,
     n_build_shards=2,
@@ -68,11 +68,8 @@ def built_index(spark, tmp_path_factory):
     oracle.close()
 
 
-@pytest.mark.parametrize(
-    "engine,prune",
-    [("spark", False), ("spark", True), ("local", False), ("local", True)],
-)
-def test_bm25_rank_identity(built_index, spark, engine, prune) -> None:
+@pytest.mark.parametrize("engine", ["spark", "local"])
+def test_bm25_rank_identity(built_index, spark, engine) -> None:
     """Both execution paths — the distributed plan and the coordinator
     short-circuit (operators/local_exec.py) — must be rank- and
     score-identical to the FTS5 oracle."""
@@ -80,11 +77,11 @@ def test_bm25_rank_identity(built_index, spark, engine, prune) -> None:
     service = SearchService(spark, index_dir, CONFIG)
     for query in QUERIES:
         expected = oracle.lexical_search(query, top_k=10)
-        got = service.lexical(query, top_k=10, prune=prune, engine=engine)
+        got = service.lexical(query, top_k=10, engine=engine)
         exp_ids = [r["chunk_id"] for r in expected]
         got_ids = [r["chunk_id"] for r in got]
         assert got_ids == exp_ids, (
-            f"query={query!r} engine={engine} prune={prune}\n exp={exp_ids}\n got={got_ids}"
+            f"query={query!r} engine={engine}\n exp={exp_ids}\n got={got_ids}"
         )
         for e, g in zip(expected, got):
             assert abs(e["bm25_score"] - g["bm25_score"]) < 1e-6, (

@@ -1,16 +1,17 @@
 """Impact-ordered evaluation gates (round-4 verdict #3):
 
-- exactness invariants: the distributed plan's prune on/off return
-  identical rankings and bit-identical scores, and the coordinator's
-  full decode matches the distributed plain scan;
+- exactness: the coordinator's full decode matches the distributed
+  plain scan, rank and score;
 - ``lexical_budget_postings``: under-budget queries are EXACT; over-
   budget (stopword-class) queries return the impact-ordered range-
   closure approximation whose SCORES are exact (every returned doc has
-  all its postings decoded), deterministically identical between the
-  coordinator and distributed paths;
+  all its postings decoded), identical between the coordinator and
+  distributed paths, which share one selection
+  (``wand.budget_selection``) that ignores the metadata's row order;
 - decoded work in budgeted mode is capped near the budget (the
   sublinear-growth evidence lives in bench.py's two-corpus stress
-  block).
+  block);
+- ``engine="auto"`` routes lexical queries on the capped working set.
 """
 
 from __future__ import annotations
@@ -71,9 +72,7 @@ def test_prune_invariance_and_coordinator_matches_scan(spark, store) -> None:
     from rifflux_spark.operators.local_exec import bm25_topk_local
 
     for q in (_stopword_query(spark, store), _rare_query(spark, store)):
-        s1 = [(r["doc_ord"], r["bm25_score"]) for r in bm25_topk(spark, store, q, 10, CONFIG, prune=True, min_blocks_to_prune=1).collect()]
-        s2 = [(r["doc_ord"], r["bm25_score"]) for r in bm25_topk(spark, store, q, 10, CONFIG, prune=False).collect()]
-        assert s1 == s2, q
+        s2 = [(r["doc_ord"], r["bm25_score"]) for r in bm25_topk(spark, store, q, 10, CONFIG).collect()]
         # the coordinator decodes every block: it must equal the plain scan
         local = bm25_topk_local(store, q, top_k=10, config=CONFIG)
         assert [d for d, _ in local] == [d for d, _ in s2], q
@@ -108,9 +107,7 @@ def test_budgeted_scores_are_exact_and_paths_agree(spark, store) -> None:
 
     spark_got = [
         (r["doc_ord"], r["bm25_score"])
-        for r in bm25_topk(
-            spark, store, q, 10, BUDGET, prune=True, min_blocks_to_prune=1
-        ).collect()
+        for r in bm25_topk(spark, store, q, 10, BUDGET).collect()
     ]
     assert [d for d, _ in spark_got] == [d for d, _ in got]
     assert all(abs(a[1] - b[1]) < 1e-12 for a, b in zip(spark_got, got))
@@ -138,10 +135,10 @@ def test_default_config_budget_is_on_and_under_budget_exact(spark, store) -> Non
         )
 
 
-def test_budget_caps_queries_below_min_blocks_to_prune(spark, store) -> None:
-    """The budget applies at any block count: an over-budget query with
-    fewer blocks than the default ``min_blocks_to_prune`` (64) is capped,
-    and identically on both engines."""
+def test_budget_caps_few_block_queries_on_both_engines(spark, store) -> None:
+    """The budget applies at any block count: an over-budget one-term
+    query of only 8-63 blocks is capped, and identically on both
+    engines."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -191,23 +188,31 @@ def test_budget_ranges_caps_decoded_postings() -> None:
 
 
 def test_keyfilter_lanes_agree(spark, store, monkeypatch) -> None:
-    """The distributed pruner filters kept blocks through one of two
-    lanes: an In(...) literal (small key sets) or a broadcast left-semi
-    join on (term, salt, block_seq) past _ISIN_KEY_MAX keys. Both lanes
-    must yield the identical ranking and bit-identical scores."""
+    """The distributed plan filters an over-budget query's selected
+    blocks through one of two lanes: an In(...) literal (small key sets)
+    or a broadcast left-semi join on (term, salt, block_seq) past
+    _ISIN_KEY_MAX keys. Both lanes must yield the identical ranking and
+    bit-identical scores. Both probes are over budget (the rare one under
+    a 1-posting budget: one closure), so every run filters."""
     from rifflux_spark.operators import bm25 as bm25mod
 
     probes = (
-        (_rare_query(spark, store), CONFIG),
+        (_rare_query(spark, store), dataclasses.replace(CONFIG, lexical_budget_postings=1)),
         (_stopword_query(spark, store), BUDGET),
     )
+    filtered = []
+    real_filter = bm25mod._filter_blocks_by_keys
+
+    def counting_filter(*args):
+        filtered.append(len(list(args[-1])))
+        return real_filter(*args)
+
+    monkeypatch.setattr(bm25mod, "_filter_blocks_by_keys", counting_filter)
 
     def run():
         out = []
         for q, cfg in probes:
-            rows = bm25mod.bm25_topk(
-                spark, store, q, 10, cfg, prune=True, min_blocks_to_prune=1
-            ).collect()
+            rows = bm25mod.bm25_topk(spark, store, q, 10, cfg).collect()
             out.append([(r["doc_ord"], r["bm25_score"]) for r in rows])
         return out
 
@@ -217,6 +222,7 @@ def test_keyfilter_lanes_agree(spark, store, monkeypatch) -> None:
     via_semijoin = run()
     assert via_isin == via_semijoin
     assert all(via_isin), "a probe returned nothing"
+    assert len(filtered) == 2 * len(probes) and all(filtered), filtered
 
 
 def test_keyfilter_semijoin_lane_is_broadcast(spark, store, monkeypatch) -> None:
@@ -247,10 +253,10 @@ def test_keyfilter_semijoin_lane_is_broadcast(spark, store, monkeypatch) -> None
 
 
 def test_prune_false_with_budget_matches_local_contract(spark, store) -> None:
-    """prune=False + budget: an over-budget query still applies the
-    budget (both engines agree on the doc set); an under-budget query
-    is a straight full scan — _prune_blocks must be a no-op, mirroring
-    the coordinator path's exact decode under the budget."""
+    """With a budget, an over-budget query is capped identically on both
+    engines; an under-budget query is a straight full scan on Spark —
+    no block filter in its plan — mirroring the coordinator path's exact
+    decode under the budget."""
     from rifflux_spark.operators import bm25 as bm25mod
     from rifflux_spark.operators.local_exec import bm25_topk_local, local_df
 
@@ -263,30 +269,123 @@ def test_prune_false_with_budget_matches_local_contract(spark, store) -> None:
         got_local = bm25_topk_local(store, q, top_k=10, config=BUDGET)
         got_spark = [
             (r["doc_ord"], r["bm25_score"])
-            for r in bm25mod.bm25_topk(
-                spark, store, q, 10, BUDGET, prune=False, min_blocks_to_prune=1
-            ).collect()
+            for r in bm25mod.bm25_topk(spark, store, q, 10, BUDGET).collect()
         ]
         assert [d for d, _ in got_spark] == [d for d, _ in got_local], q
         assert all(
             abs(a[1] - b[1]) < 1e-9 for a, b in zip(got_spark, got_local)
         ), q
 
-    # under budget + prune=False: no block filter may be applied — the
-    # plan must be the plain posting scan (no semi-join, no In on the
-    # synthetic key column)
-    blocks, ranges = bm25mod._prune_blocks(
-        store.postings_for_terms(sorted(set(under_q.split()))),
-        {t: 1.0 for t in set(under_q.split())},
-        10,
-        100.0,
-        BUDGET,
-        min_blocks_to_prune=1,
-        store=store,
-        prune=False,
-    )
-    assert ranges is None
+    # under budget: no block filter may be applied — the plan must be
+    # the plain posting scan (no semi-join, no In on the synthetic key
+    # column); over budget the key filter is there
     from tests.test_physical_plans import explain_str
 
-    plan = explain_str(blocks)
+    plan = explain_str(bm25mod.bm25_topk(spark, store, under_q, 10, BUDGET))
     assert "LeftSemi" not in plan and "concat_ws" not in plan
+    plan = explain_str(bm25mod.bm25_topk(spark, store, over_q, 10, BUDGET))
+    assert "LeftSemi" in plan or "concat_ws" in plan
+
+
+def _selected(meta, sel):
+    mask, ranges = sel
+    keys = zip(
+        meta.column("term").to_pylist(),
+        meta.column("salt").to_pylist(),
+        meta.column("block_seq").to_pylist(),
+    )
+    return {k for k, m in zip(keys, mask) if m}, ranges
+
+
+def test_budget_selection_ignores_row_order(spark, store) -> None:
+    """``selection_order`` breaks bound ties on (term, salt, block_seq),
+    so permuting the metadata table's rows selects the same blocks and
+    the same doc intervals — on the store's stopword-query blocks and on
+    a synthetic table whose bounds all tie."""
+    import pyarrow as pa
+
+    from rifflux_spark.operators import wand
+    from rifflux_spark.operators.local_exec import local_df, query_idf, read_postings
+
+    q = _stopword_query(spark, store)
+    terms = q.split()
+    cstats = store.corpus_stats()
+    idf = query_idf(terms, local_df(store, sorted(set(terms))), int(cstats["n_docs"]))
+    real = read_postings(store, sorted(idf), wand.BLOCK_META_COLUMNS)
+    n = 96
+    tied = pa.table({
+        "term": ["a", "b", "c"] * (n // 3),
+        "salt": [i % 4 for i in range(n)],
+        "block_seq": list(range(n)),
+        "n_docs": [16] * n,
+        "first_doc": [(i // 3) * 16 for i in range(n)],
+        "last_doc": [(i // 3) * 16 + 15 for i in range(n)],
+        "block_max_tf": [1] * n,
+        "block_min_dl": [10] * n,
+    })
+    cases = (
+        (real, idf, float(cstats["avgdl"]), BUDGET.lexical_budget_postings),
+        (tied, {"a": 1.0, "b": 1.0, "c": 1.0}, 10.0, 200),
+    )
+    rng = np.random.RandomState(3)
+    for meta, qidf, avgdl, budget in cases:
+        base = wand.budget_selection(meta, qidf, avgdl, 1.2, 0.75, budget)
+        assert base is not None, "probe not over budget"
+        want = _selected(meta, base)
+        assert 0 < len(want[0]) < meta.num_rows
+        for _ in range(5):
+            perm = meta.take(pa.array(rng.permutation(meta.num_rows)))
+            assert _selected(perm, wand.budget_selection(perm, qidf, avgdl, 1.2, 0.75, budget)) == want
+
+
+def _over_query_and_line(spark, store):
+    """A stopword query, and a routing line between the budget and its
+    Σdf: under the budget's cap the query fits, uncapped it does not."""
+    from rifflux_spark.operators.local_exec import local_df
+
+    q = _stopword_query(spark, store)
+    sigma = sum(local_df(store, sorted(set(q.split()))).values())
+    line = BUDGET.lexical_budget_postings
+    assert sigma > line, "probe not over the line"
+    return q, line
+
+
+def test_budgeted_lexical_routes_to_coordinator_past_line(spark, store, monkeypatch) -> None:
+    """Budget on: the route compares min(Σdf, budget), so a query whose
+    Σdf is over LOCAL_EXEC_MAX_POSTINGS stays on the coordinator."""
+    from rifflux_spark import service as service_mod
+
+    q, line = _over_query_and_line(spark, store)
+    monkeypatch.setattr(service_mod.SearchService, "LOCAL_EXEC_MAX_POSTINGS", line)
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("lexical query reached the distributed scorer")
+
+    monkeypatch.setattr(service_mod, "bm25_topk", no_spark)
+    svc = service_mod.SearchService(spark, store.root, BUDGET)
+    assert svc.lexical(q, 10) == svc.lexical(q, 10, engine="local")
+
+
+def test_exact_lexical_routes_to_spark_past_line(spark, store, monkeypatch) -> None:
+    """Budget 0: the route compares Σdf, so the same query goes to Spark
+    (and returns the coordinator's rows)."""
+    from rifflux_spark import service as service_mod
+
+    q, line = _over_query_and_line(spark, store)
+    monkeypatch.setattr(service_mod.SearchService, "LOCAL_EXEC_MAX_POSTINGS", line)
+    calls = []
+    real = service_mod.bm25_topk
+
+    def spy(*args, **kwargs):
+        calls.append(kwargs.get("dfs"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(service_mod, "bm25_topk", spy)
+    exact = dataclasses.replace(CONFIG, lexical_budget_postings=0)
+    svc = service_mod.SearchService(spark, store.root, exact)
+    got = svc.lexical(q, 10)
+    # the routing dfs feed the distributed scorer
+    assert len(calls) == 1 and calls[0], calls
+    local = svc.lexical(q, 10, engine="local")
+    assert [r["chunk_id"] for r in got] == [r["chunk_id"] for r in local]
+    assert all(abs(a["bm25_score"] - b["bm25_score"]) < 1e-12 for a, b in zip(got, local))

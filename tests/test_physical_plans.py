@@ -68,7 +68,7 @@ def test_chunks_rehydration_pushes_docord_and_prunes_columns(spark, store) -> No
 
 
 def test_topk_rehydration_broadcasts_small_side(spark, store) -> None:
-    topk = bm25_topk(spark, store, "the data", top_k=5, config=CONFIG, prune=False)
+    topk = bm25_topk(spark, store, "the data", top_k=5, config=CONFIG)
     joined = topk.join(store.chunks(), on="doc_ord", how="inner").select(
         "doc_ord", "chunk_id", "bm25_score"
     )
@@ -77,7 +77,7 @@ def test_topk_rehydration_broadcasts_small_side(spark, store) -> None:
 
 
 def test_topk_uses_take_ordered(spark, store) -> None:
-    topk = bm25_topk(spark, store, "the data", top_k=5, config=CONFIG, prune=False)
+    topk = bm25_topk(spark, store, "the data", top_k=5, config=CONFIG)
     plan = explain_str(topk)
     assert "TakeOrderedAndProject" in plan
 

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from rifflux_spark.config import EngineConfig
 from rifflux_spark.functions.xxhash64 import term_bucket
-from rifflux_spark.operators import ftsquery, local_exec
+from rifflux_spark.operators import ftsquery, local_exec, wand
 from rifflux_spark.plans.build import build_index
 from rifflux_spark.plans.incremental import apply_incremental, compact, vacuum
 from rifflux_spark.sources import tables as tables_mod
@@ -32,7 +32,7 @@ CONFIG = EngineConfig(
 )
 COLUMN_SETS = [
     local_exec.POSTING_COLUMNS,
-    local_exec.BOUND_COLUMNS,
+    wand.BLOCK_META_COLUMNS,
     ["term", "n_docs"],
     ["dls", "term", "first_doc"],
     None,  # every column
