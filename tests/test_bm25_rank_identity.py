@@ -2,9 +2,11 @@
 |Δ|<1e-6 on the negated-score convention) between the Spark posting index
 and a real SQLite FTS5 database built from the same chunks (SURVEY.md §5
 item 2), on the reference query set plus edge queries, on both
-engines."""
+engines, in exact mode and under the default posting budget."""
 
 from __future__ import annotations
+
+import dataclasses
 
 import pytest
 from pyspark.sql import functions as F
@@ -68,20 +70,27 @@ def built_index(spark, tmp_path_factory):
     oracle.close()
 
 
-@pytest.mark.parametrize("engine", ["spark", "local"])
-def test_bm25_rank_identity(built_index, spark, engine) -> None:
+@pytest.mark.parametrize(
+    "engine,exact",
+    [("spark", False), ("spark", True), ("local", False), ("local", True)],
+)
+def test_bm25_rank_identity(built_index, spark, engine, exact) -> None:
     """Both execution paths — the distributed plan and the coordinator
     short-circuit (operators/local_exec.py) — must be rank- and
-    score-identical to the FTS5 oracle."""
+    score-identical to the FTS5 oracle, both in exact mode
+    (``lexical_budget_postings=0``) and under the default budget, which
+    every query here stays within."""
     index_dir, oracle = built_index
-    service = SearchService(spark, index_dir, CONFIG)
+    config = dataclasses.replace(CONFIG, lexical_budget_postings=0) if exact else CONFIG
+    assert (config.lexical_budget_postings == 0) == exact
+    service = SearchService(spark, index_dir, config)
     for query in QUERIES:
         expected = oracle.lexical_search(query, top_k=10)
         got = service.lexical(query, top_k=10, engine=engine)
         exp_ids = [r["chunk_id"] for r in expected]
         got_ids = [r["chunk_id"] for r in got]
         assert got_ids == exp_ids, (
-            f"query={query!r} engine={engine}\n exp={exp_ids}\n got={got_ids}"
+            f"query={query!r} engine={engine} exact={exact}\n exp={exp_ids}\n got={got_ids}"
         )
         for e, g in zip(expected, got):
             assert abs(e["bm25_score"] - g["bm25_score"]) < 1e-6, (
