@@ -222,7 +222,7 @@ def decode_posting_arrow(t) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndar
     """(doc_ords, tfs, dls, n_docs) decoded from an Arrow table or
     RecordBatch of posting-block rows — THE shared prologue of every
     Arrow-native posting reader (distributed BM25 scorer, coordinator
-    scorer, FTS unit decode, phrase candidate decode). Payload bytes
+    scorer, MATCH evaluator). Payload bytes
     flow straight from the Arrow binary buffers into the varbyte
     decoder via :func:`_cat_binary`; a codec or block-schema change
     lands here once instead of in every scorer."""

@@ -3,7 +3,7 @@
 SQLite FTS5 answers a phrase query as ``MATCH '"t1 t2 ..."'``; so does
 this engine. :func:`phrase_match` compiles a query to that quoted MATCH
 expression and the FTS5 MATCH evaluator (operators/ftsquery.py) runs
-it on either engine by candidate recheck, FTS5-parity BM25 with the
+it on the coordinator by candidate recheck, FTS5-parity BM25 with the
 phrase as the scoring unit (tf = occurrence count incl. overlaps, df =
 phrase row count).
 """

@@ -88,16 +88,15 @@ class SearchService:
     #   host, local[4]; median of 3): the ten highest-df terms (Σdf
     #   2,002,186) at the default budget take 876 ms on the coordinator
     #   and 3137 ms forced onto Spark, returning the same chunks.
-    # - FTS and phrase: Σdf of every resolved term (prefixes expanded) over
-    #   LOCAL_EXEC_MAX_POSTINGS, or a phrase, column-filtered or anchored
-    #   unit whose rarest full token's df (the candidates it rehydrates
-    #   and rechecks) exceeds LOCAL_EXEC_MAX_CANDIDATES.
     # - semantic: an embeddings table over LOCAL_EXEC_BUDGET_BYTES (a
     #   semantic scan is always corpus-sized).
+    # FTS MATCH and phrase queries never reach Spark: the coordinator's
+    # evaluator (operators/ftsquery.py) is the only one, because it beat
+    # the deleted distributed plan on every class that plan served
+    # (crossover table in that module's docstring).
     # The df lookups are driver-side term_stats reads (milliseconds).
     LOCAL_EXEC_MAX_POSTINGS = 2_000_000
     LOCAL_EXEC_BUDGET_BYTES = 256 << 20
-    LOCAL_EXEC_MAX_CANDIDATES = 100_000
 
     def lexical(
         self, query: str, top_k: int, engine: str = "auto"
@@ -139,42 +138,31 @@ class SearchService:
         )
         return self._spark_rows(topk)
 
-    def phrase(
-        self, query: str, top_k: int = 10, engine: str = "auto"
-    ) -> list[dict[str, Any]]:
+    def phrase(self, query: str, top_k: int = 10) -> list[dict[str, Any]]:
         """Exact-phrase search (beyond-reference): the whole query is ONE
         phrase — docs where its tokens appear contiguously within a
         single indexed column, BM25-ranked with the phrase as the
         scoring unit. It is the FTS5 ``MATCH '"..."'`` of the query's
-        tokens (operators/phrase.phrase_match), evaluated and routed by
-        :meth:`fts`."""
-        if engine not in {"auto", "local", "spark"}:
-            raise ValueError(f"unknown engine: {engine}")
+        tokens (operators/phrase.phrase_match), evaluated by :meth:`fts`."""
         with self.store.read_snapshot():
-            return self._phrase(query, top_k, engine=engine)
+            return self._phrase(query, top_k)
 
-    def _phrase(
-        self, query: str, top_k: int, engine: str = "auto"
-    ) -> list[dict[str, Any]]:
+    def _phrase(self, query: str, top_k: int) -> list[dict[str, Any]]:
         from rifflux_spark.operators.phrase import phrase_match
 
         match = phrase_match(query)
-        return self._fts(match, top_k, engine=engine) if match else []
+        return self._fts(match, top_k) if match else []
 
-    def fts(
-        self, query: str, top_k: int = 10, engine: str = "auto"
-    ) -> list[dict[str, Any]]:
-        """Full FTS5 MATCH evaluation (operators/ftsquery.py): terms,
-        ``tok*`` prefixes, quoted phrases, AND/OR/NOT, parentheses —
-        rank+score-identical to SQLite FTS5 on both paths
-        (tests/test_fts_rank_identity.py). On a syntax error the
-        reference's fallback contract applies (sqlite_store.py:246-254):
+    def fts(self, query: str, top_k: int = 10) -> list[dict[str, Any]]:
+        """Full FTS5 MATCH evaluation on the coordinator
+        (operators/ftsquery.py): terms, ``tok*`` prefixes, quoted
+        phrases, AND/OR/NOT, parentheses — rank+score-identical to
+        SQLite FTS5 (tests/test_fts_rank_identity.py). On a syntax error
+        the reference's fallback contract applies (sqlite_store.py:246-254):
         retry with the bare space-joined terms (= implicit AND);
         punctuation-only queries return []."""
-        if engine not in {"auto", "local", "spark"}:
-            raise ValueError(f"unknown engine: {engine}")
         with self.store.read_snapshot():
-            return self._fts(query, top_k, engine=engine)
+            return self._fts(query, top_k)
 
     def _parse_with_fallback(self, query: str):
         """Parse a MATCH expression; on a syntax error apply the
@@ -241,9 +229,7 @@ class SearchService:
         )
         return [self._result_row(r, r[key], key) for r in rows]
 
-    def _fts(
-        self, query: str, top_k: int, engine: str = "auto"
-    ) -> list[dict[str, Any]]:
+    def _fts(self, query: str, top_k: int) -> list[dict[str, Any]]:
         from rifflux_spark.functions.ftsparse import FtsSyntaxError
         from rifflux_spark.operators import ftsquery as FQ
 
@@ -251,7 +237,9 @@ class SearchService:
         if ast is None:
             return []
         try:
-            return self._fts_exec(ast, query, top_k, engine, FQ)
+            topk = FQ.fts_topk_local(
+                self.store, query, top_k, self.config, cstats=self._corpus_stats()
+            )
         except FtsSyntaxError:
             # errors can also surface at EXECUTION time (a prefix whose
             # vocabulary expansion blows the MAX_PREFIX_EXPANSION cap);
@@ -259,69 +247,20 @@ class SearchService:
             fallback = " ".join(compile_query(query))
             if not fallback or fallback == query:
                 return []
-            from rifflux_spark.functions.ftsparse import parse_fts
-
             try:
-                ast = parse_fts(fallback)
+                topk = FQ.fts_topk_local(
+                    self.store, fallback, top_k, self.config,
+                    cstats=self._corpus_stats(),
+                )
             except FtsSyntaxError:
                 return []
-            if ast is None:
-                return []
-            return self._fts_exec(ast, fallback, top_k, engine, FQ)
-
-    def _fts_exec(
-        self, ast, query: str, top_k: int, engine: str, FQ
-    ) -> list[dict[str, Any]]:
-        if engine != "spark":
-            from rifflux_spark.functions.ftsparse import collect_units
-            from rifflux_spark.operators import local_exec
-
-            units = collect_units(ast)
-            # route on the FULL working set: plain tokens plus every
-            # prefix tail's resolved terms — ONE merged marker when a
-            # prefix index covers the length (operators/prefix.py),
-            # else the vocabulary expansion (a pure-prefix query can
-            # decode far more postings than its token count suggests —
-            # the resolved terms ARE the working set)
-            _per_unit, all_terms = FQ._units_needing(units, self.store)
-            dfs = local_exec.local_df(self.store, all_terms)
-            # a recheck unit (multi-token, column-filtered or anchored)
-            # verifies candidates bounded by its rarest full token's df
-            recheck_bounds = [
-                min(
-                    (dfs.get(t, 0) for t in (u.tokens[:-1] if u.prefix else u.tokens)),
-                    default=0,
-                )
-                for u in units
-                if len(u.tokens) > 1 or u.cols is not None or u.anchored
-            ]
-            use_local = engine == "local" or (
-                sum(dfs.values()) <= self.LOCAL_EXEC_MAX_POSTINGS
-                and all(
-                    bound <= self.LOCAL_EXEC_MAX_CANDIDATES
-                    for bound in recheck_bounds
-                )
-            )
-            if use_local:
-                return self._local_rows(
-                    FQ.fts_topk_local(
-                        self.store, query, top_k, self.config,
-                        cstats=self._corpus_stats(),
-                    )
-                )
-        return self._spark_rows(
-            FQ.fts_topk(
-                self.spark, self.store, query, top_k, self.config,
-                cstats=self._corpus_stats(),
-            )
-        )
+        return self._local_rows(topk)
 
     def highlight(
         self,
         query: str,
         top_k: int = 10,
         marks: tuple[str, str] = ("<b>", "</b>"),
-        engine: str = "auto",
     ) -> list[dict[str, Any]]:
         """FTS5 ``highlight()`` parity: run the MATCH query, then wrap
         the matched-and-active instance spans in each result's content
@@ -331,7 +270,7 @@ class SearchService:
         from rifflux_spark.functions.ftsparse import FtsSyntaxError, parse_fts
         from rifflux_spark.operators.highlight import highlight_columns
 
-        rows = self.fts(query, top_k=top_k, engine=engine)
+        rows = self.fts(query, top_k=top_k)
         if not rows:
             return rows
         ast, _q = self._parse_with_fallback(query)
@@ -362,7 +301,6 @@ class SearchService:
         n_tokens: int = 10,
         marks: tuple[str, str] = ("<b>", "</b>"),
         ellipsis: str = "…",
-        engine: str = "auto",
     ) -> list[dict[str, Any]]:
         """FTS5 ``snippet()`` parity: run the MATCH query, then render
         each result's best ``n_tokens`` window of ``col`` with the
@@ -372,7 +310,7 @@ class SearchService:
         from rifflux_spark.functions.ftsparse import FtsSyntaxError, parse_fts
         from rifflux_spark.operators.highlight import snippet_column
 
-        rows = self.fts(query, top_k=top_k, engine=engine)
+        rows = self.fts(query, top_k=top_k)
         if not rows:
             return rows
         ast, _q = self._parse_with_fallback(query)

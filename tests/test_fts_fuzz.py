@@ -102,7 +102,7 @@ def test_service_fts_total_on_garbage(spark, tmp_path_factory) -> None:
     rng = random.Random(77)
     for i in range(40):
         q = _random_query(rng) if i % 2 else _structured_query(rng)
-        assert isinstance(svc.fts(q, top_k=3, engine="local"), list), q
+        assert isinstance(svc.fts(q, top_k=3), list), q
     for q in ['((((', 'NEAR(', '":"', "^*", "+ +", "a NOT NOT b"]:
         assert isinstance(svc.fts(q, top_k=3), list), q
         assert isinstance(svc.highlight(q, top_k=3), list), q

@@ -1,5 +1,5 @@
 """FTS5 MATCH language gate: rank- and score-identical top-k between
-operators/ftsquery.py (both execution paths) and real SQLite FTS5 on
+operators/ftsquery.py and real SQLite FTS5 on
 raw MATCH expressions — terms, ``tok*`` prefixes, quoted phrases,
 AND / OR / NOT, parentheses, and their compositions.
 
@@ -124,13 +124,14 @@ def _queries(chunks) -> list[str]:
     ]
 
 
-@pytest.mark.parametrize("engine", ["local", "spark"])
+# the coordinator ("local") is the one MATCH evaluator
+@pytest.mark.parametrize("engine", ["local"])
 def test_fts_match_rank_identity(built_index, spark, engine) -> None:
     index_dir, oracle, chunks = built_index
     service = SearchService(spark, index_dir, CONFIG)
     n_nonempty = 0
     for q in _queries(chunks):
-        got = service.fts(q, top_k=10, engine=engine)
+        got = service.fts(q, top_k=10)
         want = oracle.match_search(q, top_k=10)
         assert [r["chunk_id"] for r in got] == [
             r["chunk_id"] for r in want
@@ -150,7 +151,7 @@ def test_fts_syntax_error_falls_back_to_bare_terms(built_index, spark) -> None:
     vocab, _ = _vocab(chunks)
     c0, c1 = [t for t, _ in vocab.most_common(2)]
     # unbalanced paren → reference contract: retry bare terms (= AND)
-    got = service.fts(f"({c0} {c1}", top_k=10, engine="local")
+    got = service.fts(f"({c0} {c1}", top_k=10)
     want = oracle.match_search(f"{c0} {c1}", top_k=10)
     assert [r["chunk_id"] for r in got] == [r["chunk_id"] for r in want]
     assert service.fts("!!! ...", top_k=5) == []
@@ -222,10 +223,10 @@ def test_parser_shapes() -> None:
 
 
 def test_engines_agree_on_randomized_queries(built_index, spark) -> None:
-    """local-vs-spark engine agreement on randomized MATCH queries —
-    the fixed battery pins both engines to SQLite; this fuzzes the
-    corners where the two implementations could drift from each other
-    (pivoted flag assembly vs dict algebra, NEAR frames, df remap)."""
+    """The coordinator evaluator agrees with SQLite FTS5 on randomized
+    MATCH queries — seeded compositions of phrases, prefixes, NEAR
+    groups, column filters and bare terms under OR / NOT / AND /
+    juxtaposition, the corners the fixed battery does not enumerate."""
     import random as _random
 
     index_dir, oracle, chunks = built_index
@@ -250,8 +251,54 @@ def test_engines_agree_on_randomized_queries(built_index, spark) -> None:
                 parts.append(w)
         glue = rng.choice([" ", " OR ", " NOT ", " AND "])
         q = glue.join(parts)
-        loc = service.fts(q, top_k=10, engine="local")
-        spk = service.fts(q, top_k=10, engine="spark")
-        assert [r["chunk_id"] for r in loc] == [r["chunk_id"] for r in spk], q
-        for a, b in zip(loc, spk):
-            assert abs(a["bm25_score"] - b["bm25_score"]) < 1e-9, q
+        got = service.fts(q, top_k=10)
+        want = oracle.match_search(q, top_k=10)
+        assert [r["chunk_id"] for r in got] == [r["chunk_id"] for r in want], q
+        for g, w in zip(got, want):
+            assert abs(g["bm25_score"] - w["bm25_score"]) < 1e-6, q
+
+
+def _jobs_started(spark, group: str, fn):
+    """(fn's result, ids of the Spark jobs it started), counted by
+    running it under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_match_queries_start_no_spark_job(built_index, spark) -> None:
+    """fts, phrase, highlight and snippet run on the coordinator: once
+    warm, none of them starts a Spark job — including a phrase of the
+    index's two highest-df tokens, the class the widest candidate
+    recheck comes from."""
+    from collections import Counter
+
+    index_dir, _oracle, chunks = built_index
+    service = SearchService(spark, index_dir, CONFIG)
+    df = Counter(
+        t
+        for c in chunks
+        for t in set(tokenize(c["content"]) + tokenize(c["heading_path"]))
+    )
+    d0, d1 = [t for t, _ in df.most_common(2)]
+    calls = [
+        lambda: service.fts(f"{d0} OR {d1[:3]}* NOT zzqqxxyyneverthere", top_k=10),
+        lambda: service.fts(f"NEAR({d0} {d1}, 5) OR content:{d1}", top_k=10),
+        lambda: service.phrase(f"{d0} {d1}", top_k=10),
+        lambda: service.highlight(f'"{d0} {d1}" OR {d0}', top_k=10),
+        lambda: service.snippet(f"{d0} {d1}", top_k=10),
+    ]
+    for call in calls:
+        call()  # warm-up: a first read may plan on Spark
+    # the probe sees jobs: a Spark action under its group is counted
+    _, control = _jobs_started(spark, "match-probe-control", spark.range(3).count)
+    assert control
+    results, jobs = _jobs_started(
+        spark, "match-probe", lambda: [call() for call in calls]
+    )
+    assert results[0] and results[3], "vacuous MATCH probe"
+    assert jobs == []

@@ -90,7 +90,7 @@ QUERIES = [
 
 
 def _assert_identical(service, oracle, q):
-    got = service.highlight(q, top_k=10, marks=("[", "]"), engine="local")
+    got = service.highlight(q, top_k=10, marks=("[", "]"))
     want = oracle.highlight_search(q, top_k=10)
     assert [r["chunk_id"] for r in got] == [r["chunk_id"] for r in want], q
     for g, w in zip(got, want):
@@ -173,8 +173,7 @@ def test_tokenize_with_offsets_parity() -> None:
 
 def _snippet_pair(service, oracle, q, n_tokens=10):
     got = service.snippet(
-        q, top_k=10, n_tokens=n_tokens, marks=("[", "]"), ellipsis="…",
-        engine="local",
+        q, top_k=10, n_tokens=n_tokens, marks=("[", "]"), ellipsis="…"
     )
     want = oracle.snippet_search(q, top_k=10, col=0, n_tokens=n_tokens)
     assert [r["chunk_id"] for r in got] == [r["chunk_id"] for r in want], q

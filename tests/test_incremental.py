@@ -207,7 +207,7 @@ def test_force_rebuild_wipes_and_rebuilds(spark, tmp_path_factory) -> None:
 def test_fts_modes_match_full_rebuild_after_incremental(
     spark, tmp_path_factory
 ) -> None:
-    """The FTS language paths (phrase + full MATCH, both engines) must
+    """The FTS language paths (phrase + full MATCH) must
     honor tombstones and appended runs exactly like lexical: after an
     incremental apply, phrase/fts results equal a from-scratch rebuild
     of the same snapshot — including per-unit df (which must exclude
@@ -235,34 +235,28 @@ def test_fts_modes_match_full_rebuild_after_incremental(
         "content:varbyte",                      # column filter
     ]
 
-    def fts_results(svc, q, engine):
+    def fts_results(svc, q):
         return [
             (r["chunk_id"], round(r["bm25_score"], 6))
-            for r in svc.fts(q, top_k=10, engine=engine)
+            for r in svc.fts(q, top_k=10)
         ]
 
     for q in fts_queries:
-        for engine in ("local", "spark"):
-            assert fts_results(inc_svc, q, engine) == fts_results(
-                full_svc, q, engine
-            ), (q, engine)
+        assert fts_results(inc_svc, q) == fts_results(full_svc, q), q
 
-    def phrase_results(svc, engine):
+    def phrase_results(svc):
         return [
             (r["chunk_id"], round(r["bm25_score"], 6))
-            for r in svc.phrase("tombstone compaction lineage", 10, engine=engine)
+            for r in svc.phrase("tombstone compaction lineage", 10)
         ]
 
-    for engine in ("local", "spark"):
-        assert phrase_results(inc_svc, engine) == phrase_results(
-            full_svc, engine
-        ), engine
+    assert phrase_results(inc_svc) == phrase_results(full_svc)
 
 
 def test_phrase_matches_rebuild_across_apply_compact_vacuum(
     spark, tmp_path_factory
 ) -> None:
-    """Phrase results on both engines equal a from-scratch rebuild of
+    """Phrase results equal a from-scratch rebuild of
     the same snapshot after an incremental apply, after compact() (dead
     docs purged from the posting blocks in the commit that drops the
     tombstone set) and after vacuum() (postings rebuilt from live
@@ -301,18 +295,14 @@ def test_phrase_matches_rebuild_across_apply_compact_vacuum(
         return sorted((round(r["bm25_score"], 6), r["content"]) for r in rows)
 
     probes = ["phrase probe", "tombstone varbyte", "cache ttl", "the index"]
-    want = {
-        (q, engine): contents(full_svc.phrase(q, top_k=300, engine=engine))
-        for q in probes
-        for engine in ("local", "spark")
-    }
+    want = {q: contents(full_svc.phrase(q, top_k=300)) for q in probes}
     assert all(want.values()), "vacuous phrase probe"
 
     def check(stage: str) -> None:
         svc = SearchService(spark, inc_dir, CONFIG)
-        for (q, engine), rows in want.items():
-            assert contents(svc.phrase(q, top_k=300, engine=engine)) == rows, (
-                f"phrase {q!r} ({engine}) diverges from the rebuild after {stage}"
+        for q, rows in want.items():
+            assert contents(svc.phrase(q, top_k=300)) == rows, (
+                f"phrase {q!r} diverges from the rebuild after {stage}"
             )
 
     check("apply")

@@ -94,8 +94,8 @@ FIXED = [
 ]
 
 
-def _check(service, oracle, q: str, engine: str) -> bool:
-    got = service.fts(q, top_k=10, engine=engine)
+def _check(service, oracle, q: str, engine: str = "local") -> bool:
+    got = service.fts(q, top_k=10)
     want = oracle.match_search(q, top_k=10)
     assert [r["chunk_id"] for r in got] == [r["chunk_id"] for r in want], (
         f"rank mismatch for MATCH {q!r} ({engine}): "
@@ -109,7 +109,8 @@ def _check(service, oracle, q: str, engine: str) -> bool:
     return bool(want)
 
 
-@pytest.mark.parametrize("engine", ["local", "spark"])
+# the coordinator ("local") is the one MATCH evaluator
+@pytest.mark.parametrize("engine", ["local"])
 def test_near_fixed_battery(built_index, spark, engine) -> None:
     index_dir, oracle = built_index
     service = SearchService(spark, index_dir, CONFIG)
@@ -119,8 +120,7 @@ def test_near_fixed_battery(built_index, spark, engine) -> None:
 
 def test_near_randomized_differential(built_index, spark) -> None:
     """60 random NEAR queries (random members incl. phrases/prefixes,
-    random N) — local path only for speed; the spark path shares the
-    same near_trim kernel and is covered by the fixed battery."""
+    random N)."""
     index_dir, oracle = built_index
     service = SearchService(spark, index_dir, CONFIG)
     rng = random.Random(99)
@@ -140,7 +140,7 @@ def test_near_randomized_differential(built_index, spark) -> None:
                 )
         n = rng.randrange(0, 5)
         q = f"NEAR({' '.join(members)}, {n})"
-        nonempty += _check(service, oracle, q, "local")
+        nonempty += _check(service, oracle, q)
     assert nonempty >= 15, f"only {nonempty}/60 queries matched anything"
 
 

@@ -1,6 +1,6 @@
 """Phrase-mode correctness gate: rank- and score-identical top-k
-between phrase mode (a one-phrase MATCH through operators/ftsquery.py,
-both execution paths) and a real SQLite FTS5 phrase MATCH over the
+between phrase mode (a one-phrase MATCH through operators/ftsquery.py)
+and a real SQLite FTS5 phrase MATCH over the
 same chunks — the same oracle discipline as
 the term-query gate (test_bm25_rank_identity), extended to the
 beyond-reference phrase operator.
@@ -21,7 +21,6 @@ import pytest
 from rifflux_spark.config import EngineConfig
 from rifflux_spark.functions.ftsparse import Unit
 from rifflux_spark.functions.tokenizer import tokenize
-from rifflux_spark.operators import ftsquery
 from rifflux_spark.operators.ftsquery import count_unit, unit_instances
 from rifflux_spark.plans.build import build_index
 from rifflux_spark.service import SearchService
@@ -114,13 +113,14 @@ def _nonadjacent_phrase(chunks) -> str | None:
     return None
 
 
-@pytest.mark.parametrize("engine", ["local", "spark"])
+# the coordinator ("local") is the one MATCH evaluator
+@pytest.mark.parametrize("engine", ["local"])
 def test_phrase_rank_identity(built_index, spark, engine) -> None:
     index_dir, oracle, chunks = built_index
     service = SearchService(spark, index_dir, CONFIG)
     # plus a repeated-token phrase (overlap counting) and a stopword
     for q in _corpus_phrases(chunks) + ["cache cache", "the"]:
-        got = service.phrase(q, top_k=10, engine=engine)
+        got = service.phrase(q, top_k=10)
         want = oracle.phrase_search(q, top_k=10)
         assert [r["chunk_id"] for r in got] == [
             r["chunk_id"] for r in want
@@ -133,6 +133,7 @@ def test_phrase_rank_identity(built_index, spark, engine) -> None:
         assert want, f"vacuous phrase pick {q!r}"
 
 
+# ``engine`` is the lexical engine the OR sanity check runs on
 @pytest.mark.parametrize("engine", ["local", "spark"])
 def test_phrase_adjacency_required(built_index, spark, engine) -> None:
     index_dir, oracle, chunks = built_index
@@ -140,18 +141,19 @@ def test_phrase_adjacency_required(built_index, spark, engine) -> None:
     if q is None:
         pytest.skip("corpus has no co-occurring-but-never-adjacent pair")
     service = SearchService(spark, index_dir, CONFIG)
-    assert service.phrase(q, top_k=10, engine=engine) == []
+    assert service.phrase(q, top_k=10) == []
     assert oracle.phrase_search(q, top_k=10) == []
     # sanity: the same two tokens DO produce lexical (OR) hits
     assert service.lexical(q, top_k=10, engine=engine)
 
 
+# a one-token phrase must equal lexical BM25 on either lexical engine
 @pytest.mark.parametrize("engine", ["local", "spark"])
 def test_single_token_phrase_equals_lexical(built_index, spark, engine) -> None:
     index_dir, oracle, chunks = built_index
     service = SearchService(spark, index_dir, CONFIG)
     tok = tokenize(chunks[0]["content"])[0]
-    ph = service.phrase(tok, top_k=10, engine=engine)
+    ph = service.phrase(tok, top_k=10)
     lex = service.lexical(tok, top_k=10, engine=engine)
     assert [r["chunk_id"] for r in ph] == [r["chunk_id"] for r in lex]
     for a, b in zip(ph, lex):
@@ -164,46 +166,6 @@ def test_phrase_edge_queries(built_index, spark) -> None:
     assert service.phrase("!!! ...", top_k=5) == []  # punctuation-only
     assert service.phrase("zzqqxxyyqq cache", top_k=5) == []  # unknown token
     assert service.search("!!!", top_k=5, mode="phrase") == []
-
-
-def test_phrase_routes_to_spark_past_candidate_bound(
-    built_index, spark, monkeypatch
-) -> None:
-    """A phrase whose rarest token's df exceeds LOCAL_EXEC_MAX_CANDIDATES
-    takes the Spark route under engine="auto" and returns the local
-    route's rows."""
-    from rifflux_spark.operators.local_exec import local_df
-
-    index_dir, _oracle, chunks = built_index
-    service = SearchService(spark, index_dir, CONFIG)
-    q = _corpus_phrases(chunks)[0]
-    local = service.phrase(q, top_k=10, engine="local")
-    assert local, f"vacuous phrase pick {q!r}"
-
-    spark_calls = []
-    fts_topk = ftsquery.fts_topk
-
-    def counting_fts_topk(*args, **kwargs):
-        spark_calls.append(args)
-        return fts_topk(*args, **kwargs)
-
-    monkeypatch.setattr(ftsquery, "fts_topk", counting_fts_topk)
-    # under the default bound the same query stays on the coordinator
-    assert service.phrase(q, top_k=10) == local
-    assert not spark_calls
-
-    def no_local(*_args, **_kwargs):
-        raise AssertionError("phrase past the candidate bound ran locally")
-
-    rarest = min(local_df(service.store, sorted(set(tokenize(q)))).values())
-    monkeypatch.setattr(SearchService, "LOCAL_EXEC_MAX_CANDIDATES", rarest - 1)
-    monkeypatch.setattr(ftsquery, "fts_topk_local", no_local)
-    got = service.phrase(q, top_k=10)
-    assert len(spark_calls) == 1
-    assert [r["chunk_id"] for r in got] == [r["chunk_id"] for r in local]
-    for g, w in zip(got, local):
-        assert {**g, "bm25_score": 0.0} == {**w, "bm25_score": 0.0}
-        assert abs(g["bm25_score"] - w["bm25_score"]) < 1e-9
 
 
 def _instances_reference(tokens: list[str], unit: Unit) -> list[tuple[int, int]]:

@@ -386,59 +386,3 @@ def test_chunk_row_groups_keep_rehydration_docord_proportional(
     assert covering * 2 <= total_groups, (
         f"rehydrate would touch {covering}/{total_groups} row groups"
     )
-
-
-def test_phrase_path_prunes_broadcasts_and_takeordered(spark, store) -> None:
-    """The distributed phrase plan (a one-phrase MATCH through
-    operators/ftsquery.py): term filters reach the posting scan
-    (partition + pushed predicate), candidate rehydration broadcasts
-    the df-bounded candidate side into the chunk scan, and top-k is
-    TakeOrderedAndProject — no corpus-wide sort, no unbounded
-    shuffle."""
-    from rifflux_spark.operators.ftsquery import fts_topk
-
-    df = fts_topk(spark, store, '"cache ttl"', top_k=5)
-    plan = explain_str(df)
-    assert "PartitionFilters" in plan and "term_bucket" in plan
-    # the postings scan (not the chunks scan) carries the term pushdown
-    assert "In(term, [cache,ttl])" in plan
-    assert "BroadcastHashJoin" in plan  # candidates -> chunks rehydration
-    assert "TakeOrderedAndProject" in plan
-    assert "SinglePartition" not in plan
-    rows = df.collect()
-    assert rows and all(r["bm25_score"] < 0 for r in rows)
-
-
-def test_fts_query_plan_prunes_and_takeordered(spark, store) -> None:
-    """The distributed MATCH evaluator (operators/ftsquery.py): posting
-    scans stay term-pruned (partition filter + pushed predicate), the
-    per-doc assembly is hash aggregation (no sort-based fallback on the
-    corpus), membership is a codegen filter, and top-k is
-    TakeOrderedAndProject."""
-    from rifflux_spark.operators.ftsquery import fts_topk
-
-    df = fts_topk(spark, store, "cache OR ttl NOT policy", top_k=5)
-    plan = explain_str(df)
-    assert "PartitionFilters" in plan and "term_bucket" in plan
-    assert "In(term" in plan
-    assert "TakeOrderedAndProject" in plan
-    assert "CartesianProduct" not in plan
-    rows = df.collect()
-    assert rows and all(r["bm25_score"] < 0 for r in rows)
-
-
-def test_near_group_plan_stays_pruned_and_hash_joined(spark, store) -> None:
-    """A NEAR query's distributed plan: posting scans stay term-pruned,
-    the group verify joins candidates by broadcast hash (never a
-    nested-loop on the corpus), and the standalone-df remap adds only
-    broadcast exchanges."""
-    from rifflux_spark.operators.ftsquery import fts_topk
-
-    df = fts_topk(spark, store, "NEAR(cache ttl, 4) OR policy", top_k=5)
-    plan = explain_str(df)
-    assert "PartitionFilters" in plan and "term_bucket" in plan
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    assert "TakeOrderedAndProject" in plan
-    rows = df.collect()
-    assert all(r["bm25_score"] < 0 for r in rows)

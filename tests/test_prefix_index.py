@@ -62,14 +62,15 @@ QUERIES = [
 ]
 
 
-def _results(svc, q, engine):
+def _results(svc, q):
     return [
         (r["chunk_id"], round(r["bm25_score"], 9))
-        for r in svc.fts(q, top_k=10, engine=engine)
+        for r in svc.fts(q, top_k=10)
     ]
 
 
-@pytest.mark.parametrize("engine", ["local", "spark"])
+# the coordinator ("local") is the one MATCH evaluator
+@pytest.mark.parametrize("engine", ["local"])
 def test_prefix_index_identical_to_expansion_and_fts5(
     indexes, spark, engine
 ) -> None:
@@ -78,8 +79,8 @@ def test_prefix_index_identical_to_expansion_and_fts5(
     pfx = SearchService(spark, pfx_dir, CONFIG_PFX)
     nonempty = 0
     for q in QUERIES:
-        a = _results(plain, q, engine)
-        b = _results(pfx, q, engine)
+        a = _results(plain, q)
+        b = _results(pfx, q)
         assert a == b, f"index-vs-expansion mismatch for {q!r} ({engine})"
         want = oracle.match_search(q, top_k=10)
         assert [cid for cid, _ in b] == [r["chunk_id"] for r in want], q
@@ -101,11 +102,11 @@ def test_indexed_prefix_skips_vocabulary_scan(indexes, spark, monkeypatch) -> No
         raise AssertionError(f"vocabulary expansion called for {prefix!r}")
 
     monkeypatch.setattr(ftsquery, "expand_prefix_local", boom)
-    out = svc.fts("cac* OR the*", top_k=5, engine="local")
+    out = svc.fts("cac* OR the*", top_k=5)
     assert out  # served entirely from marker postings
     # a NON-indexed length still needs the expansion -> boom fires and
     # the execution-time fallback turns the query into bare terms
-    out2 = svc.fts("ttl", top_k=5, engine="local")
+    out2 = svc.fts("ttl", top_k=5)
     assert out2  # plain term queries unaffected
 
 
@@ -150,10 +151,7 @@ def test_incremental_apply_maintains_prefix_index(
     inc_svc = SearchService(spark, inc_dir, CONFIG_PFX)
     full_svc = SearchService(spark, full_dir, CONFIG_PFX)
     for q in ["cac*", "the* OR ins*", '"custom ins*"']:
-        for engine in ("local", "spark"):
-            assert _results(inc_svc, q, engine) == _results(
-                full_svc, q, engine
-            ), (q, engine)
+        assert _results(inc_svc, q) == _results(full_svc, q), q
 
     # compaction rewrites marker blocks like any term blocks: results
     # stay identical and the tombstone set clears
@@ -163,6 +161,4 @@ def test_incremental_apply_maintains_prefix_index(
     assert c["purged"] > 0 and not store.exists("tombstones")
     inc_svc2 = SearchService(spark, inc_dir, CONFIG_PFX)
     for q in ["cac*", "the* OR ins*"]:
-        assert _results(inc_svc2, q, "local") == _results(
-            full_svc, q, "local"
-        ), q
+        assert _results(inc_svc2, q) == _results(full_svc, q), q
