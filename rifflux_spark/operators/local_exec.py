@@ -23,14 +23,13 @@ same thing —
 coordinator-only execution for selective queries (e.g. single-node plans
 in Trino/Presto-style engines) — while bulk scans stay on the cluster.
 
-Like SQLite serving doclists and rows from its warm page cache, every
-coordinator read of postings, term_stats (past the vocabulary cache)
-and chunks goes through ONE cache of decoded parquet row groups
-(``_GROUP_CACHE``: one LRU, one lock, one byte budget,
-invalidated by file signature and by the table's snapshot). It holds
-what parquet returns — posting payloads stay varbyte-encoded — so
-decode, scoring and aggregation run on every query; there is no
-per-term, per-query or result cache.
+Like SQLite serving every query from its one page cache, everything the
+coordinator keeps between queries — footers, decoded row groups of
+postings, term_stats and chunks, the vocabulary, the embedding matrix —
+lives in ONE cache (``_CACHE``: one LRU, one lock, one byte budget, one
+validity rule). Row groups hold what parquet returns — posting payloads
+stay varbyte-encoded — so decode, scoring and aggregation run on every
+query; there is no per-term, per-query or result cache.
 
 The SearchService picks the path per query (``engine="auto"``; the
 routing constants in service.py say which queries reach Spark).
@@ -53,93 +52,173 @@ from rifflux_spark.config import EngineConfig
 from rifflux_spark.functions.tokenizer import compile_query
 from rifflux_spark.functions.xxhash64 import term_bucket
 from rifflux_spark.operators import wand
-from rifflux_spark.operators.codec import (  # noqa: F401 (_cat_binary re-exported)
-    _cat_binary,
-    bm25_wtf,
-    decode_posting_arrow,
-)
+from rifflux_spark.operators.codec import bm25_wtf, decode_posting_arrow
 from rifflux_spark.operators.ftsquery import unit_idf
-from rifflux_spark.sources.tables import IndexStore
+from rifflux_spark.sources.tables import IndexStore, _snapshot_dir_files
+
+
+# One coordinator cache, the analog of SQLite's one page cache, holds all
+# the coordinator keeps between queries, keyed by (kind, path[, row
+# group]): "footer" (an open ParquetFile; a parse costs ~0.25 ms and a
+# hybrid query touches ~40 files), "group", "vocab", "ords", "matrix",
+# "chunk_index" and "files" (a table's file list). One LRU by bytes under
+# CACHE_MAX_BYTES; an entry larger than the budget is served but not
+# kept. The lock guards the dict only (reads and decodes happen outside
+# it): a background auto-reindex can commit while searches are served.
+#
+# One validity rule: a file under a ``g-*`` generation dir is immutable
+# and its uuid-named path is never reused (as _snapshot_dir_files relies
+# on), so an entry built from one is never stat'ed; one built from any
+# other file (legacy flat layout, bare paths) is checked by its (mtime_ns,
+# size). A table-level entry is checked against the table's file list,
+# memoized per manifest entry: a warm check is one dict comparison. When
+# a table's entry changes, every entry of a file that left the table is
+# dropped; a dropped footer's file closes once no reader holds it.
+#
+# The budget is the sum of the two bounds that capped what stayed resident
+# before: 128 MB of decoded row groups plus the service's 256 MB
+# LOCAL_EXEC_BUDGET_BYTES line that caps the matrix. Before → after, 3
+# interleaved runs a side (4-vCPU shared host, perfbench's config, seed-1
+# corpora), µs as min / median of warm calls inside a pin:
+#                                       before             after
+#   os.stat per warm search_mixed query 40.9               2.5, no data file
+#     lexical, hybrid, fts              41.5, 59.1, 50.6   2, 4, 2
+#     semantic, phrase                  19.0, 13.2         3, 2
+#   µs: term_stats_cached               192 / 209          5.0 / 5.4
+#     _emb_matrix, _chunk_index         31 / 34, 24 / 26   3.4 / 3.7, 3.4 / 3.7
+#     embeddings_bytes, local_tombstones 17/19, 12/14 (absent table)  2.7/2.9, 16/17
+#   cold matrix MB: VmHWM min / median over RSS before, RSS left (median)
+#     ingest (38.2 MB matrix)           183 / 184, 108     79 / 79, 50
+#     search_mixed (19.0 MB matrix)     95 / 105, 68       38 / 38, 33
+CACHE_MAX_BYTES = 384 << 20
+_CACHE: OrderedDict[tuple, tuple[object, object, int]] = OrderedDict()
+_BYTES = 0
+_LOCK = threading.Lock()
+# vocabularies over this many file bytes are read per query bucket instead
+# (a route, not a cache bound: see term_stats_cached)
+TS_CACHE_MAX_BYTES = 64 << 20
+_NO_ROWS = np.empty(0, dtype=np.int64)
+
+
+def _check(path: str) -> tuple[int, int] | None:
+    """Validity token of an entry built from ``path``: None for a file of
+    a generation dir, else its (mtime_ns, size)."""
+    if f"{os.sep}g-" in path:
+        return None
+    st = os.stat(path)
+    return st.st_mtime_ns, st.st_size
+
+
+def _cached(key: tuple, check, build):
+    """The value cached under ``key`` if its entry was built under a
+    ``check`` equal to this one; else ``build()`` → (value, bytes), kept
+    unless it alone exceeds the budget, least recently used evicted."""
+    global _BYTES
+    with _LOCK:
+        hit = _CACHE.get(key)
+        if hit is not None and (hit[0] is check or hit[0] == check):
+            _CACHE.move_to_end(key)
+            return hit[1]
+    value, nbytes = build()
+    with _LOCK:
+        old = _CACHE.pop(key, None)
+        if old is not None:
+            _BYTES -= old[2]
+        if nbytes <= CACHE_MAX_BYTES:
+            _CACHE[key] = (check, value, nbytes)
+            _BYTES += nbytes
+            while _BYTES > CACHE_MAX_BYTES:
+                _BYTES -= _CACHE.popitem(last=False)[1][2]
+    return value
+
+
+def _snapshot(store: IndexStore, table_dir: str, entry: dict):
+    """(sorted data files, bytes on disk, files per bucket or None) of
+    the table at ``table_dir`` under manifest ``entry``, listed once per
+    entry; a new entry first drops the entries its files left behind."""
+
+    def listing():
+        global _BYTES
+        parts = entry.get("partitions")
+        dirs = {None: entry.get("dirs", [])} if parts is None else parts
+        root = Path(store.root)
+        per_dir = {b: [f for d in ds for f in _snapshot_dir_files(root / d)] for b, ds in dirs.items()}
+        files = tuple(sorted(f for fs in per_dir.values() for f in fs))
+        by_bucket = None if parts is None else {int(b): fs for b, fs in per_dir.items()}
+        live = {str(f) for f in files}
+        prefix = str(Path(table_dir)) + os.sep
+        with _LOCK:
+            prev = _CACHE.get(("files", table_dir))
+            if prev is not None and prev[1][0] == files:
+                files = prev[1][0]  # keep the identity table-level checks compare
+            stale = [
+                k
+                for k, (check, _, _) in _CACHE.items()
+                if (k[1].startswith(prefix) and k[1] not in live)
+                or (k[1] == table_dir and k[0] != "files" and check != files)
+            ]
+            for k in stale:
+                _BYTES -= _CACHE.pop(k)[2]
+        disk = sum(f.stat().st_size for f in files)
+        return (files, disk, by_bucket), sum(map(sys.getsizeof, files)) + sum(map(sys.getsizeof, live))
+
+    return _cached(("files", table_dir), entry, listing)
+
+
+def _table(store: IndexStore, table: str) -> tuple[str, tuple[Path, ...], object, int]:
+    """(table dir, data files, validity token of a table-level entry
+    built from them, their bytes on disk) of ``table``'s current
+    snapshot."""
+    table_dir = os.path.join(store.root, table)  # a key: no Path (~5 µs)
+    entry = store._entry(table)
+    if entry is not None:
+        files, disk, _ = _snapshot(store, table_dir, entry)
+        return table_dir, files, files, disk
+    # legacy flat layout: listed and checked file by file on every call
+    files = tuple(store.data_files(table))
+    check = tuple((f, _check(str(f))) for f in files)
+    return table_dir, files, check, sum(f.stat().st_size for f in files)
 
 
 def _bucket_files(store: IndexStore, table: str, buckets: set[int]) -> list[Path]:
-    # manifest-level partition pruning: only the referenced buckets'
-    # current-generation files are even enumerated; the row-group cache
-    # is pruned to the same snapshot first
-    _sync_groups(store, table)
-    return store.partition_files(table, buckets)
+    # manifest-level partition pruning, from the memoized file list
+    entry = store._entry(table)
+    by_bucket = None if entry is None else _snapshot(store, os.path.join(store.root, table), entry)[2]
+    if by_bucket is None:
+        return store.partition_files(table, buckets)
+    return [f for b in sorted(buckets) for f in by_bucket.get(b, ())]
 
 
-# Open-ParquetFile cache keyed by (path → mtime_ns, size): a thrift
-# footer parse costs ~0.25 ms, and a single hybrid query used to pay
-# ~40 of them (postings + term_stats + chunks + tombstone probes). The
-# handle pins the footer AND the open fd; incremental commits replace
-# files (new generation dirs), so a changed path/mtime/size misses and
-# re-opens. Bounded — many short-lived stores in test runs.
-_PQ_FILE_CACHE: dict[str, tuple[tuple[int, int], pq.ParquetFile]] = {}
-_PQ_FILE_CACHE_MAX = 512
+def _open(path: str):
+    pf = pq.ParquetFile(path)
+    # a parsed footer's RSS is 0.3–1× its serialized size (2,000 open files)
+    return pf, pf.metadata.serialized_size
 
 
-def _pq_open(path) -> tuple[tuple[int, int], pq.ParquetFile]:
-    """(file signature (mtime_ns, size), ParquetFile with a cached
-    footer) — one stat, whose signature also keys the row-group cache."""
-    p = str(path)
-    st = os.stat(p)
-    sig = (st.st_mtime_ns, st.st_size)
-    hit = _PQ_FILE_CACHE.get(p)
-    if hit is not None and hit[0] == sig:
-        return hit
-    f = pq.ParquetFile(p)
-    if len(_PQ_FILE_CACHE) >= _PQ_FILE_CACHE_MAX:
-        _PQ_FILE_CACHE.clear()
-    _PQ_FILE_CACHE[p] = (sig, f)
-    return sig, f
+def _footer(path: str) -> tuple[tuple[int, int] | None, pq.ParquetFile]:
+    """(validity token of ``path``, its open ParquetFile)."""
+    check = _check(path)
+    return check, _cached(("footer", path), check, lambda: _open(path))
 
 
 def pq_file(path) -> pq.ParquetFile:
     """ParquetFile with a cached footer (the coordinator analog of
     SQLite's always-open database handle)."""
-    return _pq_open(path)[1]
+    return _footer(str(path))[1]
 
 
-# Decoded row groups of the tables the coordinator reads by key: chunks
-# by doc_ord (top-k rehydration) and postings and term_stats by term
-# (every posting read). (path, row_group) → (file signature,
-# Arrow table, stable sort order of the key column, sorted keys, bytes).
-# The coordinator analog of SQLite's warm page cache, next to the
-# embedding and vocabulary caches: read from parquet, a rehydrate
-# decompressed whole chunk groups to keep ~20 rows (26 ms of a 32 ms
-# lexical query at 1k pages), and an `ingest` head query's posting read
-# decompressed ~2.8k block rows to keep ~430 (5.2–6.6 of a 17.6–19.5 ms
-# scorer call on a loaded 4-core host; 0.8–0.9 ms from this cache). Posting
-# entries hold what parquet returns — payloads still varbyte-encoded,
-# decoded and scored on every query. One LRU by decoded bytes under
-# GROUP_CACHE_MAX_BYTES; entries of files that leave their table are
-# dropped when the table's snapshot changes (_chunk_rg_state,
-# _sync_groups). The lock guards the dict only (reads happen outside
-# it), because a background auto-reindex can commit while searches are
-# being served.
-_GROUP_CACHE: OrderedDict[
-    tuple[str, int], tuple[tuple[int, int], pa.Table, np.ndarray, np.ndarray, int]
-] = OrderedDict()
-_GROUP_BYTES = 0
-_GROUP_LOCK = threading.Lock()
-# table dir → the manifest entry its cached groups were last pruned to
-_GROUP_SYNCED: dict[str, dict] = {}
-_NO_ROWS = np.empty(0, dtype=np.int64)
-
-
-def _cached_group(path: str, g: int, fsig: tuple[int, int], key: str, columns=None):
+def _cached_group(path: str, g: int, check, key: str, columns=None):
     """(table, stable sort order of its ``key`` column, sorted keys) of
-    row group ``g`` — from the cache, or read once (``columns``, or every
-    column) and inserted."""
-    global _GROUP_BYTES
-    k = (path, g)
-    with _GROUP_LOCK:
-        hit = _GROUP_CACHE.get(k)
-        if hit is not None and hit[0] == fsig:
-            _GROUP_CACHE.move_to_end(k)
-            return hit[1], hit[2], hit[3]
+    row group ``g`` of ``path`` — from the cache, or read once
+    (``columns``, or every column) and kept. Read from parquet, an
+    `ingest` head query's posting read decompressed ~2.8k block rows to
+    keep ~430 (5.2–6.6 ms of a 17.6–19.5 ms scorer call on a loaded 4-core
+    host; 0.8–0.9 ms from the cache). Posting entries hold what parquet
+    returns — payloads still varbyte-encoded, decoded on every query."""
+    return _cached(("group", path, g), check, lambda: _read_group(path, g, key, columns))
+
+
+def _read_group(path: str, g: int, key: str, columns):
     # single-threaded decode: at 2k pages (4-core host) a cold chunks
     # group reads as fast as with the per-column thread pool, and the
     # allocator's high-water mark stays ~8 MB lower
@@ -156,52 +235,17 @@ def _cached_group(path: str, g: int, fsig: tuple[int, int], key: str, columns=No
         words = enc.dictionary.to_numpy(zero_copy_only=False)
         keys = words[enc.indices.to_numpy()]
     nbytes = t.nbytes + order.nbytes + keys.nbytes + sum(map(sys.getsizeof, words))
-    with _GROUP_LOCK:
-        old = _GROUP_CACHE.pop(k, None)
-        if old is not None:
-            _GROUP_BYTES -= old[4]
-        _GROUP_CACHE[k] = (fsig, t, order, keys, nbytes)
-        _GROUP_BYTES += nbytes
-        # least recently used first; a group alone past the budget is
-        # served, not kept
-        while _GROUP_BYTES > GROUP_CACHE_MAX_BYTES:
-            _GROUP_BYTES -= _GROUP_CACHE.popitem(last=False)[1][4]
-    return t, order, keys
+    return (t, order, keys), nbytes
 
 
-def _group_rows(path: str, g: int, fsig: tuple[int, int], key: str, want: np.ndarray, columns=None):
+def _group_rows(path: str, g: int, check, key: str, want: np.ndarray, columns=None):
     """(cached table of row group ``g``, indices of its rows whose ``key``
     is in the sorted array ``want``, ascending — file row order)."""
-    t, order, keys = _cached_group(path, g, fsig, key, columns)
+    t, order, keys = _cached_group(path, g, check, key, columns)
     left = np.searchsorted(keys, want, side="left")
     right = np.searchsorted(keys, want, side="right")
     hits = [order[a:b] for a, b in zip(left, right) if b > a]
     return t, np.sort(np.concatenate(hits)) if hits else _NO_ROWS
-
-
-def _drop_groups(table_dir: str, live: set[str]) -> None:
-    """Evict cached groups of files under ``table_dir`` that are no longer
-    in the table (compaction / overwrite replaced them)."""
-    global _GROUP_BYTES
-    prefix = table_dir.rstrip(os.sep) + os.sep
-    with _GROUP_LOCK:
-        for k in [k for k in _GROUP_CACHE if k[0].startswith(prefix) and k[0] not in live]:
-            _GROUP_BYTES -= _GROUP_CACHE.pop(k)[4]
-
-
-def _sync_groups(store: IndexStore, table: str) -> None:
-    """Drop cached groups of files that left ``table``'s snapshot — one
-    dict comparison while its manifest entry is unchanged. A table
-    without a manifest entry (legacy flat layout) is only revalidated
-    by file signature. Racing threads at worst prune twice."""
-    entry = store._entry(table)
-    table_dir = store.path(table)
-    if entry is None or _GROUP_SYNCED.get(table_dir) == entry:
-        return
-    _drop_groups(table_dir, {str(f) for f in store.data_files(table)})
-    if len(_GROUP_SYNCED) > 64:  # many short-lived stores (test runs)
-        _GROUP_SYNCED.clear()
-    _GROUP_SYNCED[table_dir] = entry
 
 
 def _read_filtered(files: list[Path], columns: list[str], terms: list[str]):
@@ -219,7 +263,7 @@ def _read_filtered(files: list[Path], columns: list[str], terms: list[str]):
     tables = []
     for f in files:
         path = str(f)
-        fsig, pf = _pq_open(path)
+        check, pf = _footer(path)
         md = pf.metadata
         term_col = md.schema.names.index("term")
         for g in range(md.num_row_groups):
@@ -228,7 +272,7 @@ def _read_filtered(files: list[Path], columns: list[str], terms: list[str]):
                 st.min <= t <= st.max for t in want
             ):
                 continue
-            t, rows = _group_rows(path, g, fsig, "term", want)
+            t, rows = _group_rows(path, g, check, "term", want)
             if not rows.size:
                 continue
             t = t.select(columns)
@@ -251,33 +295,20 @@ def read_postings(store: IndexStore, terms: list[str], columns: list[str]):
     return _read_filtered(_bucket_files(store, "postings", buckets), columns, terms)
 
 
-# Decoded term→df map + term table per store, keyed by the term_stats
-# files' signature (same invalidation discipline as the embedding-matrix
-# cache below). The vocabulary is metadata-sized next to the postings
-# (a few bytes per DISTINCT term); budget-gated so web-scale vocabularies
-# past the cap fall back to the filtered per-query read unchanged. Warm
-# queries resolve df lookups and prefix expansions with zero parquet IO.
-_TS_CACHE: dict[str, tuple[tuple, dict[str, int], pa.Table]] = {}
-TS_CACHE_MAX_BYTES = 64 << 20
-# decoded chunk and posting row groups, one LRU (see _GROUP_CACHE)
-GROUP_CACHE_MAX_BYTES = 128 << 20
-
-
 def term_stats_cached(store: IndexStore) -> tuple[dict[str, int], pa.Table] | None:
     """(term→df_docs map, term/df table) for the whole vocabulary, or
-    None when the table exceeds the cache budget (callers fall back to
-    the filtered read)."""
-    files = store.data_files("term_stats")
+    None when its files exceed TS_CACHE_MAX_BYTES (callers fall back to
+    the filtered per-bucket read). Metadata-sized next to the postings:
+    warm df lookups and prefix expansions make no parquet IO."""
+    table_dir, files, check, disk = _table(store, "term_stats")
     if not files:
         return {}, pa.table({"term": pa.array([], pa.string()), "df_docs": pa.array([], pa.int64())})
-    stats = [f.stat() for f in files]
-    if sum(s.st_size for s in stats) > TS_CACHE_MAX_BYTES:
+    if disk > TS_CACHE_MAX_BYTES:
         return None
-    sig = tuple((str(f), s.st_mtime_ns, s.st_size) for f, s in zip(files, stats))
-    key = store.path("term_stats")
-    hit = _TS_CACHE.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1], hit[2]
+    return _cached(("vocab", table_dir), check, lambda: _read_vocab(files))
+
+
+def _read_vocab(files):
     # generations can disagree on nullability (Spark writes non-null,
     # the driver-side Arrow writer nullable) — cast to one schema
     ts_schema = pa.schema([("term", pa.string()), ("df_docs", pa.int64())])
@@ -289,10 +320,7 @@ def term_stats_cached(store: IndexStore) -> tuple[dict[str, int], pa.Table] | No
     d = dict(
         zip(t.column("term").to_pylist(), (int(x) for x in t.column("df_docs").to_pylist()))
     )
-    if len(_TS_CACHE) > 32:
-        _TS_CACHE.clear()
-    _TS_CACHE[key] = (sig, d, t)
-    return d, t
+    return (d, t), t.nbytes + sys.getsizeof(d) + sum(map(sys.getsizeof, d))
 
 
 def local_df(store: IndexStore, terms: list[str]) -> dict[str, int]:
@@ -326,33 +354,17 @@ def query_idf(terms: list[str], dfs: dict[str, int], n_docs: int) -> dict[str, f
     return {t: unit_idf(n_docs, df_t) * mult[t] for t, df_t in dfs.items()}
 
 
-# dead-ord sets re-read on EVERY query would pay parquet footer parses
-# on the ~ms local hot path; cache on the same (path, mtime_ns, size)
-# signature discipline as the embedding matrix below — a tombstone
-# commit changes the file set and misses the cache
-_ORD_SET_CACHE: dict[tuple[str, str], tuple[tuple, np.ndarray]] = {}
-
-
 def _ord_set(store: IndexStore, name: str) -> np.ndarray:
-    files = store.data_files(name)
-    sig = tuple((str(f), f.stat().st_mtime_ns, f.stat().st_size) for f in files)
-    key = (store.root, name)
-    hit = _ORD_SET_CACHE.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
-    parts = [
-        pq_file(f).read(columns=["doc_ord"]).column("doc_ord").to_numpy()
-        for f in files
-    ]
-    out = (
-        np.concatenate(parts).astype(np.int64)
-        if parts
-        else np.empty(0, dtype=np.int64)
-    )
-    if len(_ORD_SET_CACHE) > 32:  # many short-lived stores (test runs)
-        _ORD_SET_CACHE.clear()
-    _ORD_SET_CACHE[key] = (sig, out)
-    return out
+    """The doc_ords of table ``name`` (tombstones or purged), cached: a
+    re-read on every query would pay footer parses on the ~ms hot path."""
+    table_dir, files, check, _ = _table(store, name)
+    return _cached(("ords", table_dir), check, lambda: _read_ords(files))
+
+
+def _read_ords(files):
+    parts = [pq_file(f).read(columns=["doc_ord"]).column("doc_ord").to_numpy() for f in files]
+    out = np.concatenate(parts).astype(np.int64) if parts else _NO_ROWS
+    return out, out.nbytes
 
 
 def local_tombstones(store: IndexStore) -> np.ndarray:
@@ -512,53 +524,54 @@ def _finish_topk(
 
 
 def embeddings_bytes(store: IndexStore) -> int:
-    return sum(f.stat().st_size for f in store.data_files("embeddings"))
-
-
-# One decoded (doc_ords, matrix, norms) per embeddings path, keyed by the
-# files' (path, mtime, size) signature — the coordinator analog of the
-# reference's always-open SQLite page cache: the first semantic query
-# decodes the table, later ones are a single BLAS matvec. Invalidated
-# automatically when incremental writes change any file; bounded by the
-# service's LOCAL_EXEC_BUDGET_BYTES (bigger tables never take this path).
-_EMB_CACHE: dict[str, tuple[tuple, np.ndarray, np.ndarray, np.ndarray]] = {}
+    return _table(store, "embeddings")[3]
 
 
 def _emb_matrix(store: IndexStore) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
-    files = store.data_files("embeddings")
-    if not files:
-        return None
-    sig = tuple((str(f), f.stat().st_mtime_ns, f.stat().st_size) for f in files)
-    key = store.path("embeddings")
-    hit = _EMB_CACHE.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1], hit[2], hit[3]
-    docs_all, vec_parts, dim, n_rows = [], [], None, 0
-    for f in files:
-        t = pq_file(f).read(columns=["doc_ord", "dim", "vec"])
-        if t.num_rows == 0:
-            continue
-        docs_all.append(t.column("doc_ord").to_numpy())
-        # buffer-sliced concat (codec._cat_binary), not per-row bytes —
-        # embeddings are the largest binary payload on the local path
-        vec_parts.append(_cat_binary(t.column("vec")))
-        n_rows += t.num_rows
-        if dim is None:
-            dim = int(t.column("dim")[0].as_py())
-    if not docs_all:
-        return None
-    docs = np.concatenate(docs_all)
-    flat = np.frombuffer(b"".join(vec_parts), dtype=np.float32)
-    if dim is None or flat.size != n_rows * dim:
-        raise ValueError(
-            f"embeddings payload is {flat.size} floats for {n_rows} rows of "
-            f"dim {dim} — mixed dims or corrupt vec column"
-        )
-    mat = flat.reshape(n_rows, dim)
-    norms = np.linalg.norm(mat, axis=1)
-    _EMB_CACHE.clear()  # one table at a time: the service owns one index
-    _EMB_CACHE[key] = (sig, docs, mat, norms)
-    return docs, mat, norms
+    """(doc_ords, float32 matrix, row norms) of the embeddings table: the
+    first semantic query decodes it, later ones are one BLAS matvec. The
+    service routes here only while the files fit LOCAL_EXEC_BUDGET_BYTES."""
+    table_dir, files, check, _ = _table(store, "embeddings")
+    return _cached(("matrix", table_dir), check, lambda: _read_matrix(files))
+
+
+def _read_matrix(files):
+    """Decode into one preallocated matrix, row group by row group, each
+    ``vec`` chunk's data buffer copied into its rows and their norms
+    taken there: the peak is the matrix plus one row group. (A whole-matrix
+    norm temporary over 32 MB left glibc's trim threshold low: warm
+    `ingest` queries then page-faulted ~500 times each, +1.4 ms.)"""
+    pfs = [pq_file(f) for f in files]
+    n_rows = sum(pf.metadata.num_rows for pf in pfs)
+    if n_rows == 0:
+        return None, 0
+    docs, norms = np.empty(n_rows, dtype=np.int64), np.empty(n_rows, dtype=np.float32)
+    mat, at = None, 0
+    for pf in pfs:
+        for g in range(pf.num_row_groups):
+            t = pf.read_row_group(g, columns=["doc_ord", "dim", "vec"], use_threads=False)
+            if t.num_rows == 0:
+                continue
+            if mat is None:
+                dim = int(t.column("dim")[0].as_py())
+                mat = np.empty((n_rows, dim), dtype=np.float32)
+            docs[at : at + t.num_rows] = t.column("doc_ord").to_numpy()
+            for ch in t.column("vec").chunks:
+                width = np.int64 if pa.types.is_large_binary(ch.type) else np.int32
+                offs = np.frombuffer(ch.buffers()[1], dtype=width)
+                lo, hi = int(offs[ch.offset]), int(offs[ch.offset + len(ch)])
+                if hi - lo != 4 * dim * len(ch):
+                    raise ValueError(
+                        f"embeddings payload is {(hi - lo) / 4:g} floats for {len(ch)} "
+                        f"rows of dim {dim} — mixed dims or corrupt vec column"
+                    )
+                rows = mat[at : at + len(ch)]
+                rows[:] = np.frombuffer(
+                    ch.buffers()[2], dtype=np.float32, count=(hi - lo) // 4, offset=lo
+                ).reshape(len(ch), dim)
+                norms[at : at + len(ch)] = np.linalg.norm(rows, axis=1)
+                at += len(ch)
+    return (docs, mat, norms), docs.nbytes + mat.nbytes + norms.nbytes
 
 
 def semantic_topk_local(
@@ -590,24 +603,19 @@ def semantic_topk_local(
     return [(int(docs[i]), float(cos[i])) for i in top_k_order(cos, docs, top_k)]
 
 
-# Cached per-file row-group [min,max] doc_ord ranges for the chunks
-# table, keyed by file signature — pure METADATA (scales with row-group
-# count, not rows), so this stays coordinator-sized at any corpus size.
-# Saves re-opening and re-parsing every footer on every query.
-_CHUNK_RG_CACHE: dict[str, tuple[tuple, list[tuple[str, int, int, int]]]] = {}
-
 # what a cached chunks group holds: the result columns, never ``tokens``
 CHUNK_DISPLAY_COLUMNS = ["doc_ord", "chunk_id", "url", "heading_path", "chunk_index", "content"]
 
 
-def _chunk_rg_state(store: IndexStore) -> tuple[tuple, list[tuple[str, int, int, int]]]:
-    files = store.data_files("chunks")
-    stats = [f.stat() for f in files]
-    sig = tuple((str(f), s.st_mtime_ns, s.st_size) for f, s in zip(files, stats))
-    key = store.path("chunks")
-    hit = _CHUNK_RG_CACHE.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit
+def _chunk_index(store: IndexStore) -> list[tuple[str, int, int, int]]:
+    """(path, row group, min doc_ord, max doc_ord) of every chunks row
+    group, from the footers — metadata, so coordinator-sized at any
+    corpus size."""
+    table_dir, files, check, _ = _table(store, "chunks")
+    return _cached(("chunk_index", table_dir), check, lambda: _read_chunk_index(files))
+
+
+def _read_chunk_index(files):
     index: list[tuple[str, int, int, int]] = []
     for f in files:
         md = pq_file(f).metadata
@@ -620,14 +628,7 @@ def _chunk_rg_state(store: IndexStore) -> tuple[tuple, list[tuple[str, int, int,
                 index.append((str(f), g, -(1 << 62), 1 << 62))
             else:
                 index.append((str(f), g, int(st.min), int(st.max)))
-    _drop_groups(key, {p for p, _, _ in sig})
-    _CHUNK_RG_CACHE.clear()
-    _CHUNK_RG_CACHE[key] = (sig, index)
-    return sig, index
-
-
-def _chunk_rg_index(store: IndexStore) -> list[tuple[str, int, int, int]]:
-    return _chunk_rg_state(store)[1]
+    return index, sys.getsizeof(index) + sum(map(sys.getsizeof, index))
 
 
 def rehydrate_local(
@@ -644,15 +645,13 @@ def rehydrate_local(
     if want.size == 0:
         return out
     cols = columns or CHUNK_DISPLAY_COLUMNS
-    sig, index = _chunk_rg_state(store)
-    fsigs = {p: (m, s) for p, m, s in sig}
-    for path, g, mn, mx in index:
+    for path, g, mn, mx in _chunk_index(store):
         lo = np.searchsorted(want, mn, side="left")
         hi = np.searchsorted(want, mx, side="right")
         if lo >= hi:
             continue
         t, rows = _group_rows(
-            path, g, fsigs[path], "doc_ord", want[lo:hi], CHUNK_DISPLAY_COLUMNS
+            path, g, _check(path), "doc_ord", want[lo:hi], CHUNK_DISPLAY_COLUMNS
         )
         for row in t.select(cols).take(pa.array(rows)).to_pylist():
             out[int(row["doc_ord"])] = row

@@ -73,8 +73,17 @@ def _same(got: dict, want: dict) -> bool:
 
 @pytest.fixture()
 def fresh_cache(monkeypatch):
-    monkeypatch.setattr(local_exec, "_GROUP_CACHE", OrderedDict())
-    monkeypatch.setattr(local_exec, "_GROUP_BYTES", 0)
+    monkeypatch.setattr(local_exec, "_CACHE", OrderedDict())
+    monkeypatch.setattr(local_exec, "_BYTES", 0)
+
+
+def _group_paths(prefix: str = "") -> set[str]:
+    """Files with a decoded row group in the coordinator cache."""
+    return {k[1] for k in local_exec._CACHE if k[0] == "group" and k[1].startswith(prefix)}
+
+
+def _n_groups() -> int:
+    return sum(k[0] == "group" for k in local_exec._CACHE)
 
 
 def _build(spark, tmp_path_factory, name: str, n_pages: int) -> tuple[IndexStore, object]:
@@ -138,24 +147,22 @@ def test_cache_stays_under_byte_bound(appended_store, fresh_cache, monkeypatch) 
     # room for ~two decoded groups
     one = _chunk_group_nbytes(store)
     bound = 2 * one + one // 2
-    monkeypatch.setattr(local_exec, "GROUP_CACHE_MAX_BYTES", bound)
-    monkeypatch.setattr(local_exec, "_GROUP_CACHE", OrderedDict())
-    monkeypatch.setattr(local_exec, "_GROUP_BYTES", 0)
-    n_groups = len(local_exec._chunk_rg_index(store))
+    monkeypatch.setattr(local_exec, "CACHE_MAX_BYTES", bound)
+    monkeypatch.setattr(local_exec, "_CACHE", OrderedDict())
+    monkeypatch.setattr(local_exec, "_BYTES", 0)
+    n_groups = len(local_exec._chunk_index(store))
     for i in range(0, len(live), 25):
         ords = live[i : i + 25]
         assert _same(local_exec.rehydrate_local(store, ords), _plain(store, ords))
-        cache = local_exec._GROUP_CACHE
-        assert local_exec._GROUP_BYTES <= bound
-        assert local_exec._GROUP_BYTES == sum(e[4] for e in cache.values())
-    assert 0 < len(local_exec._GROUP_CACHE) < n_groups
+        cache = local_exec._CACHE
+        assert local_exec._BYTES <= bound
+        assert local_exec._BYTES == sum(e[2] for e in cache.values())
+    assert 0 < _n_groups() < n_groups
 
 
 def _first_group(store: IndexStore):
-    sig, index = local_exec._chunk_rg_state(store)
-    path, g, _, _ = index[0]
-    fsig = next((m, s) for p, m, s in sig if p == path)
-    return path, g, fsig
+    path, g, _, _ = local_exec._chunk_index(store)[0]
+    return path, g, local_exec._check(path)
 
 
 def _chunk_group_nbytes(store: IndexStore) -> int:
@@ -191,7 +198,7 @@ def test_apply_and_vacuum_invalidate(spark, tmp_path_factory, fresh_cache) -> No
     before = _all_ords(store)
     # warm every group of the built generation
     local_exec.rehydrate_local(store, [o for ords in before.values() for o in ords])
-    assert local_exec._GROUP_CACHE
+    assert _group_paths()
 
     res = apply_incremental(spark, store, _mutate(pages, 4), CONFIG, with_embeddings=False)
     assert res["tombstoned"] > 0
@@ -208,13 +215,13 @@ def test_apply_and_vacuum_invalidate(spark, tmp_path_factory, fresh_cache) -> No
     # vacuum rewrites the chunks table: no entry may outlive its file
     # postings groups share the cache (the search above): chunks only
     chunks_dir = store.path("chunks") + "/"
-    cached_before = {p for p, _ in local_exec._GROUP_CACHE if p.startswith(chunks_dir)}
+    cached_before = _group_paths(chunks_dir)
     vacuum(spark, store, CONFIG)
     live_files = {str(f) for f in store.data_files("chunks")}
     assert cached_before - live_files, "vacuum should replace cached files"
     final = [o for ords in _all_ords(store).values() for o in ords]
     assert _same(local_exec.rehydrate_local(store, final), _plain(store, final))
-    cached = {p for p, _ in local_exec._GROUP_CACHE if p.startswith(chunks_dir)}
+    cached = _group_paths(chunks_dir)
     assert cached <= live_files
 
 
@@ -230,9 +237,9 @@ def test_concurrent_rehydrates_keep_cache_consistent(appended_store, fresh_cache
     batches = [random.Random(i).sample(live, 20) for i in range(12)]
     want = [_plain(store, b) for b in batches]
     bound = 3 * _chunk_group_nbytes(store)
-    monkeypatch.setattr(local_exec, "GROUP_CACHE_MAX_BYTES", bound)
-    monkeypatch.setattr(local_exec, "_GROUP_CACHE", OrderedDict())
-    monkeypatch.setattr(local_exec, "_GROUP_BYTES", 0)
+    monkeypatch.setattr(local_exec, "CACHE_MAX_BYTES", bound)
+    monkeypatch.setattr(local_exec, "_CACHE", OrderedDict())
+    monkeypatch.setattr(local_exec, "_BYTES", 0)
     errors: list[str] = []
 
     def worker(w: int) -> None:
@@ -253,6 +260,6 @@ def test_concurrent_rehydrates_keep_cache_consistent(appended_store, fresh_cache
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
     assert errors == []
-    cache = local_exec._GROUP_CACHE
-    assert local_exec._GROUP_BYTES == sum(e[4] for e in cache.values())
-    assert local_exec._GROUP_BYTES <= bound
+    cache = local_exec._CACHE
+    assert local_exec._BYTES == sum(e[2] for e in cache.values())
+    assert local_exec._BYTES <= bound

@@ -380,7 +380,7 @@ def test_chunk_row_groups_keep_rehydration_docord_proportional(
     assert sorted(got) == ords
 
     covering = 0
-    for _, _, mn, mx in local_exec._chunk_rg_index(store):
+    for _, _, mn, mx in local_exec._chunk_index(store):
         if any(mn <= d <= mx for d in ords):
             covering += 1
     assert covering * 2 <= total_groups, (

@@ -4,7 +4,8 @@
 file not sorted by term), zero parquet row-group reads when warm — also
 for a query never run before — no cached group outliving its file across
 apply / compaction / vacuum, one byte budget over chunk and posting
-entries, and threaded posting reads mixed with rehydrates."""
+groups and every other kind of entry, and threaded posting reads mixed
+with rehydrates."""
 
 from __future__ import annotations
 
@@ -41,9 +42,8 @@ COLUMN_SETS = [
 
 @pytest.fixture()
 def fresh_cache(monkeypatch):
-    monkeypatch.setattr(local_exec, "_GROUP_CACHE", OrderedDict())
-    monkeypatch.setattr(local_exec, "_GROUP_BYTES", 0)
-    monkeypatch.setattr(local_exec, "_GROUP_SYNCED", {})
+    monkeypatch.setattr(local_exec, "_CACHE", OrderedDict())
+    monkeypatch.setattr(local_exec, "_BYTES", 0)
 
 
 def _mutate(pages, every: int):
@@ -62,24 +62,25 @@ def _mutate(pages, every: int):
     return changed.unionByName(new)
 
 
-def _build(spark, tmp_path_factory, name: str, n_pages: int):
+def _build(spark, tmp_path_factory, name: str, n_pages: int, with_embeddings: bool = False):
     # small posting row groups: several per file, so footer pruning and
     # per-group lookups both matter
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(tables_mod, "POSTINGS_ROW_GROUP_BYTES", 16 << 10)
         pages = synthetic_pages(spark, n_pages, seed=9)
         d = str(tmp_path_factory.mktemp(name))
-        build_index(spark, pages, d, CONFIG, with_embeddings=False)
+        build_index(spark, pages, d, CONFIG, with_embeddings=with_embeddings)
     return IndexStore(spark, d, CONFIG.n_term_buckets), pages
 
 
 @pytest.fixture(scope="module")
 def gen_store(spark, tmp_path_factory) -> IndexStore:
-    """An index with an appended postings generation on top of the build."""
-    store, pages = _build(spark, tmp_path_factory, "postcache", 120)
+    """An index with an appended postings generation on top of the build
+    (and tombstones and embeddings, which share the cache's budget)."""
+    store, pages = _build(spark, tmp_path_factory, "postcache", 120, with_embeddings=True)
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(tables_mod, "POSTINGS_ROW_GROUP_BYTES", 16 << 10)
-        apply_incremental(spark, store, _mutate(pages, 7), CONFIG, with_embeddings=False)
+        apply_incremental(spark, store, _mutate(pages, 7), CONFIG)
     return store
 
 
@@ -218,7 +219,7 @@ def test_snapshot_changes_drop_stale_posting_groups(spark, tmp_path_factory, fre
     probe = " ".join({_bucket_of(t): t for t in vocab}.values())
 
     def cached() -> set[str]:
-        return {p for p, _ in local_exec._GROUP_CACHE if p.startswith(postings_dir)}
+        return {k[1] for k in local_exec._CACHE if k[0] == "group" and k[1].startswith(postings_dir)}
 
     def check(step: str) -> set[str]:
         got = local_exec.bm25_topk_local(store, probe, 10, CONFIG)
@@ -226,8 +227,8 @@ def test_snapshot_changes_drop_stale_posting_groups(spark, tmp_path_factory, fre
         assert cached() <= live, f"{step}: cached groups of files outside the snapshot"
         # warm answers equal a cold cache's
         with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(local_exec, "_GROUP_CACHE", OrderedDict())
-            mp.setattr(local_exec, "_GROUP_BYTES", 0)
+            mp.setattr(local_exec, "_CACHE", OrderedDict())
+            mp.setattr(local_exec, "_BYTES", 0)
             assert local_exec.bm25_topk_local(store, probe, 10, CONFIG) == got, step
         return live
 
@@ -287,37 +288,73 @@ def _mixed_ok(store: IndexStore, batch) -> bool:
 def _budget(store: IndexStore) -> int:
     """Room for every chunks group and about two posting groups: posting
     reads keep evicting, and both kinds of entry fit side by side."""
-    sig, index = local_exec._chunk_rg_state(store)
-    fsigs = {p: (m, s) for p, m, s in sig}
     chunks = 0
-    for path, g, _, _ in index:
-        t = local_exec._cached_group(path, g, fsigs[path], "doc_ord", local_exec.CHUNK_DISPLAY_COLUMNS)[0]
+    for path, g, _, _ in local_exec._chunk_index(store):
+        t = local_exec._cached_group(path, g, local_exec._check(path), "doc_ord", local_exec.CHUNK_DISPLAY_COLUMNS)[0]
         chunks += t.nbytes
     post = pq.ParquetFile(store.data_files("postings")[0]).read_row_group(0).nbytes
     return int(1.2 * chunks) + 3 * post
 
 
+def _plain_tables(store: IndexStore):
+    """Oracles of the table-level entries: vocabulary, dead ords and the
+    embedding matrix, each read plainly."""
+    ts = pa.concat_tables(pq.read_table(f, columns=["term", "df_docs"]) for f in store.data_files("term_stats"))
+    vocab = dict(zip(ts.column("term").to_pylist(), ts.column("df_docs").to_pylist()))
+    dead = sorted({
+        o for name in ("tombstones", "purged") for f in store.data_files(name)
+        for o in pq.read_table(f, columns=["doc_ord"]).column("doc_ord").to_pylist()
+    })
+    emb = pa.concat_tables(pq.read_table(f, columns=["doc_ord", "vec"]) for f in store.data_files("embeddings"))
+    mat = np.stack([np.frombuffer(v, dtype=np.float32) for v in emb.column("vec").to_pylist()])
+    return vocab, dead, emb.column("doc_ord").to_pylist(), mat
+
+
+def _tables_ok(store: IndexStore, want) -> bool:
+    vocab, dead, docs, mat = want
+    got_docs, got_mat, _ = local_exec._emb_matrix(store)
+    return (
+        local_exec.term_stats_cached(store)[0] == vocab
+        and local_exec.local_dead_ords(store).tolist() == dead
+        and got_docs.tolist() == docs
+        and np.array_equal(got_mat, mat)
+    )
+
+
 def test_shared_budget_holds_over_chunk_and_posting_entries(gen_store, fresh_cache, monkeypatch) -> None:
+    """One budget over every kind of entry: row groups of chunks and
+    postings, footers, the vocabulary, dead-ord sets, the embedding
+    matrix, the chunks row-group index and the tables' file lists."""
     store = gen_store
     batches = _mixed_batches(store, 16)
-    bound = _budget(store)
-    monkeypatch.setattr(local_exec, "GROUP_CACHE_MAX_BYTES", bound)
-    monkeypatch.setattr(local_exec, "_GROUP_CACHE", OrderedDict())
-    monkeypatch.setattr(local_exec, "_GROUP_BYTES", 0)
+    tables_want = _plain_tables(store)
+    assert tables_want[1], "expected tombstones"
+    # plus room for the table-level entries
+    assert _tables_ok(store, tables_want)
+    tables = sum(e[2] for k, e in local_exec._CACHE.items() if k[0] in ("vocab", "ords", "matrix"))
+    bound = _budget(store) + tables
+    monkeypatch.setattr(local_exec, "CACHE_MAX_BYTES", bound)
+    monkeypatch.setattr(local_exec, "_CACHE", OrderedDict())
+    monkeypatch.setattr(local_exec, "_BYTES", 0)
     chunks_dir = store.path("chunks") + "/"
     reads = _count_row_group_reads(monkeypatch)
     mixed = False
+    seen: set[str] = set()
     for i, batch in enumerate(batches):
         assert _mixed_ok(store, batch), i
-        cache = local_exec._GROUP_CACHE
-        assert local_exec._GROUP_BYTES <= bound
-        assert local_exec._GROUP_BYTES == sum(e[4] for e in cache.values())
-        kinds = {p.startswith(chunks_dir) for p, _ in cache}
+        assert _tables_ok(store, tables_want), i
+        cache = local_exec._CACHE
+        assert local_exec._BYTES <= bound
+        assert local_exec._BYTES == sum(e[2] for e in cache.values())
+        kinds = {k[1].startswith(chunks_dir) for k in cache if k[0] == "group"}
         mixed |= kinds == {True, False}
+        seen |= {k[0] for k in cache}
     assert mixed, "chunk and posting entries should share the cache"
+    assert seen == {"footer", "group", "vocab", "ords", "matrix", "chunk_index", "files"}
     # every cold read inserts an entry: more reads than entries means
     # the bound evicted
-    assert len(reads) > len(local_exec._GROUP_CACHE) + 10, "the bound should force evictions"
+    n_groups = sum(k[0] == "group" for k in local_exec._CACHE)
+    assert len(reads) > n_groups + 10, "the bound should force evictions"
 
 
 def test_concurrent_posting_reads_and_rehydrates(gen_store, fresh_cache, monkeypatch) -> None:
@@ -330,9 +367,9 @@ def test_concurrent_posting_reads_and_rehydrates(gen_store, fresh_cache, monkeyp
     store = gen_store
     batches = _mixed_batches(store, 12)
     bound = _budget(store)
-    monkeypatch.setattr(local_exec, "GROUP_CACHE_MAX_BYTES", bound)
-    monkeypatch.setattr(local_exec, "_GROUP_CACHE", OrderedDict())
-    monkeypatch.setattr(local_exec, "_GROUP_BYTES", 0)
+    monkeypatch.setattr(local_exec, "CACHE_MAX_BYTES", bound)
+    monkeypatch.setattr(local_exec, "_CACHE", OrderedDict())
+    monkeypatch.setattr(local_exec, "_BYTES", 0)
     errors: list[str] = []
 
     def worker(w: int) -> None:
@@ -353,6 +390,6 @@ def test_concurrent_posting_reads_and_rehydrates(gen_store, fresh_cache, monkeyp
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
     assert errors == []
-    cache = local_exec._GROUP_CACHE
-    assert local_exec._GROUP_BYTES == sum(e[4] for e in cache.values())
-    assert local_exec._GROUP_BYTES <= bound
+    cache = local_exec._CACHE
+    assert local_exec._BYTES == sum(e[2] for e in cache.values())
+    assert local_exec._BYTES <= bound
