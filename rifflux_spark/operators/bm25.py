@@ -15,10 +15,12 @@ SQLite rowid order (SURVEY.md §4).
 
 The plan shares the coordinator scorer's parts (operators/local_exec):
 the df lookup (``local_df``, no Spark job), the multiplicity-weighted
-idf (``query_idf``), the per-batch decode/score/sum kernel, and the
-posting budget's block selection (``wand.budget_selection`` over the
-blocks' metadata, read driver-side). Only the scan, the shuffle
-aggregation and the top-k are Spark's.
+idf (``query_idf``), the per-doc sum, and the posting budget's block
+selection (``wand.budget_selection`` over the blocks' metadata, read
+driver-side). Its executors decode each batch of blocks with the codec
+(:func:`_decode_score_arrow`), where the coordinator reads its cached
+decoded lanes. Only the scan, the shuffle aggregation and the top-k are
+Spark's.
 
 There is no block-max WAND pruning. Exact pruning (a seed job scoring
 the highest-bound blocks for a threshold θ, then a key filter keeping
@@ -57,9 +59,9 @@ from pyspark.sql import types as T
 from rifflux_spark.config import EngineConfig
 from rifflux_spark.functions.tokenizer import compile_query
 from rifflux_spark.operators import wand
+from rifflux_spark.operators.codec import bm25_wtf, decode_posting_arrow
 from rifflux_spark.operators.local_exec import (
     POSTING_COLUMNS,
-    _decode_score_arrow,
     _sum_by_doc,
     local_df,
     query_idf,
@@ -73,6 +75,20 @@ _SCORE_ROW = T.StructType(
         T.StructField("partial", T.DoubleType(), False),
     ]
 )
+
+
+def _decode_score_arrow(t, idf: dict[str, float], avgdl: float, k1: float, b: float):
+    """Decode + BM25-score an Arrow block batch → (doc_ord, partial).
+
+    One vectorized pass over ALL blocks; payload bytes flow straight from
+    the Arrow buffers into the varbyte decoder."""
+    if t is None or t.num_rows == 0:
+        return np.empty(0, dtype=np.int64), np.empty(0)
+    docs, tf, dl, ns = decode_posting_arrow(t)
+    idf_per = np.repeat(
+        np.array([idf[x] for x in t.column("term").to_pylist()]), ns
+    )
+    return docs, bm25_wtf(tf, dl, avgdl, k1, b) * idf_per
 
 
 def _score_blocks(

@@ -118,7 +118,7 @@ from rifflux_spark.functions.ftsparse import (
     parse_fts,
 )
 from rifflux_spark.functions.tokenizer import tokenize
-from rifflux_spark.operators.codec import bm25_wtf, decode_posting_arrow
+from rifflux_spark.operators.codec import bm25_wtf
 from rifflux_spark.sources.tables import IndexStore
 
 # vocabulary expansion guard: a 1-letter prefix over a web-scale vocab
@@ -292,39 +292,28 @@ _EMPTY = np.empty(0, dtype=np.int64)
 
 
 def _local_postings(store: IndexStore, terms: list[str]):
-    """Decode every posting for ``terms`` coordinator-side →
-    (term → (docs, tfs), (docs, dls)): each term's posting entries in
-    block order (a merged marker term can list a doc more than once),
-    and the doc ordinals of all postings, sorted, with their dl (looked
-    up by ``searchsorted``)."""
-    from rifflux_spark.operators.local_exec import POSTING_COLUMNS, read_postings
+    """Every posting for ``terms``, from the coordinator's decoded lanes
+    (operators/local_exec.term_lanes) → (term → (docs, tfs), (docs,
+    dls)): each term's posting entries in block order (a merged marker
+    term can list a doc more than once), and the doc ordinals of all
+    postings, sorted, with their dl (looked up by ``searchsorted``)."""
+    from rifflux_spark.operators.local_exec import term_lanes
 
-    postings: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    if not terms:
-        return postings, (_EMPTY, _EMPTY)
-    t = read_postings(store, terms, POSTING_COLUMNS)
-    if t is None:
-        return postings, (_EMPTY, _EMPTY)
-    docs, tfs, dls, ns = decode_posting_arrow(t)
-    # vectorized per-term grouping (no per-block Python loop): block rows
-    # of one term are contiguous runs (files are term-sorted) — find the
-    # runs and slice each term's posting spans
-    enc = t.column("term").combine_chunks().dictionary_encode()
-    codes = enc.indices.to_numpy()
-    names = enc.dictionary.to_pylist()
-    starts = np.concatenate(([0], np.cumsum(ns)))
-    first = np.concatenate(([0], np.flatnonzero(np.diff(codes)) + 1))
-    last = np.append(first[1:], codes.size)
-    by_term: dict[str, list[slice]] = {}
-    for c, s, e in zip(codes[first].tolist(), starts[first].tolist(), starts[last].tolist()):
-        by_term.setdefault(names[c], []).append(slice(s, e))
-    for term, spans in by_term.items():
-        postings[term] = (
-            np.concatenate([docs[s] for s in spans]),
-            np.concatenate([tfs[s] for s in spans]),
-        )
+    parts: dict[str, list[tuple[np.ndarray, np.ndarray]]] = {}
+    all_docs, all_dls = [], []
+    for _path, _g, _check, term, (docs, tfs, dls, _offs) in term_lanes(store, terms):
+        parts.setdefault(term, []).append((docs, tfs))
+        all_docs.append(docs)
+        all_dls.append(dls)
+    if not all_docs:
+        return {}, (_EMPTY, _EMPTY)
+    postings = {
+        term: ps[0] if len(ps) == 1 else tuple(np.concatenate(x) for x in zip(*ps))
+        for term, ps in parts.items()
+    }
     # every entry of a doc carries the same dl, so an unstable sort
     # (repeats kept) is a valid searchsorted lookup
+    docs, dls = np.concatenate(all_docs), np.concatenate(all_dls)
     order = np.argsort(docs)
     return postings, (docs[order], dls[order])
 

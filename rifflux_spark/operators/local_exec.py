@@ -13,23 +13,25 @@ This module runs the IDENTICAL decode + BM25 math driver-side with
 pyarrow + numpy, short-circuiting the scheduler: same blocks, same idf
 clamp, same tie-break, rank-identical results (tested against the Spark
 path and the FTS5 oracle). The lexical scorer is exact under the posting
-budget — one decode of every matching block, one sort to sum per doc, a
-partition top-k — and takes the budgeted range closure over it; block-
-max pruning does not pay at coordinator sizes (measurement in
+budget — one score of every matching posting, one sort to sum per doc,
+a partition top-k — and takes the budgeted range closure over it;
+block-max pruning does not pay at coordinator sizes (measurement in
 :func:`bm25_topk_local`). The distributed plan reuses this module's df
-lookup, idf weighting and decode/score/sum kernel, and
-operators/wand.py's budget selection. Real distributed engines do the
-same thing —
-coordinator-only execution for selective queries (e.g. single-node plans
-in Trino/Presto-style engines) — while bulk scans stay on the cluster.
+lookup, idf weighting and per-doc sum, and operators/wand.py's budget
+selection. Real distributed engines do the same thing — coordinator-
+only execution for selective queries (e.g. single-node plans in
+Trino/Presto-style engines) — while bulk scans stay on the cluster.
 
 Like SQLite serving every query from its one page cache, everything the
 coordinator keeps between queries — footers, decoded row groups of
-postings, term_stats and chunks, the vocabulary, the embedding matrix —
-lives in ONE cache (``_CACHE``: one LRU, one lock, one byte budget, one
-validity rule). Row groups hold what parquet returns — posting payloads
-stay varbyte-encoded — so decode, scoring and aggregation run on every
-query; there is no per-term, per-query or result cache.
+postings, term_stats and chunks, each term's decoded posting lanes, the
+vocabulary, the embedding matrix — lives in ONE cache (``_CACHE``: one
+LRU, one lock, one byte budget, one validity rule). Row groups hold what
+parquet returns (posting payloads varbyte-encoded); a term's postings in
+one row group are decoded once, into ``(docs, tf, dl)`` lanes that both
+coordinator evaluators read (the columnar posting arrays of PAPERS.md's
+*Columnar Formatted Inverted Index*, ICDE 2025). Scoring and aggregation
+run on every query; there is no per-query or result cache.
 
 The SearchService picks the path per query (``engine="auto"``; the
 routing constants in service.py say which queries reach Spark).
@@ -40,6 +42,7 @@ from __future__ import annotations
 import os
 import sys
 import threading
+from bisect import bisect_left, bisect_right
 from collections import Counter, OrderedDict
 from pathlib import Path
 
@@ -59,8 +62,9 @@ from rifflux_spark.sources.tables import IndexStore, _snapshot_dir_files
 
 # One coordinator cache, the analog of SQLite's one page cache, holds all
 # the coordinator keeps between queries, keyed by (kind, path[, row
-# group]): "footer" (an open ParquetFile; a parse costs ~0.25 ms and a
-# hybrid query touches ~40 files), "group", "vocab", "ords", "matrix",
+# group[, term]]): "footer" (an open ParquetFile; a parse costs ~0.25 ms
+# and a hybrid query touches ~40 files), "group", "lanes" (one term's
+# decoded postings in one row group), "vocab", "ords", "matrix",
 # "chunk_index" and "files" (a table's file list). One LRU by bytes under
 # CACHE_MAX_BYTES; an entry larger than the budget is served but not
 # kept. The lock guards the dict only (reads and decodes happen outside
@@ -113,7 +117,6 @@ def _cached(key: tuple, check, build):
     """The value cached under ``key`` if its entry was built under a
     ``check`` equal to this one; else ``build()`` → (value, bytes), kept
     unless it alone exceeds the budget, least recently used evicted."""
-    global _BYTES
     with _LOCK:
         hit = _CACHE.get(key)
         if hit is not None and (hit[0] is check or hit[0] == check):
@@ -121,15 +124,43 @@ def _cached(key: tuple, check, build):
             return hit[1]
     value, nbytes = build()
     with _LOCK:
-        old = _CACHE.pop(key, None)
-        if old is not None:
-            _BYTES -= old[2]
-        if nbytes <= CACHE_MAX_BYTES:
-            _CACHE[key] = (check, value, nbytes)
-            _BYTES += nbytes
-            while _BYTES > CACHE_MAX_BYTES:
-                _BYTES -= _CACHE.popitem(last=False)[1][2]
+        _keep(key, check, value, nbytes)
     return value
+
+
+def _cached_many(keys, checks, build) -> list:
+    """:func:`_cached` per key of ``keys`` (each with its ``checks``
+    entry), the missing ones built together: ``build(missing keys, their
+    checks)`` → one (value, bytes) per key."""
+    got = {}
+    with _LOCK:
+        for key, check in zip(keys, checks):
+            hit = _CACHE.get(key)
+            if hit is not None and (hit[0] is check or hit[0] == check):
+                _CACHE.move_to_end(key)
+                got[key] = hit[1]
+    if len(got) < len(keys):
+        missing = [(k, c) for k, c in zip(keys, checks) if k not in got]
+        built = build(*zip(*missing))
+        with _LOCK:
+            for (key, check), (value, nbytes) in zip(missing, built):
+                got[key] = value
+                _keep(key, check, value, nbytes)
+    return [got[k] for k in keys]
+
+
+def _keep(key: tuple, check, value, nbytes: int) -> None:
+    # under _LOCK: (re)place the entry, unless it alone exceeds the
+    # budget, then evict least recently used entries past the budget
+    global _BYTES
+    old = _CACHE.pop(key, None)
+    if old is not None:
+        _BYTES -= old[2]
+    if nbytes <= CACHE_MAX_BYTES:
+        _CACHE[key] = (check, value, nbytes)
+        _BYTES += nbytes
+        while _BYTES > CACHE_MAX_BYTES:
+            _BYTES -= _CACHE.popitem(last=False)[1][2]
 
 
 def _snapshot(store: IndexStore, table_dir: str, entry: dict):
@@ -214,7 +245,8 @@ def _cached_group(path: str, g: int, check, key: str, columns=None):
     `ingest` head query's posting read decompressed ~2.8k block rows to
     keep ~430 (5.2–6.6 ms of a 17.6–19.5 ms scorer call on a loaded 4-core
     host; 0.8–0.9 ms from the cache). Posting entries hold what parquet
-    returns — payloads still varbyte-encoded, decoded on every query."""
+    returns — payloads varbyte-encoded, decoded per term into
+    :func:`_decode_lanes`."""
     return _cached(("group", path, g), check, lambda: _read_group(path, g, key, columns))
 
 
@@ -248,6 +280,14 @@ def _group_rows(path: str, g: int, check, key: str, want: np.ndarray, columns=No
     return t, np.sort(np.concatenate(hits)) if hits else _NO_ROWS
 
 
+def _take_rows(t: pa.Table, rows: np.ndarray) -> pa.Table:
+    """Rows ``rows`` (ascending) of ``t``: a zero-copy slice of the cached
+    buffers when they are one run (one term of a term-sorted group)."""
+    if rows[-1] - rows[0] + 1 == rows.size:
+        return t.slice(rows[0], rows.size)
+    return t.take(pa.array(rows))
+
+
 def _read_filtered(files: list[Path], columns: list[str], terms: list[str]):
     """The rows of ``files`` whose ``term`` is in ``terms``, ``columns``
     only: the same rows in the same order (file, then row) as a plain
@@ -258,7 +298,7 @@ def _read_filtered(files: list[Path], columns: list[str], terms: list[str]):
     its rows are found by ``searchsorted`` — no file is assumed sorted —
     and pulled with one ``take`` in row order (a zero-copy slice when
     they are one run). A cold group is read once, whole, and kept still
-    varbyte-encoded: decode and scoring run on every query."""
+    varbyte-encoded."""
     want = np.array(sorted(set(terms)), dtype=object)
     tables = []
     for f in files:
@@ -273,15 +313,8 @@ def _read_filtered(files: list[Path], columns: list[str], terms: list[str]):
             ):
                 continue
             t, rows = _group_rows(path, g, check, "term", want)
-            if not rows.size:
-                continue
-            t = t.select(columns)
-            if rows[-1] - rows[0] + 1 == rows.size:
-                # one run of rows (one term of a term-sorted group): a
-                # zero-copy slice of the cached buffers
-                tables.append(t.slice(rows[0], rows.size))
-            else:
-                tables.append(t.take(pa.array(rows)))
+            if rows.size:
+                tables.append(_take_rows(t.select(columns), rows))
     if not tables:
         return None
     return pa.concat_tables(tables)
@@ -290,9 +323,86 @@ def _read_filtered(files: list[Path], columns: list[str], terms: list[str]):
 def read_postings(store: IndexStore, terms: list[str], columns: list[str]):
     """``columns`` of every posting block of ``terms`` (None when there
     are none): the query's term buckets only, through the row-group
-    cache. Both lexical engines and the FTS evaluator read here."""
+    cache. The distributed plan reads its block metadata here."""
     buckets = {term_bucket(t, store.n_term_buckets) for t in terms}
     return _read_filtered(_bucket_files(store, "postings", buckets), columns, terms)
+
+
+# posting columns a block decode reads (plus ``term``, which the
+# distributed scorer weights by)
+POSTING_COLUMNS = ["term", "n_docs", "first_doc", "gaps", "tfs", "dls"]
+
+
+def _narrow(a: np.ndarray) -> np.ndarray:
+    # tf and dl are token counts: int32 holds them (16 B a posting, not
+    # 24), and they score as the same float64 values; a copy either way
+    return a.copy() if a.size and a.max() > np.iinfo(np.int32).max else a.astype(np.int32)
+
+
+def _decode_lanes(keys, checks) -> list:
+    """(lanes, bytes) per ``("lanes", path, row group, term)`` key: the
+    term's (docs, tf, dl) of its block rows in that group, in row order,
+    and the block rows' posting offsets (a cumsum of ``n_docs``, from 0).
+    The keys' rows, pulled from the cached groups, are decoded by one
+    :func:`codec.decode_posting_arrow` call (every check of that decoder
+    runs); each entry gets its own read-only arrays. A term the group
+    does not hold gets empty lanes."""
+    tables, counts = [], []
+    for (_, path, g, term), check in zip(keys, checks):
+        t, rows = _group_rows(path, g, check, "term", np.array([term], dtype=object))
+        counts.append(rows.size)
+        if rows.size:
+            tables.append(_take_rows(t.select(POSTING_COLUMNS[1:]), rows))
+    docs = tf = dl = ns = np.empty(0, dtype=np.int64)
+    if tables:
+        docs, tf, dl, ns = decode_posting_arrow(pa.concat_tables(tables))
+    offs_all = np.concatenate(([0], np.cumsum(ns)))
+    out = []
+    block = 0
+    for n in counts:
+        offs = offs_all[block : block + n + 1] - offs_all[block]
+        lo, hi = offs_all[block], offs_all[block + n]
+        lanes = (docs[lo:hi].copy(), _narrow(tf[lo:hi]), _narrow(dl[lo:hi]), offs)
+        for a in lanes:
+            a.flags.writeable = False
+        out.append((lanes, sum(a.nbytes for a in lanes)))
+        block += n
+    return out
+
+
+def term_lanes(store: IndexStore, terms: list[str]):
+    """[(path, row group, validity token, term, lanes)] of every posting
+    row group holding one of ``terms``, in (file, row group, term) order
+    — file row order on the term-sorted files every writer produces.
+    Each term is looked up in its own bucket's files only, in the groups
+    whose footer min/max can hold it. Its lanes (:func:`_decode_lanes`)
+    are cached per (file, row group, term) under the group's validity
+    token, empty ones too, so a warm lookup never touches the group;
+    both coordinator evaluators read their postings here."""
+    by_bucket: dict[int, list[str]] = {}
+    for t in sorted(set(terms)):
+        by_bucket.setdefault(term_bucket(t, store.n_term_buckets), []).append(t)
+    keys, checks = [], []
+    for bucket, want in sorted(by_bucket.items()):
+        for f in _bucket_files(store, "postings", {bucket}):
+            path = str(f)
+            check, pf = _footer(path)
+            md = pf.metadata
+            term_col = md.schema.names.index("term")
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(term_col).statistics
+                if st is not None and st.min is not None:
+                    held = want[bisect_left(want, st.min) : bisect_right(want, st.max)]
+                else:
+                    held = want
+                keys.extend(("lanes", path, g, term) for term in held)
+                checks.extend([check] * len(held))
+    found = _cached_many(keys, checks, _decode_lanes)
+    return [
+        (path, g, check, term, lanes)
+        for (_, path, g, term), check, lanes in zip(keys, checks, found)
+        if lanes[0].size
+    ]
 
 
 def term_stats_cached(store: IndexStore) -> tuple[dict[str, int], pa.Table] | None:
@@ -378,20 +488,6 @@ def local_dead_ords(store: IndexStore) -> np.ndarray:
     return np.unique(np.concatenate([_ord_set(store, "tombstones"), _ord_set(store, "purged")]))
 
 
-def _decode_score_arrow(t, idf: dict[str, float], avgdl: float, k1: float, b: float):
-    """Decode + BM25-score an Arrow block table → (doc_ord, partial).
-
-    One vectorized pass over ALL blocks; payload bytes flow straight from
-    the Arrow buffers into the varbyte decoder."""
-    if t is None or t.num_rows == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0)
-    docs, tf, dl, ns = decode_posting_arrow(t)
-    idf_per = np.repeat(
-        np.array([idf[x] for x in t.column("term").to_pylist()]), ns
-    )
-    return docs, bm25_wtf(tf, dl, avgdl, k1, b) * idf_per
-
-
 def _sum_by_doc(docs: np.ndarray, partials: np.ndarray):
     """Per-doc sums: one stable sort, then a reduceat over the runs of
     equal docs. Stability keeps each doc's partials in posting (file)
@@ -421,14 +517,6 @@ def top_k_order(scores: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
     return np.lexsort((ids, neg))[:k]
 
 
-# posting columns the scorer decodes, and those plus the block metadata
-# the budget selection reads: one read serves both
-POSTING_COLUMNS = ["term", "n_docs", "first_doc", "gaps", "tfs", "dls"]
-LEXICAL_COLUMNS = POSTING_COLUMNS + [
-    c for c in wand.BLOCK_META_COLUMNS if c not in POSTING_COLUMNS
-]
-
-
 def bm25_topk_local(
     store: IndexStore,
     query: str,
@@ -441,9 +529,12 @@ def bm25_topk_local(
 
     Exactly the semantics of operators/bm25.bm25_topk (same codec, same
     constants, same (score desc, doc_ord asc) tie-break, same negation).
-    Under the posting budget every matching block is decoded in one
-    vectorized pass, each doc's partials are summed after one stable
-    sort, and the top k are picked by partition (:func:`top_k_order`).
+    Under the posting budget every matching block is scored in one
+    vectorized pass over the query terms' decoded lanes
+    (:func:`term_lanes`; a posting list is decoded once, by the first
+    query that reads it), each doc's partials are summed after one
+    stable sort, and the top k are picked by partition
+    (:func:`top_k_order`).
 
     There is no block-max pruning here. An impact-ordered wave scan
     (blocks decoded in descending WAND bound order, stopping once the
@@ -466,14 +557,26 @@ def bm25_topk_local(
     260k, 2–3 terms, df ≤ 1%          6.5         6.5          6.6
     ================================  ==========  ===========  =======
 
-    ``config.lexical_budget_postings > 0`` caps the decoded posting
+    Decoding each posting list once into cached lanes, before (a varbyte
+    decode of every block on every query) → after, ms min / median over
+    3 interleaved processes a side, each the median over the queries of
+    7 warm calls at top 20 (what a top-10 search asks for):
+
+    ================================  ===========  ===========
+    index / queries                   before       after
+    ================================  ===========  ===========
+    26.1k chunks, 48 head (Σdf ≤87k)  3.61 / 3.78  2.04 / 2.16
+    ================================  ===========  ===========
+
+    ``config.lexical_budget_postings > 0`` caps the scored posting
     count: a query whose blocks hold more postings than the budget
-    decodes only the impact-ordered range closure
+    scores only the impact-ordered range closure
     (:func:`operators.wand.budget_selection`), so every returned doc
     still carries its exact full score and the trade is coverage.
     Under-budget queries are exact; 0 opts back into exact FTS5-parity
     behavior at any cost. The distributed plan (operators/bm25.py) runs
-    the same selection, idf and decode/score/sum kernel on executors.
+    the same selection and idf, and the same math, decoding its blocks
+    on executors.
 
     ``dfs`` is :func:`local_df` of the query's distinct terms when the
     caller already looked them up (the service routes on it); it is
@@ -489,26 +592,33 @@ def bm25_topk_local(
     idf = query_idf(terms, dfs, n_docs)
     if not idf:
         return []
-    qterms = sorted(idf)
-    t = read_postings(store, qterms, LEXICAL_COLUMNS)
-    if t is None:
+    pieces = term_lanes(store, sorted(idf))
+    if not pieces:
         return []
-    tombs = local_tombstones(store)
+    sizes = [p[4][0].size for p in pieces]
+    idf_per = np.repeat([idf[p[3]] for p in pieces], sizes)
+    docs, tf, dl = (np.concatenate([p[4][i] for p in pieces]) for i in range(3))
     k1, b = config.bm25_k1, config.bm25_b
-    sel = wand.budget_selection(
-        t, idf, avgdl, k1, b, int(getattr(config, "lexical_budget_postings", 0) or 0)
-    )
-    if sel is None:
-        docs, partials = _decode_score_arrow(t, idf, avgdl, k1, b)
-        return _finish_topk(docs, partials, tombs, top_k)
-    # budgeted: decode the selected blocks, keep only docs inside the
-    # selected intervals — each has ALL its postings decoded
-    mask, ranges = sel
-    docs, partials = _decode_score_arrow(
-        t.take(pa.array(np.flatnonzero(mask))), idf, avgdl, k1, b
-    )
-    inside = wand.mask_docs_to_ranges(docs, ranges)
-    return _finish_topk(docs[inside], partials[inside], tombs, top_k)
+    budget = int(getattr(config, "lexical_budget_postings", 0) or 0)
+    ranges = None
+    if 0 < budget < docs.size:
+        # budgeted: the selection reads the pieces' block metadata (from
+        # the cached groups), and only the selected blocks' spans of the
+        # lanes are scored
+        metas = []
+        for path, g, check, term, _ in pieces:
+            t, rows = _group_rows(path, g, check, "term", np.array([term], dtype=object))
+            metas.append(_take_rows(t.select(wand.BLOCK_META_COLUMNS), rows))
+        mask, ranges = wand.budget_selection(pa.concat_tables(metas), idf, avgdl, k1, b, budget)
+        keep = np.repeat(mask, np.concatenate([np.diff(p[4][3]) for p in pieces]))
+        docs, tf, dl, idf_per = docs[keep], tf[keep], dl[keep], idf_per[keep]
+    partials = bm25_wtf(tf, dl, avgdl, k1, b) * idf_per
+    if ranges is not None:
+        # keep only docs inside the selected intervals — each has ALL
+        # its postings scored
+        inside = wand.mask_docs_to_ranges(docs, ranges)
+        docs, partials = docs[inside], partials[inside]
+    return _finish_topk(docs, partials, local_tombstones(store), top_k)
 
 
 def _finish_topk(

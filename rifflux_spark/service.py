@@ -99,20 +99,21 @@ class SearchService:
     LOCAL_EXEC_BUDGET_BYTES = 256 << 20
 
     def lexical(
-        self, query: str, top_k: int, engine: str = "auto"
+        self, query: str, top_k: int, engine: str = "auto", *, limit: int | None = None
     ) -> list[dict[str, Any]]:
         """BM25 top-k over the posting blocks. ``engine="auto"`` serves it
         on the coordinator unless the capped working set — min(Σdf,
         ``lexical_budget_postings``), or Σdf when the budget is 0 —
         exceeds ``LOCAL_EXEC_MAX_POSTINGS``; both engines score with the
-        same kernel and apply the same posting budget."""
+        same kernel and apply the same posting budget. ``limit`` keeps
+        the first ``limit`` rows of the ``top_k`` (see :meth:`_local_rows`)."""
         if engine not in {"auto", "local", "spark"}:
             raise ValueError(f"unknown engine: {engine}")
         with self.store.read_snapshot():
-            return self._lexical(query, top_k, engine=engine)
+            return self._lexical(query, top_k, engine=engine, limit=limit)
 
     def _lexical(
-        self, query: str, top_k: int, engine: str = "auto"
+        self, query: str, top_k: int, engine: str = "auto", limit: int | None = None
     ) -> list[dict[str, Any]]:
         from rifflux_spark.operators import local_exec
 
@@ -130,13 +131,14 @@ class SearchService:
                 local_exec.bm25_topk_local(
                     self.store, query, top_k, self.config,
                     cstats=self._corpus_stats(), dfs=dfs,
-                )
+                ),
+                limit=limit,
             )
         topk = bm25_topk(
             self.spark, self.store, query, top_k, self.config,
             cstats=self._corpus_stats(), dfs=dfs,
         )
-        return self._spark_rows(topk)
+        return self._spark_rows(topk)[:limit]
 
     def phrase(self, query: str, top_k: int = 10) -> list[dict[str, Any]]:
         """Exact-phrase search (beyond-reference): the whole query is ONE
@@ -197,20 +199,26 @@ class SearchService:
         }
 
     def _local_rows(
-        self, topk: list[tuple[int, float]], key: str = "bm25_score"
+        self, topk: list[tuple[int, float]], key: str = "bm25_score", limit: int | None = None
     ) -> list[dict[str, Any]]:
         """Coordinator top-k ``[(doc_ord, score)]`` → result rows, in
-        top-k order (rows whose chunk is gone are dropped)."""
+        top-k order (rows whose chunk is gone are dropped), the first
+        ``limit`` of them. Only the first ``limit`` candidates are
+        rehydrated; the rest only when one of those has no chunk row, so
+        the rows equal a rehydrate of every candidate."""
         if not topk:
             return []
         from rifflux_spark.operators.local_exec import rehydrate_local
 
-        chunks = rehydrate_local(self.store, [d for d, _ in topk])
+        head = topk[:limit]
+        chunks = rehydrate_local(self.store, [d for d, _ in head])
+        if len(chunks) < len(head) < len(topk):
+            chunks.update(rehydrate_local(self.store, [d for d, _ in topk[len(head):]]))
         return [
             self._result_row(c, score, key)
             for doc_ord, score in topk
             if (c := chunks.get(doc_ord)) is not None
-        ]
+        ][:limit]
 
     def _spark_rows(
         self, topk, key: str = "bm25_score", descending: bool = False
@@ -335,31 +343,38 @@ class SearchService:
             for r in rows
         ]
 
-    def semantic(self, query_vector, top_k: int, engine: str = "auto") -> list[dict[str, Any]]:
+    def semantic(
+        self, query_vector, top_k: int, engine: str = "auto", *, limit: int | None = None
+    ) -> list[dict[str, Any]]:
+        """Cosine top-k over the embeddings; ``limit`` as in :meth:`lexical`."""
         if query_vector is None:
             return []
         with self.store.read_snapshot():
-            return self._semantic(query_vector, top_k, engine=engine)
+            return self._semantic(query_vector, top_k, engine=engine, limit=limit)
 
-    def _semantic(self, query_vector, top_k: int, engine: str = "auto") -> list[dict[str, Any]]:
+    def _semantic(
+        self, query_vector, top_k: int, engine: str = "auto", limit: int | None = None
+    ) -> list[dict[str, Any]]:
         if engine != "spark":
             from rifflux_spark.operators import local_exec
 
             if engine == "local" or (
                 local_exec.embeddings_bytes(self.store) <= self.LOCAL_EXEC_BUDGET_BYTES
             ):
-                return self._semantic_local(query_vector, top_k)
+                return self._semantic_local(query_vector, top_k, limit)
         emb = self.store.embeddings()
         if self.store.exists("tombstones") or self.store.exists("purged"):
             emb = emb.join(F.broadcast(self.store.dead_ords()), on="doc_ord", how="left_anti")
         topk = semantic_topk(emb, query_vector, top_k, id_cols=["doc_ord"])
-        return self._spark_rows(topk, "cosine", descending=True)
+        return self._spark_rows(topk, "cosine", descending=True)[:limit]
 
-    def _semantic_local(self, query_vector, top_k: int) -> list[dict[str, Any]]:
+    def _semantic_local(
+        self, query_vector, top_k: int, limit: int | None = None
+    ) -> list[dict[str, Any]]:
         from rifflux_spark.operators.local_exec import semantic_topk_local
 
         return self._local_rows(
-            semantic_topk_local(self.store, query_vector, top_k), "cosine"
+            semantic_topk_local(self.store, query_vector, top_k), "cosine", limit
         )
 
     # --- the reference search orchestration (search.py:30-100) ---
@@ -385,21 +400,26 @@ class SearchService:
                 for row in self._phrase(query, top_k)
             ]
         cand = top_k * self.config.candidate_multiplier
-        lexical = self.lexical(query, cand) if mode in {"hybrid", "lexical"} else []
+        # a lexical or semantic search rehydrates only the rows it
+        # returns; hybrid fuses every candidate's chunk_id
+        limit = None if mode == "hybrid" else top_k
+        lexical = self.lexical(query, cand, limit=limit) if mode in {"hybrid", "lexical"} else []
         query_vec = (
             self.embed_query(query) if mode in {"hybrid", "semantic"} else None
         )
-        semantic = self.semantic(query_vec, cand) if mode in {"hybrid", "semantic"} else []
+        semantic = (
+            self.semantic(query_vec, cand, limit=limit) if mode in {"hybrid", "semantic"} else []
+        )
 
         if mode == "lexical":
             return [
                 {**row, "score_breakdown": {"bm25": row["bm25_score"]}}
-                for row in lexical[:top_k]
+                for row in lexical
             ]
         if mode == "semantic":
             return [
                 {**row, "score_breakdown": {"cosine": row["cosine"]}}
-                for row in semantic[:top_k]
+                for row in semantic
             ]
 
         lexical_ids = [row["chunk_id"] for row in lexical]

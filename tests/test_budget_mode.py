@@ -8,6 +8,9 @@
   all its postings decoded), identical between the coordinator and
   distributed paths, which share one selection
   (``wand.budget_selection``) that ignores the metadata's row order;
+- the coordinator's scorer over its cached decoded lanes returns exactly
+  what scoring a filtered read of the block table returns, budgeted or
+  exact;
 - decoded work in budgeted mode is capped near the budget (the
   sublinear-growth evidence lives in bench.py's two-corpus stress
   block);
@@ -111,6 +114,67 @@ def test_budgeted_scores_are_exact_and_paths_agree(spark, store) -> None:
     ]
     assert [d for d, _ in spark_got] == [d for d, _ in got]
     assert all(abs(a[1] - b[1]) < 1e-12 for a, b in zip(spark_got, got))
+
+
+def _block_table_topk(store, q: str, top_k: int, config) -> list[tuple[int, float]]:
+    """The coordinator scorer computed over the block table itself: one
+    filtered read of the query's blocks, the posting budget's selection
+    over it, and the distributed kernel's decode of the selected rows."""
+    import pyarrow as pa
+
+    from rifflux_spark.functions.tokenizer import compile_query
+    from rifflux_spark.operators import wand
+    from rifflux_spark.operators.bm25 import _decode_score_arrow
+    from rifflux_spark.operators.local_exec import (
+        POSTING_COLUMNS,
+        _finish_topk,
+        local_df,
+        local_tombstones,
+        query_idf,
+        read_postings,
+    )
+
+    terms = compile_query(q)
+    cstats = store.corpus_stats()
+    avgdl = float(cstats["avgdl"])
+    idf = query_idf(terms, local_df(store, sorted(set(terms))), int(cstats["n_docs"]))
+    columns = POSTING_COLUMNS + [c for c in wand.BLOCK_META_COLUMNS if c not in POSTING_COLUMNS]
+    t = read_postings(store, sorted(idf), columns)
+    k1, b = config.bm25_k1, config.bm25_b
+    sel = wand.budget_selection(t, idf, avgdl, k1, b, config.lexical_budget_postings)
+    if sel is not None:
+        t = t.take(pa.array(np.flatnonzero(sel[0])))
+    docs, partials = _decode_score_arrow(t, idf, avgdl, k1, b)
+    if sel is not None:
+        inside = wand.mask_docs_to_ranges(docs, sel[1])
+        docs, partials = docs[inside], partials[inside]
+    return _finish_topk(docs, partials, local_tombstones(store), top_k)
+
+
+def test_lanes_scorer_equals_block_table_scorer(spark, store) -> None:
+    """The coordinator's scorer over cached lanes returns exactly (same
+    docs, bit-equal scores) what scoring the block table returns, in
+    budgeted and exact mode, cold and warm."""
+    from collections import OrderedDict
+
+    from rifflux_spark.operators import local_exec
+    from rifflux_spark.operators.local_exec import bm25_topk_local, local_df
+
+    stop, rare = _stopword_query(spark, store), _rare_query(spark, store)
+    mid = " ".join([stop.split()[0], rare.split()[0]])
+    sigma = sum(local_df(store, sorted(set(stop.split()))).values())
+    budgets = (0, 150, BUDGET.lexical_budget_postings, sigma // 2, sigma)
+    for q in (stop, rare, mid):
+        for budget in budgets:
+            cfg = dataclasses.replace(CONFIG, lexical_budget_postings=budget)
+            for top_k in (10, 1000):
+                want = _block_table_topk(store, q, top_k, cfg)
+                assert want, (q, budget)
+                with pytest.MonkeyPatch.context() as mp:
+                    mp.setattr(local_exec, "_CACHE", OrderedDict())
+                    mp.setattr(local_exec, "_BYTES", 0)
+                    assert bm25_topk_local(store, q, top_k, cfg) == want, (q, budget, top_k)
+                    assert bm25_topk_local(store, q, top_k, cfg) == want, (q, budget, top_k)
 
 
 def test_default_config_budget_is_on_and_under_budget_exact(spark, store) -> None:

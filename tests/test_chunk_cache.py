@@ -1,12 +1,16 @@
 """The decoded chunk row-group cache behind ``local_exec.rehydrate_local``:
 rows identical to a plain pyarrow read (absent ordinals, appended
 generations, narrowed columns), invalidation across incremental applies
-and vacuum, the LRU byte bound, and zero parquet reads when warm."""
+and vacuum, the LRU byte bound, and zero parquet reads when warm; and a
+lexical or semantic search rehydrating only the rows it returns, with
+the same rows as a rehydrate of every candidate when a hit has no chunk
+row."""
 
 from __future__ import annotations
 
 import json
 import random
+import shutil
 from collections import OrderedDict
 
 import pyarrow as pa
@@ -263,3 +267,56 @@ def test_concurrent_rehydrates_keep_cache_consistent(appended_store, fresh_cache
     cache = local_exec._CACHE
     assert local_exec._BYTES == sum(e[2] for e in cache.values())
     assert local_exec._BYTES <= bound
+
+
+def test_search_rehydrates_only_returned_rows(spark, tmp_path_factory, monkeypatch) -> None:
+    """Lexical and semantic searches rehydrate their ``top_k`` rows, not
+    all 2×``top_k`` candidates; when a top-``top_k`` hit has no chunk
+    row (written out of a copy of the chunks table), later candidates
+    fill in and the rows equal those of a rehydrate of every candidate
+    (``lexical``/``semantic`` without ``limit``)."""
+    pages = synthetic_pages(spark, 40, seed=11)
+    src = str(tmp_path_factory.mktemp("rehydrate_src"))
+    build_index(spark, pages, src, CONFIG)
+    q, k = "cache ttl policy data", 5
+    svc = SearchService(spark, src, CONFIG)
+    cand = k * CONFIG.candidate_multiplier
+    lex = svc.lexical(q, cand)
+    sem = svc.semantic(svc.embed_query(q), cand)
+    assert len(lex) == cand and len(sem) == cand, "the probe needs 2×top_k candidates"
+
+    calls: list[int] = []
+    real = local_exec.rehydrate_local
+
+    def counting(store, ords, columns=None):
+        calls.append(len(ords))
+        return real(store, ords, columns)
+
+    monkeypatch.setattr(local_exec, "rehydrate_local", counting)
+    for mode in ("lexical", "semantic"):
+        calls.clear()
+        assert len(svc.search(q, top_k=k, mode=mode)) == k
+        assert calls == [k], mode
+
+    # drop the chunk rows of the lexical and semantic 2nd hits
+    dropped = {r["chunk_id"] for r in (lex[1], sem[1])}
+    root = str(tmp_path_factory.mktemp("rehydrate_copy")) + "/idx"
+    shutil.copytree(src, root)
+    copy = IndexStore(spark, root, CONFIG.n_term_buckets)
+    for f in copy.data_files("chunks"):
+        t = pq.read_table(f)
+        keep = pc.invert(pc.is_in(t.column("chunk_id"), value_set=pa.array(sorted(dropped))))
+        if not pc.all(keep).as_py():
+            pq.write_table(t.filter(keep), f)
+    svc = SearchService(spark, root, CONFIG)
+    monkeypatch.undo()
+    want_lex = [
+        {**r, "score_breakdown": {"bm25": r["bm25_score"]}} for r in svc.lexical(q, cand)[:k]
+    ]
+    vec = svc.embed_query(q)
+    want_sem = [
+        {**r, "score_breakdown": {"cosine": r["cosine"]}} for r in svc.semantic(vec, cand)[:k]
+    ]
+    assert len(want_lex) == k and not dropped & {r["chunk_id"] for r in want_lex + want_sem}
+    assert svc.search(q, top_k=k, mode="lexical") == want_lex
+    assert svc.search(q, top_k=k, mode="semantic") == want_sem

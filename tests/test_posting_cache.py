@@ -1,11 +1,13 @@
 """Coordinator posting reads through the shared decoded row-group cache
-(``local_exec._read_filtered``): rows identical to a plain pyarrow read +
+(``local_exec._read_filtered``) and the per-term decoded lanes built from
+it (``local_exec.term_lanes``): rows identical to a plain pyarrow read +
 ``is_in`` filter (absent terms, column subsets, appended generations, a
-file not sorted by term), zero parquet row-group reads when warm — also
-for a query never run before — no cached group outliving its file across
-apply / compaction / vacuum, one byte budget over chunk and posting
-groups and every other kind of entry, and threaded posting reads mixed
-with rehydrates."""
+file not sorted by term), lanes identical to a decode of that read, zero
+parquet row-group reads when warm — also for a query never run before —
+and zero varbyte decodes, no cached group or lanes outliving its file
+across apply / compaction / vacuum / gc, one byte budget over chunk and
+posting groups, lanes and every other kind of entry, and threaded
+posting reads mixed with rehydrates."""
 
 from __future__ import annotations
 
@@ -21,9 +23,10 @@ from pyspark.sql import functions as F
 
 from rifflux_spark.config import EngineConfig
 from rifflux_spark.functions.xxhash64 import term_bucket
-from rifflux_spark.operators import ftsquery, local_exec, wand
+from rifflux_spark.operators import codec, ftsquery, local_exec, wand
 from rifflux_spark.plans.build import build_index
 from rifflux_spark.plans.incremental import apply_incremental, compact, vacuum
+from rifflux_spark.service import SearchService
 from rifflux_spark.sources import tables as tables_mod
 from rifflux_spark.sources.pages import synthetic_pages
 from rifflux_spark.sources.tables import IndexStore
@@ -183,6 +186,146 @@ def _bucket_of(term: str) -> int:
     return term_bucket(term, CONFIG.n_term_buckets)
 
 
+def _lanes_oracle(store: IndexStore, term: str):
+    """Oracle: ``term``'s blocks read plainly from its bucket's files,
+    decoded → (docs, tf, dl), or None when it has no blocks."""
+    t = _plain(store.partition_files("postings", {_bucket_of(term)}), local_exec.POSTING_COLUMNS, [term])
+    return None if t is None else codec.decode_posting_arrow(t)[:3]
+
+
+def _by_term(pieces) -> dict[str, list[np.ndarray]]:
+    """term → its lanes' (docs, tf, dl), pieces concatenated in order."""
+    out: dict[str, list] = {}
+    for *_, term, lanes in pieces:
+        out.setdefault(term, []).append(lanes[:3])
+    return {t: [np.concatenate(x) for x in zip(*ls)] for t, ls in out.items()}
+
+
+def _lanes_ok(store: IndexStore, terms, want: dict) -> bool:
+    got = _by_term(local_exec.term_lanes(store, terms))
+    return set(got) == {t for t, w in want.items() if w is not None} and all(
+        all(np.array_equal(g, w) for g, w in zip(got[t], want[t])) for t in got
+    )
+
+
+def test_lanes_match_plain_read(gen_store, fresh_cache) -> None:
+    """Each (row group, term) entry equals a decode of a plain read of
+    that group filtered to the term; each term's pieces, in order, equal
+    a decode of its blocks read plainly; all pieces are in file row
+    order."""
+    store = gen_store
+    files = store.data_files("postings")
+    vocab = _vocab(files)
+    absent = _absent(vocab)
+    rng = random.Random(21)
+    for trial in range(40):
+        terms = rng.sample(vocab, rng.randint(1, 6)) + rng.sample(absent, rng.randint(0, 2))
+        pieces = local_exec.term_lanes(store, terms)
+        for path, g, check, term, (docs, tf, dl, offs) in pieces:
+            assert check == local_exec._check(path)
+            t = pq.ParquetFile(path).read_row_groups([g])
+            want_docs, want_tf, want_dl, ns = codec.decode_posting_arrow(
+                t.filter(pc.equal(t.column("term"), term))
+            )
+            for got, want in ((docs, want_docs), (tf, want_tf), (dl, want_dl)):
+                np.testing.assert_array_equal(got, want)
+                assert not got.flags.writeable, "cached lanes are read-only"
+            np.testing.assert_array_equal(offs, np.concatenate(([0], np.cumsum(ns))))
+        assert _lanes_ok(store, terms, {t: _lanes_oracle(store, t) for t in terms}), trial
+        # (file, row group, term) order is file row order: every piece
+        # concatenated equals a decode of the plain filtered read
+        buckets = sorted({_bucket_of(t) for t in terms})
+        plain = _plain([f for b in buckets for f in store.partition_files("postings", {b})],
+                       local_exec.POSTING_COLUMNS, terms)
+        if plain is None:
+            assert pieces == []
+            continue
+        want = codec.decode_posting_arrow(plain)
+        for i in range(3):
+            np.testing.assert_array_equal(np.concatenate([p[4][i] for p in pieces]), want[i])
+    # one entry per (file, row group, term) looked up, empty ones included
+    keys = [k for k in local_exec._CACHE if k[0] == "lanes"]
+    assert len(keys) == len(set(keys)) and any(
+        local_exec._CACHE[k][1][0].size == 0 for k in keys
+    ), "an absent term's lookup is kept empty"
+
+
+def test_lanes_of_unsorted_file_match_plain_read(tmp_path, fresh_cache) -> None:
+    """Lanes decoded together for several terms of groups whose block
+    rows are in shuffled term order equal each term's own decode."""
+    rng = np.random.default_rng(12)
+    vocab = [f"t{i:02d}" for i in range(20)]
+    rows = []
+    for i, term in enumerate(rng.choice(vocab, size=300)):
+        docs = np.sort(rng.choice(5000, size=int(rng.integers(1, 9)), replace=False)) + i
+        tfs, dls = rng.integers(1, 300, docs.size), rng.integers(1, 70000, docs.size)
+        rows.append({"term": str(term), **codec.encode_block(docs, tfs, dls)})
+    t = pa.Table.from_pylist(rows)
+    f = str(tmp_path / "unsorted.parquet")
+    pq.write_table(t, f, row_group_size=70)
+    cases = [(f, g) for g in range(pq.ParquetFile(f).num_row_groups)]
+    # terms interleaved row by row: together their rows span one run
+    # (0, 2, 1, 3) that is not in row order
+    alt = str(tmp_path / "interleaved.parquet")
+    pairs = [{**r, "term": "t01" if i % 2 else "t00"} for i, r in enumerate(rows[:4])]
+    pq.write_table(pa.Table.from_pylist(pairs), alt)
+    cases.append((alt, 0))
+    for f, g in cases:
+        terms = sorted(set(rng.choice(vocab + ["absent"], size=6).tolist()) | {"t00", "t01"})
+        keys = [("lanes", f, g, term) for term in terms]
+        got = local_exec._decode_lanes(keys, [local_exec._check(f)] * len(keys))
+        plain = pq.ParquetFile(f).read_row_group(g)
+        for term, ((docs, tf, dl, offs), nbytes) in zip(terms, got):
+            one = plain.filter(pc.equal(plain.column("term"), term))
+            want = codec.decode_posting_arrow(one)
+            for a, b in zip((docs, tf, dl), want[:3]):
+                np.testing.assert_array_equal(a, b)
+            np.testing.assert_array_equal(offs, np.concatenate(([0], np.cumsum(want[3]))))
+            assert nbytes == docs.nbytes + tf.nbytes + dl.nbytes + offs.nbytes
+
+
+def _phrase_of(store: IndexStore) -> str:
+    """Two adjacent tokens of an indexed chunk."""
+    from rifflux_spark.functions.tokenizer import tokenize
+
+    content = pq.read_table(store.data_files("chunks")[0], columns=["content"]).column("content")[3].as_py()
+    toks = [t for t in tokenize(content) if t.isalpha()]
+    return f"{toks[1]} {toks[2]}"
+
+
+def test_warm_queries_decode_nothing(spark, gen_store, fresh_cache, monkeypatch) -> None:
+    """A warm lexical, hybrid, fts and phrase call makes no varbyte
+    decode: every posting comes from the cached lanes."""
+    store = gen_store
+    svc = SearchService(spark, store.root, CONFIG)
+    vocab = [t for t in _vocab(store.data_files("postings")) if t.isalpha() and len(t) > 3]
+    rng = random.Random(31)
+    terms = rng.sample(vocab, 3)
+    phrase = _phrase_of(store)
+    calls: list[int] = []
+    real = codec.decode_varbyte
+
+    def counting(data, n=None):
+        calls.append(len(data))
+        return real(data, n)
+
+    monkeypatch.setattr(codec, "decode_varbyte", counting)
+
+    def serve():
+        q = " ".join(terms)
+        out = [svc.search(q, top_k=5, mode=mode) for mode in ("lexical", "hybrid", "fts")]
+        out.append(svc.search(phrase, top_k=5, mode="phrase"))
+        out.append(svc.fts(f"{terms[0][:2]}* OR ({terms[1]} NOT {terms[2]})", top_k=5))
+        return out
+
+    cold = serve()
+    assert cold[0] and cold[3], "the probes need hits"
+    assert calls, "a cold query decodes its postings"
+    calls.clear()
+    assert serve() == cold
+    assert calls == []
+
+
 def test_warm_reads_make_no_row_group_reads(gen_store, fresh_cache, monkeypatch) -> None:
     store = gen_store
     vocab = [t for t in _vocab(store.data_files("postings")) if t.isalpha()]
@@ -218,18 +361,23 @@ def test_snapshot_changes_drop_stale_posting_groups(spark, tmp_path_factory, fre
     # one term per bucket: every query below syncs and reads all buckets
     probe = " ".join({_bucket_of(t): t for t in vocab}.values())
 
-    def cached() -> set[str]:
-        return {k[1] for k in local_exec._CACHE if k[0] == "group" and k[1].startswith(postings_dir)}
+    fts_probe = " OR ".join(probe.split())
+
+    def cached(kind: str = "group") -> set[str]:
+        return {k[1] for k in local_exec._CACHE if k[0] == kind and k[1].startswith(postings_dir)}
 
     def check(step: str) -> set[str]:
         got = local_exec.bm25_topk_local(store, probe, 10, CONFIG)
+        fts = ftsquery.fts_topk_local(store, fts_probe, 10, CONFIG)
         live = {str(f) for f in store.data_files("postings")}
         assert cached() <= live, f"{step}: cached groups of files outside the snapshot"
+        assert cached("lanes") and cached("lanes") <= live, f"{step}: lanes of files outside the snapshot"
         # warm answers equal a cold cache's
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(local_exec, "_CACHE", OrderedDict())
             mp.setattr(local_exec, "_BYTES", 0)
             assert local_exec.bm25_topk_local(store, probe, 10, CONFIG) == got, step
+            assert ftsquery.fts_topk_local(store, fts_probe, 10, CONFIG) == fts, step
         return live
 
     # warm every postings group of the build
@@ -242,10 +390,12 @@ def test_snapshot_changes_drop_stale_posting_groups(spark, tmp_path_factory, fre
     assert res["tombstoned"] > 0
     check("apply")
     for step, fn in (("compact", compact), ("vacuum", vacuum)):
-        before = cached()
+        before = cached() | cached("lanes")
         fn(spark, store, CONFIG)
         live = check(step)
         assert before - live, f"{step} should replace cached postings files"
+    assert store.gc()["removed"] > 0
+    check("gc")
 
 
 def _rehydrate_oracle(store: IndexStore, ords) -> dict[int, dict]:
@@ -274,15 +424,17 @@ def _mixed_batches(store: IndexStore, n: int):
         out.append((
             (files, cols, terms, _plain(files, cols, terms)),
             (chunk_ords, _rehydrate_oracle(store, chunk_ords)),
+            {t: _lanes_oracle(store, t) for t in terms},
         ))
     return out
 
 
 def _mixed_ok(store: IndexStore, batch) -> bool:
-    (files, cols, terms, want_p), (ords, want_c) = batch
+    (files, cols, terms, want_p), (ords, want_c), want_l = batch
     got_p = local_exec._read_filtered(files, cols, terms)
+    lanes_ok = _lanes_ok(store, terms, want_l)
     got_c = local_exec.rehydrate_local(store, ords)
-    return _same(got_p, want_p) and list(got_c.items()) == list(want_c.items())
+    return _same(got_p, want_p) and lanes_ok and list(got_c.items()) == list(want_c.items())
 
 
 def _budget(store: IndexStore) -> int:
@@ -323,16 +475,20 @@ def _tables_ok(store: IndexStore, want) -> bool:
 
 def test_shared_budget_holds_over_chunk_and_posting_entries(gen_store, fresh_cache, monkeypatch) -> None:
     """One budget over every kind of entry: row groups of chunks and
-    postings, footers, the vocabulary, dead-ord sets, the embedding
-    matrix, the chunks row-group index and the tables' file lists."""
+    postings, decoded posting lanes, footers, the vocabulary, dead-ord
+    sets, the embedding matrix, the chunks row-group index and the
+    tables' file lists."""
     store = gen_store
     batches = _mixed_batches(store, 16)
     tables_want = _plain_tables(store)
     assert tables_want[1], "expected tombstones"
-    # plus room for the table-level entries
+    # plus room for the table-level entries and one batch's lanes
     assert _tables_ok(store, tables_want)
     tables = sum(e[2] for k, e in local_exec._CACHE.items() if k[0] in ("vocab", "ords", "matrix"))
-    bound = _budget(store) + tables
+    lanes = max(
+        sum(sum(a.nbytes for a in p[4]) for p in local_exec.term_lanes(store, b[0][2])) for b in batches
+    )
+    bound = _budget(store) + tables + lanes + (1 << 10)
     monkeypatch.setattr(local_exec, "CACHE_MAX_BYTES", bound)
     monkeypatch.setattr(local_exec, "_CACHE", OrderedDict())
     monkeypatch.setattr(local_exec, "_BYTES", 0)
@@ -350,7 +506,7 @@ def test_shared_budget_holds_over_chunk_and_posting_entries(gen_store, fresh_cac
         mixed |= kinds == {True, False}
         seen |= {k[0] for k in cache}
     assert mixed, "chunk and posting entries should share the cache"
-    assert seen == {"footer", "group", "vocab", "ords", "matrix", "chunk_index", "files"}
+    assert seen == {"footer", "group", "lanes", "vocab", "ords", "matrix", "chunk_index", "files"}
     # every cold read inserts an entry: more reads than entries means
     # the bound evicted
     n_groups = sum(k[0] == "group" for k in local_exec._CACHE)
